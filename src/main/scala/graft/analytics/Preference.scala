@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Num, Tables}
+import graft.scale.Bounded
 
 /** Pairwise-preference aggregation — the RLHF-data tier: given a stream
   * of head-to-head outcomes ("A was preferred over B"), estimate a
@@ -64,8 +65,7 @@ object Preference {
     * ([[btRatingSeOf]]) evaluates its Fisher information at the SAME
     * fixed point the published ratings come from.
     */
-  /** Collected-MM budget in rows of the (i < j) game relation; override
-    * with spark conf `spark.graft.bt.collectPairs` (0 disables). The
+  /** Collected-MM budget in rows of the (i < j) game relation. The
     * graph is pair-bounded by construction (co-occurring player pairs,
     * ≤ C(players, 2)): at sf0.1 it is ~3×10⁵ rows — driver-trivial —
     * while each MM round of the DataFrame loop costs a fixed ~3 jobs
@@ -75,7 +75,7 @@ object Preference {
     * (a genuinely large player universe) the broadcast-join loop below
     * is unchanged — the 100 TB path never collects.
     */
-  val BtCollectPairsDefault = 1000000L
+  val BtCollectPairs = 1000000L
 
   /** Scalar twin of Num.r: floor(x·10^s + 0.5)/10^s over doubles — the
     * identical IEEE expression (Spark's floor-to-LONG and math.floor
@@ -159,42 +159,42 @@ object Preference {
   }
 
   private def btFit(gd: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // Symmetrize so "opponents of i" is one equi-join: each unordered
-    // pair contributes a row in both directions. Edge-sized (bounded by
-    // co-occurring pairs, not players²) — persisted once for the loop,
-    // like pagerankOn's edge relation. The incoming game relation is
-    // checkpointed first: the union references it twice, so the composed
-    // callers' offers self-join + pair aggregate would otherwise run
-    // twice inside the persist-populating job (branch-reuse rule).
+    // The incoming game relation is checkpointed first: the loop's union
+    // references it twice, so the composed callers' offers self-join +
+    // pair aggregate would otherwise run twice inside the
+    // persist-populating job (branch-reuse rule).
     val g = gd.localCheckpoint()
     // CERTIFIED-BOUNDED fast path: one count on the checkpointed graph
     // is the certificate (VERDICT r12 #3 — the MM loop's cost at gate
     // scales is per-round job floor, not compute).
-    val btBudget = g.sparkSession.conf
-      .get("spark.graft.bt.collectPairs", BtCollectPairsDefault.toString).toLong
-    val allLong = Seq("i", "j", "n", "w").forall(c =>
-      g.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (allLong && g.count() <= btBudget) return btFitLocal(g)
-    val sym = g.select(col("i"), col("j"), col("n"), col("w"))
-      .unionByName(g.select(col("j").as("i"), col("i").as("j"), col("n"),
-        (col("n") - col("w")).as("w")))
-      .persist()
-    sym.count()
-    val pl = sym.groupBy(col("i"))
-      .agg(sum(col("w")).as("wins"), sum(col("n")).as("games"))
-      .localCheckpoint()
-    var r = pl.select(col("i"), lit(1.0).as("p"))
-    for (_ <- 1 to BtIters) {
-      val den = sym
-        .join(broadcast(r.select(col("i"), col("p").as("pi"))), "i")
-        .join(broadcast(r.select(col("i").as("j"), col("p").as("pj"))), "j")
-        .groupBy(col("i"))
-        .agg(Num.r(sum(col("n") / (col("pi") + col("pj"))), 9).as("den"))
-      r = pl.join(den, "i")
-        .select(col("i"), Num.r((col("wins") + lit(0.5)) / col("den"), 9).as("p"))
+    Bounded(g.sparkSession, BtCollectPairs)(
+      Bounded.longRows(g.select(col("i"), col("j"), col("n"), col("w"))))(
+      btFitLocal(g)) {
+      // Symmetrize so "opponents of i" is one equi-join: each unordered
+      // pair contributes a row in both directions. Edge-sized (bounded by
+      // co-occurring pairs, not players²) — persisted once for the loop,
+      // like pagerankOn's edge relation.
+      val sym = g.select(col("i"), col("j"), col("n"), col("w"))
+        .unionByName(g.select(col("j").as("i"), col("i").as("j"), col("n"),
+          (col("n") - col("w")).as("w")))
+        .persist()
+      sym.count()
+      val pl = sym.groupBy(col("i"))
+        .agg(sum(col("w")).as("wins"), sum(col("n")).as("games"))
         .localCheckpoint()
+      var r = pl.select(col("i"), lit(1.0).as("p"))
+      for (_ <- 1 to BtIters) {
+        val den = sym
+          .join(broadcast(r.select(col("i"), col("p").as("pi"))), "i")
+          .join(broadcast(r.select(col("i").as("j"), col("p").as("pj"))), "j")
+          .groupBy(col("i"))
+          .agg(Num.r(sum(col("n") / (col("pi") + col("pj"))), 9).as("den"))
+        r = pl.join(den, "i")
+          .select(col("i"), Num.r((col("wins") + lit(0.5)) / col("den"), 9).as("p"))
+          .localCheckpoint()
+      }
+      (sym, pl, r)
     }
-    (sym, pl, r)
   }
 
   def btRatingOf(gd: DataFrame): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.scale
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftColumnBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -243,20 +243,22 @@ object CellTopK {
   /** Broadcast cell-table budget in VECTORS shared by every cell-table
     * kernel consumer (kNN graph/delta top-k, within-cell pair emit):
     * 1M 64-dim float vectors ≈ 256 MB flat — the same memory class as
-    * the broadcast hash relation the join formulations ship. Conf
-    * `spark.graft.knn.cellTableRows`; 0 disables (tests force the
-    * distributed fallback with it).
+    * the broadcast hash relation the join formulations ship.
     */
-  val DefaultTableRows = 1000000L
+  val TableRows = 1000000L
 
-  def budget(spark: org.apache.spark.sql.SparkSession): Long = spark.conf
-    .get("spark.graft.knn.cellTableRows", DefaultTableRows.toString).toLong
+  /** Collect `df`'s (cell int, vec_id long, embedding array<float>) rows
+    * and broadcast them as one [[CellTable]].
+    */
+  def broadcastTable(df: DataFrame, cell: String): Broadcast[CellTable] =
+    df.sparkSession.sparkContext.broadcast(buildTable(
+      df.select(cell, "vec_id", "embedding").collect()))
 
   /** Build the per-cell flat-float table from collected
     * (cluster int, vec_id long, embedding array<float>) rows. Candidate
     * norms use the identical accumulation as DotProduct(e, e).
     */
-  def buildTable(rows: Array[Row]): CellTable = {
+  private def buildTable(rows: Array[Row]): CellTable = {
     if (rows.isEmpty) return new CellTable(Array.empty, Array.empty, Array.empty, 0)
     val dim = rows.head.getSeq[Float](2).length
     val byCell = rows.groupBy(_.getInt(0))

@@ -280,9 +280,7 @@ object Dedup {
     */
   /** Driver union-find budget, in DIRECTED (symmetrized) edges — the
     * number `edges.count()` measures; the collected half (a ≤ b) is
-    * budget/2 tuples, ~40 B each (≤ ~80 MB transient at the default).
-    * Override with spark conf `spark.graft.cc.collectEdges`; 0 disables
-    * the collected path entirely (the loud-cap test uses this).
+    * budget/2 tuples, ~40 B each (≤ ~80 MB transient).
     *
     * Why 4M: at sf0.1 the LSH dup graphs are ~10⁴–10⁵ directed edges and
     * the DBSCAN quotient graph ~10⁴ — far under budget — while the sf10
@@ -291,7 +289,7 @@ object Dedup {
     * the graph is NOT certifiably driver-sized. The budget bounds driver
     * memory by construction, not by testdata accident.
     */
-  val CcCollectEdgesDefault = 4000000L
+  val CcCollectEdges = 4000000L
 
   /** Exact min-label connected components on the driver for a
     * certified-bounded edge set (VERDICT r12 #1): one collect job over
@@ -358,76 +356,65 @@ object Dedup {
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .repartition(col("b"))
       .persist()
-    // materialize once — an unpopulated lazy cache could recompute the
-    // pair plan per propagation step
-    val nEdges = edges.count()
     // CERTIFIED-BOUNDED fast path: when the (symmetrized) edge relation
-    // is driver-sized — the count above is the certificate, and it was
-    // already paid to populate the cache — run CC as ONE collected
-    // union-find instead of O(component hop diameter) Spark jobs. The
-    // loud-cap delta-frontier loop below stays the uncertified-premise
-    // path: past the budget (54.6 M directed edges at the sf10 LSH
-    // corpus) nothing is collected and the 100 TB shape is unchanged.
-    val ccBudget = edges.sparkSession.conf
-      .get("spark.graft.cc.collectEdges", CcCollectEdgesDefault.toString).toLong
-    val allLong = edges.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    if (allLong && nEdges <= ccBudget) {
-      val out = unionFindLabels(edges)
-      edges.unpersist()
-      println(s"[cc] dupClusters union-find edges=$nEdges budget=$ccBudget")
-      return out
-    }
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var frontier = labels
-    var iter = 0
-    while (frontier != null && iter < maxIters) {
-      val msgs = edges
-        .join(frontier.select(col("node").as("b"), col("label")), Seq("b"))
-        .groupBy(col("a")).agg(min(col("label")).as("nl"))
-        .select(col("a").as("node"), col("nl"))
-      val updated = labels.join(msgs, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
-          // ANSI-safe: null nl compares to null, filter() drops it
-          (col("nl") < col("label")).as("chg"))
-        // LAZY checkpoint (r12): the eager form spent TWO jobs per round
-        // (materialize + isEmpty) and the round count is the whole cost
-        // of the geometry-bounded DBSCAN loop (~24 rounds × fixed job
-        // overhead). The count below computes EVERY partition of
-        // `updated` (filter is narrow, count is total), so the one
-        // action both materializes the checkpoint — truncating lineage
-        // exactly like the eager form — and decides convergence.
-        .localCheckpoint(eager = false)
-      val nChanged = updated.filter(col("chg")).count()
-      labels = updated.select(col("node"), col("label"))
-      frontier =
-        if (nChanged == 0L) null
-        else updated.filter(col("chg")).select(col("node"), col("label"))
-      iter += 1
-    }
-    edges.unpersist()
-    // FAIL LOUDLY at the iteration cap: a non-empty frontier here means
-    // some component's diameter exceeds maxIters and the labels are NOT
-    // converged — returning them would be silently wrong clusters. The
-    // gate oracles catch that at test scales; at production scale nothing
-    // would (the q_heavy_hitters premise class: near-dup graphs are
-    // shallow on THIS corpus, by data, not by construction). A diameter
-    // past the cap is an anomaly worth stopping the pipeline for — raise
-    // maxIters deliberately rather than trusting partial propagation.
-    require(frontier == null,
-      s"dupClusters did not converge within $maxIters iterations — a " +
-        "component's diameter exceeds the cap; labels would be silently " +
-        "unconverged. Raise maxIters for this corpus.")
-    // One greppable line per convergence: the round count IS the measured
-    // hop diameter (+1 detection round), and geometry-bounded claims
-    // (DBSCAN: rounds independent of corpus size) are audited by reading
-    // this line off the sf10 sweep logs rather than argued (VERDICT r10
-    // #1). Negligible noise: one line per CC invocation.
-    println(s"[cc] dupClusters converged rounds=$iter cap=$maxIters")
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    // is driver-sized — the count certificate, which also populates the
+    // cache — run CC as ONE collected union-find instead of O(component
+    // hop diameter) Spark jobs. The loud-cap delta-frontier loop stays
+    // the uncertified-premise path: past the budget (54.6 M directed
+    // edges at the sf10 LSH corpus) nothing is collected and the 100 TB
+    // shape is unchanged.
+    try Bounded(edges.sparkSession, CcCollectEdges)(Bounded.longRows(edges))(
+      unionFindLabels(edges)) {
+      var labels = edges.select(col("a").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .localCheckpoint()
+      var frontier = labels
+      var iter = 0
+      while (frontier != null && iter < maxIters) {
+        val msgs = edges
+          .join(frontier.select(col("node").as("b"), col("label")), Seq("b"))
+          .groupBy(col("a")).agg(min(col("label")).as("nl"))
+          .select(col("a").as("node"), col("nl"))
+        val updated = labels.join(msgs, Seq("node"), "left")
+          .select(col("node"),
+            least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
+            // ANSI-safe: null nl compares to null, filter() drops it
+            (col("nl") < col("label")).as("chg"))
+          // LAZY checkpoint (r12): the eager form spent TWO jobs per round
+          // (materialize + isEmpty) and the round count is the whole cost
+          // of the geometry-bounded DBSCAN loop (~24 rounds × fixed job
+          // overhead). The count below computes EVERY partition of
+          // `updated` (filter is narrow, count is total), so the one
+          // action both materializes the checkpoint — truncating lineage
+          // exactly like the eager form — and decides convergence.
+          .localCheckpoint(eager = false)
+        val nChanged = updated.filter(col("chg")).count()
+        labels = updated.select(col("node"), col("label"))
+        frontier =
+          if (nChanged == 0L) null
+          else updated.filter(col("chg")).select(col("node"), col("label"))
+        iter += 1
+      }
+      // FAIL LOUDLY at the iteration cap: a non-empty frontier here means
+      // some component's diameter exceeds maxIters and the labels are NOT
+      // converged — returning them would be silently wrong clusters. The
+      // gate oracles catch that at test scales; at production scale nothing
+      // would (the q_heavy_hitters premise class: near-dup graphs are
+      // shallow on THIS corpus, by data, not by construction). A diameter
+      // past the cap is an anomaly worth stopping the pipeline for — raise
+      // maxIters deliberately rather than trusting partial propagation.
+      require(frontier == null,
+        s"dupClusters did not converge within $maxIters iterations — a " +
+          "component's diameter exceeds the cap; labels would be silently " +
+          "unconverged. Raise maxIters for this corpus.")
+      // One greppable line per convergence: the round count IS the measured
+      // hop diameter (+1 detection round), and geometry-bounded claims
+      // (DBSCAN: rounds independent of corpus size) are audited by reading
+      // this line off the sf10 sweep logs rather than argued (VERDICT r10
+      // #1). Negligible noise: one line per CC invocation.
+      println(s"[cc] dupClusters converged rounds=$iter cap=$maxIters")
+      labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    } finally edges.unpersist()
   }
 
   /** Canonical-document selection — the step after clustering that a

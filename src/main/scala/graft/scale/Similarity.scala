@@ -97,19 +97,21 @@ object Similarity {
     * crossJoin, no groupBy): zero shuffles before the bucket join itself.
     */
   def lshSignature(embeddings: DataFrame, planeIds: Seq[Long]): DataFrame = {
-    val planes: Seq[(Long, Seq[Double])] = embeddings
-      .filter(col("vec_id").isInCollection(planeIds))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).map(_.toDouble).toSeq)
-      .sortBy(_._1).toSeq
-    val bits = planes.map { case (_, pe) =>
+    val bits = planes(embeddings, planeIds).map { pe =>
       when(dot(col("embedding"), typedLit(pe)) >= 0, "1").otherwise("0")
     }
     embeddings.select(col("vec_id"),
       concat(bits: _*).as("bucket"))
   }
+
+  /** The plane vectors of [[lshSignature]], in plane-id order. */
+  private def planes(embeddings: DataFrame, planeIds: Seq[Long]): Seq[Seq[Double]] =
+    embeddings
+      .filter(col("vec_id").isInCollection(planeIds))
+      .select(col("vec_id"), col("embedding"))
+      .collect()
+      .sortBy(_.getLong(0))
+      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
 
   /** Approximate top-k: candidates share the query's LSH bucket. */
   def lshTopK(embeddings: DataFrame, queryId: Long, planeIds: Seq[Long], k: Int): DataFrame = {
@@ -140,43 +142,36 @@ object Similarity {
     // are the exact lshSignature expressions (dot(embedding, plane) >= 0
     // per plane in sorted-pid order); the int encoding Σ bitᵢ·2ⁱ is a
     // bijection of the concat-string bucket, so the pair partition is
-    // identical by construction.
-    val sparkSess = embeddings.sparkSession
-    if (embeddings.count() <= CellTopK.budget(sparkSess)) {
-      val planes: Seq[(Long, Seq[Double])] = embeddings
-        .filter(col("vec_id").isInCollection(planeIds))
-        .select(col("vec_id"), col("embedding"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq)
-        .sortBy(_._1).toSeq
-      val bucketInt = planes.zipWithIndex.map { case ((_, pe), i) =>
+    // identical by construction (no plane: every row in bucket 0, as
+    // the empty concat puts every row in bucket "").
+    Bounded(embeddings.sparkSession, CellTopK.TableRows)(embeddings.count()) {
+      val bucketInt = planes(embeddings, planeIds).zipWithIndex.map { case (pe, i) =>
         when(dot(col("embedding"), typedLit(pe)) >= 0, lit(1 << i)).otherwise(lit(0))
-      }.reduce(_ + _).cast("int")
+      }.foldLeft(lit(0))(_ + _).cast("int")
       val withB = embeddings.select(col("vec_id"), col("embedding"),
         bucketInt.as("bucket"))
-      val collected = withB
-        .select(col("bucket"), col("vec_id"), col("embedding")).collect()
-      val bc = sparkSess.sparkContext.broadcast(CellTopK.buildTable(collected))
-      return withB.select(col("vec_id").as("v1"),
+      val bc = CellTopK.broadcastTable(withB, "bucket")
+      withB.select(col("vec_id").as("v1"),
           CellTopK.pairsColumn(bc, threshold,
             col("bucket"), col("vec_id"), col("embedding")).as("ps"))
         .select(col("v1"), explode(col("ps")).as("p"))
         .select(col("v1"), col("p.id").as("v2"), col("p.score").as("cos_sim"))
+    } {
+      val sigs = lshSignature(embeddings, planeIds)
+      // precompute the norm once per vector — per-pair work is then a
+      // single dot product (the norm value is bit-identical to
+      // recomputing it per pair, so the oracle SQL may still recompute)
+      val withSig = embeddings.join(sigs, Seq("vec_id"))
+        .select(col("vec_id"), col("embedding"), col("bucket"),
+          norm(col("embedding")).as("nrm"))
+      val den = col("a.nrm") * col("b.nrm")
+      withSig.as("a").join(withSig.as("b"),
+          col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
+          graft.Num.r(when(den > 0, dot(col("a.embedding"), col("b.embedding")) / den)
+            .otherwise(0.0), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= threshold)
     }
-    val sigs = lshSignature(embeddings, planeIds)
-    // precompute the norm once per vector — per-pair work is then a single
-    // dot product (the norm value is bit-identical to recomputing it per
-    // pair, so the oracle SQL may still recompute)
-    val withSig = embeddings.join(sigs, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("bucket"),
-        norm(col("embedding")).as("nrm"))
-    val den = col("a.nrm") * col("b.nrm")
-    withSig.as("a").join(withSig.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        graft.Num.r(when(den > 0, dot(col("a.embedding"), col("b.embedding")) / den)
-          .otherwise(0.0), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
   }
 
   /** IVF top-k: coarse quantization by label centroid — probe the single

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
@@ -52,13 +53,19 @@ object Streams {
     }
   }
 
+  /** `events` watermarked on `ts`, keeping an upstream operator's
+    * watermark (Spark refuses to redefine one inside a chain).
+    */
+  private def watermarked(events: DataFrame, delay: String): DataFrame =
+    if (events.schema("ts").metadata.contains(EventTimeWatermark.delayKey)) events
+    else events.withWatermark("ts", delay)
+
   /** ST2/ST4: watermarked tumbling 1-minute billing aggregation (A8
     * streaming form). Late events beyond 10 minutes are dropped exactly
     * like the reference's monotonic checkpoint skip-late rule.
     */
   def billingStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
+    watermarked(events, "10 minutes")
       .groupBy(col("user_id") % 10 as "account_id", window(col("ts"), "1 minute"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
 
@@ -73,8 +80,7 @@ object Streams {
     * counts.
     */
   def dauStream(events: DataFrame, rsd: Double = 0.02): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
+    watermarked(events, "10 minutes")
       .groupBy(window(col("ts"), "1 day"))
       .agg(approx_count_distinct(col("user_id"), rsd).as("dau_approx"))
       .select(col("window.start").cast("date").as("day"), col("dau_approx"))
@@ -257,8 +263,7 @@ object Streams {
     * with state eviction — no unbounded window sort.
     */
   def sessionizeStream(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
+    watermarked(events, "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
 
@@ -272,8 +277,7 @@ object Streams {
     * exactly the reference's two-layer contract.
     */
   def dedupStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
+    watermarked(events, watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Documents file-stream (same parquet schema as Tables.documents) —
@@ -378,9 +382,8 @@ object Streams {
     */
   def urlDedupStream(events: DataFrame, url: Column,
       watermark: String = "10 minutes"): DataFrame =
-    events
+    watermarked(events, watermark)
       .withColumn("canonical_url", graft.functions.UrlInfo.canonicalizeUrl(url))
-      .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("canonical_url")
 
   /** q_quality_classifier streaming form: the classifier is pure
@@ -396,8 +399,7 @@ object Streams {
     * maintained streaming aggregate.
     */
   def sessionKpiStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
+    watermarked(events, "10 minutes")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"),
         max(col("ts")).as("last_activity"))

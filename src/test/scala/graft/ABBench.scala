@@ -516,30 +516,24 @@ object ABBench {
       time(s"bigramlp_$i") { analytics.ScaleQueries.bigramLogprob(spark, sfDir).count() }
       time(s"unigramlp_$i") { analytics.ScaleQueries.unigramLogprob(spark, sfDir).count() }
       time(s"knndelta_$i") { analytics.ScaleQueries.knnDelta(spark, sfDir).count() }
-      // r13 control arms: the join fallbacks, forced via the cell-table
-      // budget conf (byte-identical to the r12 paths)
+      // r13 control arms: the join fallbacks, forced via the gate
+      // fallback switch (byte-identical to the r12 paths)
       time(s"knndelta_join_$i") {
-        spark.conf.set("spark.graft.knn.cellTableRows", "0")
-        try analytics.ScaleQueries.knnDelta(spark, sfDir).count()
-        finally spark.conf.unset("spark.graft.knn.cellTableRows")
+        Gates.withFallback(spark)(analytics.ScaleQueries.knnDelta(spark, sfDir).count())
       }
       time(s"semneardup_kernel_$i") {
         analytics.ScaleQueries.semanticNearDup(spark, sfDir,
           salt = analytics.ScaleQueries.parallelismSalt(spark)).count()
       }
       time(s"semneardup_join_$i") {
-        spark.conf.set("spark.graft.knn.cellTableRows", "0")
-        try analytics.ScaleQueries.semanticNearDup(spark, sfDir,
-          salt = analytics.ScaleQueries.parallelismSalt(spark)).count()
-        finally spark.conf.unset("spark.graft.knn.cellTableRows")
+        Gates.withFallback(spark)(analytics.ScaleQueries.semanticNearDup(spark, sfDir,
+          salt = analytics.ScaleQueries.parallelismSalt(spark)).count())
       }
       time(s"embedneardup_kernel_$i") {
         analytics.ScaleQueries.embedNearDup(spark, sfDir).count()
       }
       time(s"embedneardup_join_$i") {
-        spark.conf.set("spark.graft.knn.cellTableRows", "0")
-        try analytics.ScaleQueries.embedNearDup(spark, sfDir).count()
-        finally spark.conf.unset("spark.graft.knn.cellTableRows")
+        Gates.withFallback(spark)(analytics.ScaleQueries.embedNearDup(spark, sfDir).count())
       }
       time(s"hybrid_$i") { analytics.ScaleQueries.hybridSearch(spark, sfDir).count() }
       time(s"shards_$i") { analytics.ScaleQueries.trainingShards(spark, sfDir).count() }

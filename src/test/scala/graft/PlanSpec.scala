@@ -259,10 +259,7 @@ class PlanSpec extends AnyFunSuite {
     // fallback path (past the cell-table budget): the per-cell compare
     // must stay a streaming equi-join on cluster ranked by the bounded
     // TopKAgg, not an all-pairs product or a per-vector window sort
-    spark.conf.set("spark.graft.knn.cellTableRows", "0")
-    val pj =
-      try plan(analytics.ScaleQueries.knnGraph(spark, sf))
-      finally spark.conf.unset("spark.graft.knn.cellTableRows")
+    val pj = Gates.withFallback(spark)(plan(analytics.ScaleQueries.knnGraph(spark, sf)))
     assert(!pj.contains("CartesianProduct"), pj)
     assert(!pj.contains("Window"), s"knn fallback regressed to a window rank:\n$pj")
     assert(pj.contains("topk"), s"expected the bounded TopKAgg:\n$pj")
@@ -313,10 +310,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("ExistingRDD"), s"expected the checkpointed kernel:\n$p")
     // fallback path (past the cell-table budget): the delta must ride as
     // a broadcast against one streaming history scan, ranked by TopKAgg
-    spark.conf.set("spark.graft.knn.cellTableRows", "0")
-    val pj =
-      try plan(analytics.ScaleQueries.knnDelta(spark, sf))
-      finally spark.conf.unset("spark.graft.knn.cellTableRows")
+    val pj = Gates.withFallback(spark)(plan(analytics.ScaleQueries.knnDelta(spark, sf)))
     assert(pj.contains("BroadcastHashJoin"), s"delta side should broadcast:\n$pj")
     assert(!pj.contains("CartesianProduct"), pj)
     assert(!pj.contains("Window"), s"ranking must be the bounded TopKAgg:\n$pj")

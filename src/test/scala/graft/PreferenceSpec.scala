@@ -155,25 +155,6 @@ class PreferenceSpec extends AnyFunSuite {
       set(Preference.pairWinrateCi(spark, sf)))
   }
 
-  test("collected MM path equals the broadcast-loop path bit-identically") {
-    // the certified-bounded driver MM (btFitLocal) must be a pure plan
-    // change: same snapped ratings AND SEs as the DataFrame loop on the
-    // real testdata game graph (per-round 1e-9 snaps make both paths
-    // re-enter each round from the same grid point — the same argument
-    // that holds each engine loop equal to the DuckDB unrolled oracle)
-    val path = java.nio.file.Files.createTempDirectory("pref_ab").toString
-    val games = Preference.gamesBuild(spark, sf, s"$path/games")
-    def set(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    val localR = set(Preference.btRatingOf(games))
-    val localSe = set(Preference.btRatingSeOf(games))
-    spark.conf.set("spark.graft.bt.collectPairs", "0")
-    try {
-      assert(localR == set(Preference.btRatingOf(games)))
-      assert(localSe == set(Preference.btRatingSeOf(games)))
-    } finally spark.conf.unset("spark.graft.bt.collectPairs")
-  }
-
   test("rating SEs: symmetry, games-monotonicity, and the winless NULL") {
     // symmetric 2-player tournament: at the fixed point both strengths
     // are equal, so info = W/p² − n/(2p)² = (5 − 2.5)/p² and the

@@ -98,58 +98,6 @@ class ScaleSpec extends AnyFunSuite {
     // K4 minus edge (3,4): 2 triangles; wedges2 = sum deg(deg-1) = 6+6+2+2 = 16
     val k4m = stats(1L -> 2L, 1L -> 3L, 1L -> 4L, 2L -> 3L, 2L -> 4L)
     assert(k4m._3 == 2L && k4m._4 == Some(0.75))
-    // the cell-table expression kernel must equal the join+TopKAgg
-    // pipeline row-for-row (snapped cosines, ranks, ties) on the real
-    // corpus — force the join path via its budget conf
-    val kernel = ScaleQueries.knnGraph(spark, sf).collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.knn.cellTableRows", "0")
-    val joined =
-      try ScaleQueries.knnGraph(spark, sf).collect().map(_.toSeq).toSet
-      finally spark.conf.unset("spark.graft.knn.cellTableRows")
-    assert(kernel == joined,
-      s"cell-table kNN diverges: missing ${(joined -- kernel).take(3)}, " +
-        s"extra ${(kernel -- joined).take(3)}")
-    // same pin for the delta probe (r13): the kernel path must equal the
-    // broadcast-join pipeline row-for-row — including the origin vector
-    // at cos 1.0 (the kernel's self-exclusion must never fire; id
-    // disjointness is certified on the collected history ids)
-    val dKernel = ScaleQueries.knnDelta(spark, sf).collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.knn.cellTableRows", "0")
-    val dJoined =
-      try ScaleQueries.knnDelta(spark, sf).collect().map(_.toSeq).toSet
-      finally spark.conf.unset("spark.graft.knn.cellTableRows")
-    assert(dKernel == dJoined,
-      s"cell-table knnDelta diverges: missing ${(dJoined -- dKernel).take(3)}, " +
-        s"extra ${(dKernel -- dJoined).take(3)}")
-    // and for the two within-cell PAIR queries (r13): the CellPairsExpr
-    // kernel must equal the bucket/cluster self-join row-for-row —
-    // snapped cosines, the v1 < v2 pair-once rule, the tau cut
-    val sKernel = ScaleQueries.semanticNearDup(spark, sf, salt = 4)
-      .collect().map(_.toSeq).toSet
-    val eKernel = ScaleQueries.embedNearDup(spark, sf).collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.knn.cellTableRows", "0")
-    val (sJoined, eJoined) =
-      try (ScaleQueries.semanticNearDup(spark, sf, salt = 4)
-             .collect().map(_.toSeq).toSet,
-           ScaleQueries.embedNearDup(spark, sf).collect().map(_.toSeq).toSet)
-      finally spark.conf.unset("spark.graft.knn.cellTableRows")
-    assert(sKernel == sJoined,
-      s"cell-pairs semanticNearDup diverges: missing ${(sJoined -- sKernel).take(3)}, " +
-        s"extra ${(sKernel -- sJoined).take(3)}")
-    assert(eKernel == eJoined,
-      s"cell-pairs embedNearDup diverges: missing ${(eJoined -- eKernel).take(3)}, " +
-        s"extra ${(eKernel -- eJoined).take(3)}")
-    // the collected driver census (the path the fixtures above took)
-    // must equal the distributed triad join row-for-row on the real kNN
-    // graph — force the distributed path via the budget conf
-    val knn = ScaleQueries.knnGraph(spark, sf)
-      .select(col("vec_id").as("a"), col("nbr_id").as("b")).localCheckpoint()
-    val local = ScaleQueries.triangleStatsOf(knn).collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.triangles.collectEdges", "0")
-    val dist =
-      try ScaleQueries.triangleStatsOf(knn).collect().map(_.toSeq).toSet
-      finally spark.conf.unset("spark.graft.triangles.collectEdges")
-    assert(local == dist, s"driver census $local != distributed $dist")
     // duplicate / reversed / self edges canonicalize away
     val dup = stats(1L -> 2L, 2L -> 1L, 1L -> 1L, 2L -> 3L, 3L -> 1L)
     assert(dup == ((3L, 3L, 1L, Some(1.0))))
@@ -380,11 +328,10 @@ class ScaleSpec extends AnyFunSuite {
     // is still non-empty and the guard must REFUSE to return the
     // unconverged labels (silent wrong clusters are the failure mode the
     // cap used to allow). The collected union-find path is exact and
-    // capless, so force the iterative path via its budget conf.
+    // capless, so force the iterative path.
     import spark.implicits._
     val chain = (0L until 7L).map(i => (i, i + 1)).toDF("d1", "d2")
-    spark.conf.set("spark.graft.cc.collectEdges", "0")
-    try {
+    Gates.withFallback(spark) {
       val e = intercept[IllegalArgumentException] {
         graft.scale.Dedup.dupClusters(chain, maxIters = 3)
       }
@@ -394,7 +341,7 @@ class ScaleSpec extends AnyFunSuite {
       val ok = graft.scale.Dedup.dupClusters(chain, maxIters = 10)
       assert(ok.count() == 8)
       assert(ok.select("cluster_id").distinct().count() == 1)
-    } finally spark.conf.unset("spark.graft.cc.collectEdges")
+    }
   }
 
   test("dupClusters collected union-find labels equal the iterative loop's") {
@@ -411,11 +358,8 @@ class ScaleSpec extends AnyFunSuite {
       ).toDF("d1", "d2")
     val uf = graft.scale.Dedup.dupClusters(pairs, maxIters = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.cc.collectEdges", "0")
-    val loop =
-      try graft.scale.Dedup.dupClusters(pairs, maxIters = 50)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally spark.conf.unset("spark.graft.cc.collectEdges")
+    val loop = Gates.withFallback(spark)(graft.scale.Dedup.dupClusters(pairs, maxIters = 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(uf == loop)
     assert(uf.exists(_ == (6L, 0L)) && uf.exists(_ == (13L, 10L)) &&
       uf.exists(_ == (22L, 20L)) && uf.exists(_ == (31L, 30L)))

@@ -85,6 +85,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.select("event_id").distinct().count() == expected)
   }
 
+  test("session KPIs over the deduplicated stream run under one watermark") {
+    // replay the events as four time-ordered files, each staged twice in
+    // its own micro-batch: the dedup stage drops every second copy, no
+    // event is late, and the KPI stage must keep the dedup watermark
+    val events = Tables.events(spark, sf)
+    val src = java.nio.file.Files.createTempDirectory("graft_stream_chain")
+    val days = Seq(1, 8, 15, 22, 32)
+    def stage(i: Int): Unit = {
+      val out = s"$src.parts/$i"
+      events.filter(dayofmonth(col("ts")) >= days(i) && dayofmonth(col("ts")) < days(i + 1))
+        .coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+      Seq("a", "b").foreach(c => java.nio.file.Files.copy(part.toPath,
+        src.resolve(s"part$i$c.parquet")))
+    }
+    stage(0)
+    val q = Streams.sessionKpiStream(Streams.dedupStream(Streams.eventStream(spark, src.toString)))
+      .writeStream.outputMode(OutputMode.Complete()).format("memory")
+      .queryName("kpi_chain_stream").start()
+    try {
+      q.processAllAvailable()
+      (1 until days.length - 1).foreach { i => stage(i); q.processAllAvailable() }
+    } finally q.stop()
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.select("user_id", "n_events", "last_activity").collect().map(_.toSeq).toSet
+    val batch = events.groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_activity"))
+    assert(keyed(spark.table("kpi_chain_stream")) == keyed(batch))
+  }
+
   test("session_window streaming sessionization matches the batch lag() form") {
     val events = Streams.eventStream(spark, eventsDir)
     // session windows support append/complete only; append withholds
