@@ -26,6 +26,9 @@ cd "$(dirname "$0")/.."
 
 SF1="${1:-/tmp/sf1}"
 OUT="${2:-/tmp/verify_sf1}"
+# one core count for every step (ScaleUp, PremiseCheck, Verify):
+# each main reads it through graft.Sessions.cpus, whose default is 4
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 # DuckDB-heavy oracles: the exact-dup closure chains and the graph/
 # markov CTE stacks (AS MATERIALIZED since r9, but their evaluate-once

@@ -18,6 +18,9 @@ cd "$(dirname "$0")/.."
 
 SF10="${1:-/tmp/sf10}"
 OUT="${2:-dev/bench_sf10_full.json}"
+# one core count for every step (ScaleUp, PremiseCheck, Bench):
+# each main reads it through graft.Sessions.cpus, whose default is 4
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 SKIP="q_jaccard_pairs,q_canonical_docs,q_dup_clusters,q_dup_stats,q_source_overlap,q_containment_pairs"
 
@@ -35,7 +38,7 @@ echo "== sweep_sf10: full-registry bench (skips: $SKIP) -> $OUT =="
 # boxed shingle buffers across 32 executor threads; prior rounds'
 # sf10 sweeps also ran at 48 g, BASELINE.md)
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
-  SPARK_GRAFT_SF_DIR="$SF10" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$SF10" \
   SPARK_GRAFT_BENCH_SEED=42 SPARK_GRAFT_BENCH_REPS=2 \
   SPARK_GRAFT_BENCH_SKIP="$SKIP" SPARK_GRAFT_BENCH_OUT="$OUT" \
   SPARK_GRAFT_ART_DIR="$SF10/_bench_artifacts" \

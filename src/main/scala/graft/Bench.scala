@@ -3,33 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the default) — at volume that turns
-      // every bounded-buffer typed aggregate (TopK, VecSum, sketches,
-      // capped collect_list) into a full sort of its input stream
-      // (measured at the sf10 stress: knn-graph pair agg 345 s -> 114 s,
-      // knn-delta 34 s -> 11 s just from this). Graft's typed buffers
-      // are all size-capped (TopK k<=50, VecSum dim doubles, bucket
-      // caps on collect_list), so half a million live groups per task
-      // is ~100 MB worst case -- keep the hash path.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      // Long sweeps accumulate shuffle files across hundreds of jobs and
-      // the ContextCleaner only frees them on driver GC — with a large
-      // pre-touched heap GC may never fire and iterative CC/absorption
-      // loops filled 76 GB of /tmp at the r9 sf10 sweep (q_dup_clusters,
-      // "No space left on device"). A 60 s periodic GC keeps shuffle
-      // cleanup flowing; negligible cost at these heap sizes.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Warm-ups absorb JVM/codegen/page-cache cost outside any query's
     // timing. Each is individually best-effort: a missing table must
     // cost that table's queries -1, not abort the whole bench.
@@ -74,7 +48,12 @@ object Bench {
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      // the noop sink runs every output expression; a count() plan lets
+      // the optimizer prune the projections whose cost we mean to time
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      }
       catch { case e: Throwable =>
         Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
       }
@@ -178,17 +157,10 @@ object Bench {
         name -> (if (oks.nonEmpty) Right(oks.min) else runs.tail.head)
       }.sortBy(_._1)
     def fmt(v: Double): String = f"$v%.3f"
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def qjson(rs: Seq[(String, Either[String, Double])]): String =
       rs.map {
         case (k, Right(v)) => "\"" + k + "\":" + fmt(v)
-        case (k, Left(e))  => "\"" + k + "\":{\"err\":" + jstr(e) + "}"
+        case (k, Left(e))  => "\"" + k + "\":{\"err\":" + Verify.jsonString(e) + "}"
       }.mkString("{", ",", "}")
     val errs = results.collect { case (k, Left(_)) => k }
     val total = results.collect { case (_, Right(v)) => v }.sum
@@ -211,7 +183,7 @@ object Bench {
     // clobbered the first and the per-query 32-core map survived only as
     // a truncated stdout tail (VERDICT r12 finding #4). The summary-line
     // contract is unchanged; the artifact name is what moves.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_full_c$cpus.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_full_c${Sessions.cpus}.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
     catch { case _: Throwable => () }
     println(full)

@@ -8,13 +8,9 @@ import graft.scale.{CountMinAgg, DotProduct, MinHashSig, MisraGriesAgg, PolyHash
 
 /** SparkSessionExtensions entry point: registers graft's custom codegen
   * expressions as SQL functions, so `spark.sql("SELECT simhash64(text) …")`
-  * works next to the Column API. Activate with
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)   // or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *
-  * (the config form is what a cluster deployment would ship).
+  * works next to the Column API. `Sessions.local` installs it in every
+  * graft session; a cluster deployment would ship the config form,
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

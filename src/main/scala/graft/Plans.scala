@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for registered queries to files — the
@@ -12,8 +11,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *   suffix: "before" | "after" (file becomes <outDir>/<name>_<suffix>.txt)
   *   names : comma-separated exact query names; omit for ALL registered.
   *
-  * Session config mirrors Bench exactly so the dumped plan is the plan
-  * the bench runs (AQE initial plan; the formatted dump is pre-execution).
+  * Runs in the same `Sessions.local` session as Bench, so the dumped plan
+  * is the plan the bench runs (AQE initial plan; the formatted dump is
+  * pre-execution).
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -23,18 +23,7 @@ object Plans {
     val names: Set[String] =
       if (args.length > 3) args(3).split(",").toSet.filter(_.nonEmpty)
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Data-premise gate for regime-premised operators, runnable at ANY
   * scale directory (VERDICT r10 #7): premises that are only asserted at
   * the spec scales (DensitySpec at sf0.1) can silently break at sf1+,
@@ -24,18 +22,7 @@ import org.apache.spark.sql.SparkSession
 object PremiseCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "524288")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val r = analytics.Density.quotientStats(spark, dir).head()
     val (nPoints, nDistinct) = (r.getLong(0), r.getLong(1))
     val (maxOcc, maxMult) = (r.getLong(2), r.getLong(3))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc diagnostic REPL-substitute: evaluate one SQL statement against
   * the normalized tables of a testdata directory and print the result.
   * Spark SQL only (plan shapes, premise measurements, bucket histograms)
@@ -16,25 +14,7 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val (dir, sql) = (args(0), args(1))
     val maxRows = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      // Long sweeps accumulate shuffle files across hundreds of jobs and
-      // the ContextCleaner only frees them on driver GC — with a large
-      // pre-touched heap GC may never fire and iterative CC/absorption
-      // loops filled 76 GB of /tmp at the r9 sf10 sweep (q_dup_clusters,
-      // "No space left on device"). A 60 s periodic GC keeps shuffle
-      // cleanup flowing; negligible cost at these heap sizes.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     Tables.registerViews(spark, dir)
     spark.sql(sql).show(maxRows, truncate = false)
     spark.stop()

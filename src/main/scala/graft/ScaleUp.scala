@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing testdata directory by
@@ -20,25 +20,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (in, out, factor) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the default); graft's typed buffers
-      // are size-capped, so keep the hash path (see Bench.scala).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      // Long sweeps accumulate shuffle files across hundreds of jobs and
-      // the ContextCleaner only frees them on driver GC — with a large
-      // pre-touched heap GC may never fire and iterative CC/absorption
-      // loops filled 76 GB of /tmp at the r9 sf10 sweep (q_dup_clusters,
-      // "No space left on device"). A 60 s periodic GC keeps shuffle
-      // cleanup flowing; negligible cost at these heap sizes.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def read(t: String) = spark.read.parquet(s"$in/$t.parquet")
     def write(df: DataFrame, t: String) =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,33 +9,7 @@ object Verify {
     // run/dump only queries whose name contains one; the driver passes
     // two args and gets the full surface
     val only = if (args.length > 2) args(2).split(",").toSeq else Nil
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the default) — at volume that turns
-      // every bounded-buffer typed aggregate (TopK, VecSum, sketches,
-      // capped collect_list) into a full sort of its input stream
-      // (measured at the sf10 stress: knn-graph pair agg 345 s -> 114 s,
-      // knn-delta 34 s -> 11 s just from this). Graft's typed buffers
-      // are all size-capped (TopK k<=50, VecSum dim doubles, bucket
-      // caps on collect_list), so half a million live groups per task
-      // is ~100 MB worst case -- keep the hash path.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      // Long sweeps accumulate shuffle files across hundreds of jobs and
-      // the ContextCleaner only frees them on driver GC — with a large
-      // pre-touched heap GC may never fire and iterative CC/absorption
-      // loops filled 76 GB of /tmp at the r9 sf10 sweep (q_dup_clusters,
-      // "No space left on device"). A 60 s periodic GC keeps shuffle
-      // cleanup flowing; negligible cost at these heap sizes.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.isEmpty || only.exists(name.contains)
@@ -48,22 +21,24 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only.exists(k.contains) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** JSON string literal: escapes quote, backslash and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load of oracle_sql.json fail and silently zero the
+    * round's correctness. Bench's artifact uses it too. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -441,19 +441,7 @@ object ABBench {
     // optional third arg: only run A/B entries whose name contains one
     // of the comma-separated filters
     val only = (if (args.length > 2) args(2) else "").split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the default); graft's typed buffers
-      // are size-capped, so keep the hash path (see Bench.scala).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/documents.parquet")
       .selectExpr("length(text) l").agg(sum(col("l"))).collect()

@@ -2,45 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL surface of the custom expressions via SparkSessionExtensions. The
-  * shared test session was not built with the extensions, so this spec
-  * applies the same registrations through the function registry (the
-  * injectFunction path is exercised by building the identical triples).
+/** SQL surface of the custom expressions: the shared session is built by
+  * `Sessions.local`, which installs GraftExtensions, so every function
+  * here resolves through the real `injectFunction` registrations.
   */
 class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = Spark.session
-    // apply the extension registrations to the existing session
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    Seq(
-      ("simhash64", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.SimHash64(e.head)),
-      ("dot_product", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.DotProduct(e(0), e(1))),
-      ("shingle_hashes", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.ShingleHashes(e.head, GraftExtensions.intArg(e, 1))),
-      ("minhash_sig", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.MinHashSig(e.head, GraftExtensions.intArg(e, 1), GraftExtensions.intArg(e, 2))),
-      ("poly_hash", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.PolyHash(e.head)),
-      ("bpe_token_count", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.BpeCount(e.head)),
-      ("ws_token_count", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.WsTokenCount(e.head)),
-      ("top_k", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.TopKAgg(e(0), e(1), GraftExtensions.intArg(e, 2))),
-      ("top_k_str", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.TopKStrAgg(e(0), e(1), GraftExtensions.intArg(e, 2))),
-      ("misra_gries", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.MisraGriesAgg(e(0), GraftExtensions.intArg(e, 1))),
-      ("count_min", (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.CountMinAgg(e(0), GraftExtensions.intArg(e, 1), GraftExtensions.intArg(e, 2)))
-    ).foreach { case (name, builder) =>
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    s
-  }
+  lazy val spark = Spark.session
 
   test("custom expressions are callable from SQL") {
     val r = spark.sql(

@@ -48,11 +48,6 @@ class MisraGriesSpec extends AnyFunSuite {
   }
 
   test("misra_gries is callable from SQL") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      (e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.scale.MisraGriesAgg(e(0), GraftExtensions.intArg(e, 1)),
-      "built-in")
     val rows = spark.sql(
       """SELECT misra_gries(id, 4) AS hh
         |FROM VALUES (1L), (1L), (2L), (1L) AS v(id)""".stripMargin)

@@ -61,4 +61,10 @@ class RegistrySpec extends AnyFunSuite {
       assert(why.length > 40, s"$k: justification too thin to be useful")
     }
   }
+
+  test("oracle_sql.json string escape leaves no raw control char") {
+    val out = Verify.jsonString("a\tb\rc\"d\\e\u0001f")
+    assert(!out.exists(_ < ' '))
+    assert(out == "\"a\\tb\\rc\\\"d\\\\e\\u0001f\"")
+  }
 }

@@ -10,20 +10,9 @@ import graft.stages.{FrontendTransform, MarketoTransform, TextAgentTransform}
   * produce the expected values asserted here.
   */
 object Spark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed buffers are size-capped; keep ObjectHashAggregate on the
-      // hash path (see Bench.scala for the measured sort-fallback cost)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "524288")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // pinned at 4 cores so PlanSpec's plan-shape pins and the suite's
+  // timing do not depend on the host
+  lazy val session: SparkSession = Sessions.local(4)
 }
 
 class TransformParitySpec extends AnyFunSuite {
