@@ -98,8 +98,10 @@ object Bench {
       System.gc()
       Thread.sleep(250)
     }
+    // minWarm: warm samples guaranteed whatever the cold time.
     def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        minWarm: Int)
         : (String, Seq[Either[String, Double]]) = {
       val cold = timed(fn)
       val rest0 = if (cold.isRight) (2 to reps).map { _ =>
@@ -112,10 +114,12 @@ object Bench {
       // each needed a manual multi-rep re-run to exonerate. Guarantee
       // ≥2 warm samples for heavy queries so min-warm absorbs one
       // noise window; cheap queries keep the configured reps.
-      val extraWarm = cold match {
-        case Right(v) if v > 5.0 => (2 - rest0.count(_.isRight)).max(0)
+      val warmFloor = cold match {
+        case Right(v) if v > 5.0 => minWarm.max(2)
+        case Right(_) => minWarm
         case _ => 0
       }
+      val extraWarm = (warmFloor - rest0.count(_.isRight)).max(0)
       val rest = rest0 ++ (1 to extraWarm).map { _ =>
         reapBetweenReps(); timed(fn)
       }
@@ -133,19 +137,22 @@ object Bench {
       rng.shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
         .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
         .filter { case (name, _) => !skip.contains(name) }
-        .map { case (name, fn) => runOne(name, fn) }
+        .map { case (name, fn) => runOne(name, fn, minWarm = 0) }
     // Artifact arm (VERDICT r11 #1): the production-topology rows —
     // build each shared artifact once (its cost is a row), then the
     // Θ(artifact) consumer forms. Runs AFTER the shuffled registry
     // sweep, in declaration order (builds precede consumers — run order
     // is semantic here, so no seed shuffle). Same only/skip filters so
-    // targeted stress runs stay targeted.
+    // targeted stress runs stay targeted. Each row gets ≥2 warm samples
+    // whatever its cold time: without the shuffle a host-noise window
+    // can cover a contiguous run of art rows (r13: two phantom art
+    // regressions on the cold column), and min-warm must absorb it.
     val artBase = sys.env.getOrElse("SPARK_GRAFT_ART_DIR", "/tmp/graft_bench_artifacts")
     val artifactTimings: Seq[(String, Seq[Either[String, Double]])] =
       Artifacts.phases(artBase)
         .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
         .filter { case (name, _) => !skip.contains(name) }
-        .map { case (name, fn) => runOne(name, fn) }
+        .map { case (name, fn) => runOne(name, fn, minWarm = 2) }
     val timings = registryTimings ++ artifactTimings
     // Artifact order is sorted by name regardless of run order — the
     // cross-round diff should not churn on the shuffle.

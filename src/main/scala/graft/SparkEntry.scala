@@ -2,12 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, the Spark transform, and the DuckDB
+  * SQL that must return the same relation with identically aliased
+  * columns. A query registered without its oracle does not compile. */
+final case class Op(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+/** Driver contract (SURVEY.md §7).
   *
-  * `queries` aggregates every operator group's registry; each key has a
-  * matching DuckDB oracle in `oracleSql` unless the operator is not
-  * SQL-expressible (hash-seeded sketches, streaming), in which case the
-  * driver records a weaker rows-only check.
+  * `ops` lists every operator group's registrations once; `queries` and
+  * `oracleSql` are the two driver-facing views of it, so every query
+  * key has its DuckDB oracle by construction.
   */
 object SparkEntry {
 
@@ -15,23 +19,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.Relational.queries ++ analytics.Events.queries ++
-      analytics.TransformQueries.queries ++ analytics.ScaleQueries.queries ++
-      analytics.ParityQueries.queries ++ analytics.CorpusQueries.queries ++
-      analytics.CorpusStats.queries ++ analytics.CorpusDiversity.queries ++
-      analytics.CorpusAudit.queries ++ analytics.Audit.queries ++
-      analytics.Attribution.queries ++ analytics.Lifecycle.queries ++
-      analytics.RobustStats.queries ++ analytics.Forecast.queries ++
-      analytics.Preference.queries ++ analytics.Density.queries
+  lazy val ops: Seq[Op] =
+    analytics.Relational.ops ++ analytics.Events.ops ++
+      analytics.TransformQueries.ops ++ analytics.ScaleQueries.ops ++
+      analytics.ParityQueries.ops ++ analytics.CorpusQueries.ops ++
+      analytics.CorpusStats.ops ++ analytics.CorpusDiversity.ops ++
+      analytics.CorpusAudit.ops ++ analytics.Audit.ops ++
+      analytics.Attribution.ops ++ analytics.Lifecycle.ops ++
+      analytics.RobustStats.ops ++ analytics.Forecast.ops ++
+      analytics.Preference.ops ++ analytics.Density.ops
 
-  def oracleSql: Map[String, String] =
-    analytics.Relational.oracles ++ analytics.Events.oracles ++
-      analytics.TransformQueries.oracles ++ analytics.ScaleQueries.oracles ++
-      analytics.ParityQueries.oracles ++ analytics.CorpusQueries.oracles ++
-      analytics.CorpusStats.oracles ++ analytics.CorpusDiversity.oracles ++
-      analytics.CorpusAudit.oracles ++ analytics.Audit.oracles ++
-      analytics.Attribution.oracles ++ analytics.Lifecycle.oracles ++
-      analytics.RobustStats.oracles ++ analytics.Forecast.oracles ++
-      analytics.Preference.oracles ++ analytics.Density.oracles
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map(op => op.name -> op.run).toMap
+
+  def oracleSql: Map[String, String] = ops.map(op => op.name -> op.oracleSql).toMap
 }

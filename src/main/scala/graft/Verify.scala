@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -11,19 +11,17 @@ object Verify {
     val only = if (args.length > 2) args(2).split(",").toSeq else Nil
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.isEmpty || only.exists(name.contains)
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // one selection feeds both the parquet dump and oracle_sql.json
+    val selected = SparkEntry.ops.filter(op => only.isEmpty || only.exists(op.name.contains))
+    selected.foreach { op =>
+      try op.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${op.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${op.name} failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only.exists(k.contains) }
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(op => s"${jsonString(op.name)}: ${jsonString(op.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

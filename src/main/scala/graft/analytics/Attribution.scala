@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** Marketing-attribution tier over the event stream: which touchpoints
   * get credit for a purchase, and how engaged a user is right now.
@@ -371,17 +371,10 @@ object Attribution {
        |FROM eff CROSS JOIN tot""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_attribution_last" -> lastTouch,
-    "q_attribution_linear" -> linearTouch,
-    "q_attribution_markov" -> markovAttribution,
-    "q_recency_engagement" -> recencyEngagement,
-    "q_revenue_trend" -> revenueTrend)
-
-  val oracles: Map[String, String] = Map(
-    "q_attribution_last" -> lastTouchSql,
-    "q_attribution_linear" -> linearTouchSql,
-    "q_attribution_markov" -> markovAttributionSql,
-    "q_recency_engagement" -> recencyEngagementSql,
-    "q_revenue_trend" -> revenueTrendSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_attribution_last", lastTouch, lastTouchSql),
+    Op("q_attribution_linear", linearTouch, linearTouchSql),
+    Op("q_attribution_markov", markovAttribution, markovAttributionSql),
+    Op("q_recency_engagement", recencyEngagement, recencyEngagementSql),
+    Op("q_revenue_trend", revenueTrend, revenueTrendSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** Warehouse audit tier: referential-integrity rule tables and
   * incremental-state (CDC) snapshot diffs.
@@ -284,17 +284,10 @@ object Audit {
       prof("documents.source", "documents", "source")).mkString("\nUNION ALL\n")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_integrity_audit" -> integrityAudit,
-    "q_snapshot_diff" -> snapshotDiff,
-    "q_benford" -> benford,
-    "q_fuzzy_match" -> fuzzyMatch,
-    "q_skew_profile" -> skewProfile)
-
-  val oracles: Map[String, String] = Map(
-    "q_integrity_audit" -> integrityAuditSql,
-    "q_snapshot_diff" -> snapshotDiffSql,
-    "q_benford" -> benfordSql,
-    "q_fuzzy_match" -> fuzzyMatchSql,
-    "q_skew_profile" -> skewProfileSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_integrity_audit", integrityAudit, integrityAuditSql),
+    Op("q_snapshot_diff", snapshotDiff, snapshotDiffSql),
+    Op("q_benford", benford, benfordSql),
+    Op("q_fuzzy_match", fuzzyMatch, fuzzyMatchSql),
+    Op("q_skew_profile", skewProfile, skewProfileSql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.functions.TextAnalysis
 
 /** Corpus AUDIT tier — the checks a training-data run publishes about its
@@ -876,29 +876,16 @@ object CorpusAudit {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_split_leakage" -> splitLeakageQ,
-    "q_classifier_auc" -> classifierAuc,
-    "q_line_boilerplate" -> boilerplateQ,
-    "q_pipeline_funnel" -> pipelineFunnel,
-    "q_mojibake" -> mojibake,
-    "q_dup_threshold_sweep" -> dupThresholdSweep,
-    "q_score_znorm" -> scoreZnorm,
-    "q_data_card" -> dataCard,
-    "q_spearman_quality" -> spearmanQuality,
-    "q_neyman_alloc" -> neymanAlloc,
-    "q_lang_confusion" -> langConfusion)
-
-  val oracles: Map[String, String] = Map(
-    "q_split_leakage" -> splitLeakageSql,
-    "q_classifier_auc" -> classifierAucSql,
-    "q_line_boilerplate" -> boilerplateSql,
-    "q_pipeline_funnel" -> pipelineFunnelSql,
-    "q_mojibake" -> mojibakeSql,
-    "q_dup_threshold_sweep" -> dupThresholdSweepSql,
-    "q_score_znorm" -> scoreZnormSql,
-    "q_data_card" -> dataCardSql,
-    "q_spearman_quality" -> spearmanQualitySql,
-    "q_neyman_alloc" -> neymanAllocSql,
-    "q_lang_confusion" -> langConfusionSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_split_leakage", splitLeakageQ, splitLeakageSql),
+    Op("q_classifier_auc", classifierAuc, classifierAucSql),
+    Op("q_line_boilerplate", boilerplateQ, boilerplateSql),
+    Op("q_pipeline_funnel", pipelineFunnel, pipelineFunnelSql),
+    Op("q_mojibake", mojibake, mojibakeSql),
+    Op("q_dup_threshold_sweep", dupThresholdSweep, dupThresholdSweepSql),
+    Op("q_score_znorm", scoreZnorm, scoreZnormSql),
+    Op("q_data_card", dataCard, dataCardSql),
+    Op("q_spearman_quality", spearmanQuality, spearmanQualitySql),
+    Op("q_neyman_alloc", neymanAlloc, neymanAllocSql),
+    Op("q_lang_confusion", langConfusion, langConfusionSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.functions.TextAnalysis
 import graft.scale.VectorOps
 
@@ -607,21 +607,12 @@ object CorpusDiversity {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zipf_fit" -> zipfFit,
-    "q_token_fertility" -> tokenFertility,
-    "q_ngram_diversity" -> ngramDiversity,
-    "q_heaps_fit" -> heapsFit,
-    "q_jl_project" -> jlProject,
-    "q_ann_jl" -> annJl,
-    "q_coreset_kcenter" -> coresetKcenter)
-
-  val oracles: Map[String, String] = Map(
-    "q_zipf_fit" -> zipfFitSql,
-    "q_token_fertility" -> tokenFertilitySql,
-    "q_ngram_diversity" -> ngramDiversitySql,
-    "q_heaps_fit" -> heapsFitSql,
-    "q_jl_project" -> jlProjectSql,
-    "q_ann_jl" -> annJlSql,
-    "q_coreset_kcenter" -> coresetKcenterSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_zipf_fit", zipfFit, zipfFitSql),
+    Op("q_token_fertility", tokenFertility, tokenFertilitySql),
+    Op("q_ngram_diversity", ngramDiversity, ngramDiversitySql),
+    Op("q_heaps_fit", heapsFit, heapsFitSql),
+    Op("q_jl_project", jlProject, jlProjectSql),
+    Op("q_ann_jl", annJl, annJlSql),
+    Op("q_coreset_kcenter", coresetKcenter, coresetKcenterSql))
 }

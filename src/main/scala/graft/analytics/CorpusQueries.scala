@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.functions.{Pii, TextAnalysis}
 import graft.scale.Dedup
 
@@ -912,37 +912,20 @@ object CorpusQueries {
        |GROUP BY 1, 2, 3, 4, 5""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_conformal_coverage" -> conformalCoverage,
-    "q_quality_budget" -> qualityBudget,
-    "q_paragraph_dedup" -> paragraphDedup,
-    "q_docs_pii" -> docsPii,
-    "q_gopher_rules" -> gopherRules,
-    "q_token_budget" -> tokenBudget,
-    "q_budget_allocation" -> budgetAllocation,
-    "q_keep_rate_ci" -> keepRateCi,
-    "q_ess_weights" -> essWeights,
-    "q_dup_stats" -> dupStats,
-    "q_dup_stats_lsh" -> dupStatsLsh,
-    "q_global_index" -> globalIndex,
-    "q_exact_median" -> exactMedian,
-    "q_exact_quantiles" -> exactQuantiles,
-    "q_classifier_calibration" -> classifierCalibration)
-
-  val oracles: Map[String, String] = Map(
-    "q_conformal_coverage" -> conformalCoverageSql,
-    "q_quality_budget" -> qualityBudgetSql,
-    "q_paragraph_dedup" -> paragraphDedupSql,
-    "q_docs_pii" -> docsPiiSql,
-    "q_gopher_rules" -> gopherRulesSql,
-    "q_token_budget" -> tokenBudgetSql,
-    "q_budget_allocation" -> budgetAllocationSql,
-    "q_keep_rate_ci" -> keepRateCiSql,
-    "q_ess_weights" -> essWeightsSql,
-    "q_dup_stats" -> dupStatsSql,
-    "q_dup_stats_lsh" -> dupStatsSql,
-    "q_global_index" -> globalIndexSql,
-    "q_exact_median" -> exactMedianSql,
-    "q_exact_quantiles" -> exactQuantilesSql,
-    "q_classifier_calibration" -> classifierCalibrationSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_conformal_coverage", conformalCoverage, conformalCoverageSql),
+    Op("q_quality_budget", qualityBudget, qualityBudgetSql),
+    Op("q_paragraph_dedup", paragraphDedup, paragraphDedupSql),
+    Op("q_docs_pii", docsPii, docsPiiSql),
+    Op("q_gopher_rules", gopherRules, gopherRulesSql),
+    Op("q_token_budget", tokenBudget, tokenBudgetSql),
+    Op("q_budget_allocation", budgetAllocation, budgetAllocationSql),
+    Op("q_keep_rate_ci", keepRateCi, keepRateCiSql),
+    Op("q_ess_weights", essWeights, essWeightsSql),
+    Op("q_dup_stats", dupStats, dupStatsSql),
+    Op("q_dup_stats_lsh", dupStatsLsh, dupStatsSql),
+    Op("q_global_index", globalIndex, globalIndexSql),
+    Op("q_exact_median", exactMedian, exactMedianSql),
+    Op("q_exact_quantiles", exactQuantiles, exactQuantilesSql),
+    Op("q_classifier_calibration", classifierCalibration, classifierCalibrationSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.scale.{Dedup, Similarity, VecSum}
 
 /** Corpus-statistics operators: the measurement surface a training-data
@@ -904,33 +904,18 @@ object CorpusStats {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ks_drift" -> ksDrift,
-    "q_readability" -> readability,
-    "q_vocab_entropy" -> vocabEntropy,
-    "q_source_kl" -> sourceKl,
-    "q_source_overlap" -> sourceOverlap,
-    "q_semantic_decontaminate" -> semanticDecontaminate,
-    "q_embed_covariance" -> embedCovariance,
-    "q_pca_project" -> pcaProject,
-    "q_embed_outliers" -> embedOutliers,
-    "q_mixture_doremi" -> mixtureDoremi,
-    "q_source_dup_matrix" -> sourceDupMatrix,
-    "q_vocab_drift" -> vocabDrift,
-    "q_embed_drift" -> embedDrift)
-
-  val oracles: Map[String, String] = Map(
-    "q_ks_drift" -> ksDriftSql,
-    "q_readability" -> readabilitySql,
-    "q_vocab_entropy" -> vocabEntropySql,
-    "q_source_kl" -> sourceKlSql,
-    "q_source_overlap" -> sourceOverlapSql,
-    "q_semantic_decontaminate" -> semanticDecontaminateSql,
-    "q_embed_covariance" -> embedCovarianceSql,
-    "q_pca_project" -> pcaProjectSql,
-    "q_embed_outliers" -> embedOutliersSql,
-    "q_mixture_doremi" -> mixtureDoremiSql,
-    "q_source_dup_matrix" -> sourceDupMatrixSql,
-    "q_vocab_drift" -> vocabDriftSql,
-    "q_embed_drift" -> embedDriftSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_ks_drift", ksDrift, ksDriftSql),
+    Op("q_readability", readability, readabilitySql),
+    Op("q_vocab_entropy", vocabEntropy, vocabEntropySql),
+    Op("q_source_kl", sourceKl, sourceKlSql),
+    Op("q_source_overlap", sourceOverlap, sourceOverlapSql),
+    Op("q_semantic_decontaminate", semanticDecontaminate, semanticDecontaminateSql),
+    Op("q_embed_covariance", embedCovariance, embedCovarianceSql),
+    Op("q_pca_project", pcaProject, pcaProjectSql),
+    Op("q_embed_outliers", embedOutliers, embedOutliersSql),
+    Op("q_mixture_doremi", mixtureDoremi, mixtureDoremiSql),
+    Op("q_source_dup_matrix", sourceDupMatrix, sourceDupMatrixSql),
+    Op("q_vocab_drift", vocabDrift, vocabDriftSql),
+    Op("q_embed_drift", embedDrift, embedDriftSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.scale.{Dedup, VectorOps}
 
 /** Density-based clustering (DBSCAN, Ester et al. 1996) over the
@@ -495,13 +495,8 @@ object Density {
        |FROM agg JOIN lrd ON agg.vec_id = lrd.vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dbscan" -> dbscan,
-    "q_dbscan_stats" -> dbscanStats,
-    "q_lof_scores" -> lofScores)
-
-  val oracles: Map[String, String] = Map(
-    "q_dbscan" -> dbscanSql,
-    "q_dbscan_stats" -> dbscanStatsSql,
-    "q_lof_scores" -> lofScoresSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_dbscan", dbscan, dbscanSql),
+    Op("q_dbscan_stats", dbscanStats, dbscanStatsSql),
+    Op("q_lof_scores", lofScores, lofScoresSql))
 }

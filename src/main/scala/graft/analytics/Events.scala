@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** Event-stream analytics over the `events` table — the reference's
   * journey/funnel/dashboard/billing surface (SURVEY.md §2.5 A5–A8,
@@ -876,51 +876,27 @@ object Events {
        |       END AS dwell_share
        |FROM a CROSS JOIN t""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_state_dwell" -> stateDwell,
-    "q_value_ohlc" -> valueOhlc,
-    "q_ab_test" -> abTest,
-    "q_daily_anomaly" -> dailyAnomaly,
-    "q_cusum_volume" -> cusumVolume,
-    "q_session_entry" -> sessionEntryConversion,
-    "q_purchase_reach" -> purchaseReach,
-    "q_event_pivot" -> eventPivot,
-    "q_event_transitions" -> eventTransitions,
-    "q_journey_trigrams" -> journeyTrigrams,
-    "q_cohort_retention" -> cohortRetention,
-    "q_session_summary" -> sessionSummary,
-    "q_journey" -> journey,
-    "q_funnel" -> funnel,
-    "q_funnel_ref" -> funnelRef,
-    "q_dashboard" -> dashboard,
-    "q_last_event_per_user" -> lastEventPerUser,
-    "q_billing_usage" -> billingUsage,
-    "q_sessionize" -> sessionize,
-    "q_running_total" -> runningTotal,
-    "q_json_props" -> jsonProps,
-    "q_union_topics" -> unionTopics)
-
-  val oracles: Map[String, String] = Map(
-    "q_state_dwell" -> stateDwellSql,
-    "q_value_ohlc" -> valueOhlcSql,
-    "q_ab_test" -> abTestSql,
-    "q_daily_anomaly" -> dailyAnomalySql,
-    "q_cusum_volume" -> cusumVolumeSql,
-    "q_session_entry" -> sessionEntryConversionSql,
-    "q_purchase_reach" -> purchaseReachSql,
-    "q_event_pivot" -> eventPivotSql,
-    "q_event_transitions" -> eventTransitionsSql,
-    "q_journey_trigrams" -> journeyTrigramsSql,
-    "q_cohort_retention" -> cohortRetentionSql,
-    "q_session_summary" -> sessionSummarySql,
-    "q_journey" -> journeySql,
-    "q_funnel" -> funnelSql,
-    "q_funnel_ref" -> funnelRefSql,
-    "q_dashboard" -> dashboardSql,
-    "q_last_event_per_user" -> lastEventPerUserSql,
-    "q_billing_usage" -> billingUsageSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_running_total" -> runningTotalSql,
-    "q_json_props" -> jsonPropsSql,
-    "q_union_topics" -> unionTopicsSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_state_dwell", stateDwell, stateDwellSql),
+    Op("q_value_ohlc", valueOhlc, valueOhlcSql),
+    Op("q_ab_test", abTest, abTestSql),
+    Op("q_daily_anomaly", dailyAnomaly, dailyAnomalySql),
+    Op("q_cusum_volume", cusumVolume, cusumVolumeSql),
+    Op("q_session_entry", sessionEntryConversion, sessionEntryConversionSql),
+    Op("q_purchase_reach", purchaseReach, purchaseReachSql),
+    Op("q_event_pivot", eventPivot, eventPivotSql),
+    Op("q_event_transitions", eventTransitions, eventTransitionsSql),
+    Op("q_journey_trigrams", journeyTrigrams, journeyTrigramsSql),
+    Op("q_cohort_retention", cohortRetention, cohortRetentionSql),
+    Op("q_session_summary", sessionSummary, sessionSummarySql),
+    Op("q_journey", journey, journeySql),
+    Op("q_funnel", funnel, funnelSql),
+    Op("q_funnel_ref", funnelRef, funnelRefSql),
+    Op("q_dashboard", dashboard, dashboardSql),
+    Op("q_last_event_per_user", lastEventPerUser, lastEventPerUserSql),
+    Op("q_billing_usage", billingUsage, billingUsageSql),
+    Op("q_sessionize", sessionize, sessionizeSql),
+    Op("q_running_total", runningTotal, runningTotalSql),
+    Op("q_json_props", jsonProps, jsonPropsSql),
+    Op("q_union_topics", unionTopics, unionTopicsSql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** Time-series forecasting diagnostics over the daily revenue grid:
   * Holt double-exponential smoothing (level + trend state, one-step
@@ -280,13 +280,8 @@ object Forecast {
        |FROM h""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_holt_forecast" -> holtForecast,
-    "q_holt_winters" -> holtWinters,
-    "q_acf" -> acf)
-
-  val oracles: Map[String, String] = Map(
-    "q_holt_forecast" -> holtForecastSql,
-    "q_holt_winters" -> holtWintersSql,
-    "q_acf" -> acfSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_holt_forecast", holtForecast, holtForecastSql),
+    Op("q_holt_winters", holtWinters, holtWintersSql),
+    Op("q_acf", acf, acfSql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** User-lifecycle analytics over the event stream: active-user curves,
   * adoption, and signup→purchase conversion latency.
@@ -231,17 +231,10 @@ object Lifecycle {
       |SELECT q.p, CAST(r.cnt AS BIGINT) AS n_converted, r.days AS days_to_convert
       |FROM r, q WHERE r.rn = (q.nu * r.cnt + q.de - 1) // q.de""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_conversion_quantiles" -> conversionQuantiles,
-    "q_kaplan_meier" -> kaplanMeier,
-    "q_rolling_active" -> rollingActive,
-    "q_adoption_curve" -> adoptionCurve,
-    "q_time_to_convert" -> timeToConvert)
-
-  val oracles: Map[String, String] = Map(
-    "q_conversion_quantiles" -> conversionQuantilesSql,
-    "q_kaplan_meier" -> kaplanMeierSql,
-    "q_rolling_active" -> rollingActiveSql,
-    "q_adoption_curve" -> adoptionCurveSql,
-    "q_time_to_convert" -> timeToConvertSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_conversion_quantiles", conversionQuantiles, conversionQuantilesSql),
+    Op("q_kaplan_meier", kaplanMeier, kaplanMeierSql),
+    Op("q_rolling_active", rollingActive, rollingActiveSql),
+    Op("q_adoption_curve", adoptionCurve, adoptionCurveSql),
+    Op("q_time_to_convert", timeToConvert, timeToConvertSql))
 }

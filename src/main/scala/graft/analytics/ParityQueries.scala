@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.functions._
 import graft.stages.{MarketoTransform, TextAgentTransform, FrontendTransform}
 
@@ -402,17 +402,10 @@ object ParityQueries {
        |FROM events""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_validation_split" -> validationSplit,
-    "q_turn_enrich" -> turnEnrich,
-    "q_lead_geo_ts" -> leadGeoTs,
-    "q_event_payload" -> eventPayload,
-    "q_query_params" -> queryParamsQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_validation_split" -> validationSplitSql,
-    "q_turn_enrich" -> turnEnrichSql,
-    "q_lead_geo_ts" -> leadGeoTsSql,
-    "q_event_payload" -> eventPayloadSql,
-    "q_query_params" -> queryParamsSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_validation_split", validationSplit, validationSplitSql),
+    Op("q_turn_enrich", turnEnrich, turnEnrichSql),
+    Op("q_lead_geo_ts", leadGeoTs, leadGeoTsSql),
+    Op("q_event_payload", eventPayload, eventPayloadSql),
+    Op("q_query_params", queryParamsQ, queryParamsSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.scale.Bounded
 
 /** Pairwise-preference aggregation — the RLHF-data tier: given a stream
@@ -973,23 +973,13 @@ object Preference {
        |            ELSE 0.0 END AS cyclic_rate
        |FROM base CROSS JOIN tri CROSS JOIN cyc""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bt_rating" -> btRating,
-    "q_bt_rating_se" -> btRatingSe,
-    "q_rater_agreement" -> raterAgreement,
-    "q_fleiss_kappa" -> fleissKappa,
-    "q_pair_winrate_ci" -> pairWinrateCi,
-    "q_magnitude_bias" -> magnitudeBias,
-    "q_position_bias" -> positionBias,
-    "q_bt_transitivity" -> btTransitivity)
-
-  val oracles: Map[String, String] = Map(
-    "q_bt_rating" -> btRatingSql,
-    "q_bt_rating_se" -> btRatingSeSql,
-    "q_rater_agreement" -> raterAgreementSql,
-    "q_fleiss_kappa" -> fleissKappaSql,
-    "q_pair_winrate_ci" -> pairWinrateCiSql,
-    "q_magnitude_bias" -> magnitudeBiasSql,
-    "q_position_bias" -> positionBiasSql,
-    "q_bt_transitivity" -> btTransitivitySql)
+  val ops: Seq[Op] = Seq(
+    Op("q_bt_rating", btRating, btRatingSql),
+    Op("q_bt_rating_se", btRatingSe, btRatingSeSql),
+    Op("q_rater_agreement", raterAgreement, raterAgreementSql),
+    Op("q_fleiss_kappa", fleissKappa, fleissKappaSql),
+    Op("q_pair_winrate_ci", pairWinrateCi, pairWinrateCiSql),
+    Op("q_magnitude_bias", magnitudeBias, magnitudeBiasSql),
+    Op("q_position_bias", positionBias, positionBiasSql),
+    Op("q_bt_transitivity", btTransitivity, btTransitivitySql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 
 /** Relational analytics over the TPC-H-ish star schema — the warehouse-side
   * capability surface of the reference (SURVEY.md §2.5 A1–A5, §2.6 J1–J5,
@@ -1311,73 +1311,38 @@ object Relational {
       |       d AS valid_from, vt AS valid_to, vt IS NULL AS is_current
       |FROM iv""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scd2_priority" -> scd2Priority,
-    "q_supplier_hhi" -> supplierHhi,
-    "q_xyz_class" -> xyzClass,
-    "q_mk_trend" -> mkTrend,
-    "q_price_volume_mix" -> priceVolumeMix,
-    "q_gap_fill" -> gapFill,
-    "q_revenue_gini" -> revenueGini,
-    "q_seasonal_decompose" -> seasonalDecompose,
-    "q_latency_quantiles" -> latencyQuantiles,
-    "q_cube_orders" -> cubeOrders,
-    "q_wow_growth" -> wowGrowth,
-    "q_lineitem_corr" -> lineitemCorr,
-    "q_chisq_segment" -> chisqSegment,
-    "q_ordered_funnel" -> orderedFunnel,
-    "q_part_best_supplier" -> partBestSupplier,
-    "q_rfm_segments" -> rfmSegments,
-    "q_revenue_pareto" -> revenuePareto,
-    "q_basket_pairs" -> basketPairs,
-    "q_rollup_revenue" -> rollupRevenue,
-    "q_approx_distinct" -> approxDistinct,
-    "q_session_kpis" -> sessionKpis,
-    "q1_pricing_summary" -> pricingSummary,
-    "q_top_customers" -> topCustomers,
-    "q_order_priority" -> orderPriority,
-    "q_daily_orders" -> dailyOrders,
-    "q_daily_summary" -> dailySummary,
-    "q_revenue_by_nation" -> revenueByNation,
-    "q3_shipping_priority" -> shippingPriority,
-    "q_mktseg_share" -> mktsegShare,
-    "q_customers_with_open_orders" -> customersWithOpenOrders,
-    "q_customers_without_orders" -> customersWithoutOrders,
-    "q_latest_order_per_customer" -> latestOrderPerCustomer,
-    "q_order_rollup" -> orderRollup)
-
-  val oracles: Map[String, String] = Map(
-    "q_scd2_priority" -> scd2PrioritySql,
-    "q_supplier_hhi" -> supplierHhiSql,
-    "q_xyz_class" -> xyzClassSql,
-    "q_mk_trend" -> mkTrendSql,
-    "q_price_volume_mix" -> priceVolumeMixSql,
-    "q_gap_fill" -> gapFillSql,
-    "q_revenue_gini" -> revenueGiniSql,
-    "q_seasonal_decompose" -> seasonalDecomposeSql,
-    "q_latency_quantiles" -> latencyQuantilesSql,
-    "q_cube_orders" -> cubeOrdersSql,
-    "q_wow_growth" -> wowGrowthSql,
-    "q_lineitem_corr" -> lineitemCorrSql,
-    "q_chisq_segment" -> chisqSegmentSql,
-    "q_ordered_funnel" -> orderedFunnelSql,
-    "q_part_best_supplier" -> partBestSupplierSql,
-    "q_rfm_segments" -> rfmSegmentsSql,
-    "q_revenue_pareto" -> revenueParetoSql,
-    "q_basket_pairs" -> basketPairsSql,
-    "q_rollup_revenue" -> rollupRevenueSql,
-    "q_approx_distinct" -> approxDistinctSql,
-    "q_session_kpis" -> sessionKpisSql,
-    "q1_pricing_summary" -> pricingSummarySql,
-    "q_top_customers" -> topCustomersSql,
-    "q_order_priority" -> orderPrioritySql,
-    "q_daily_orders" -> dailyOrdersSql,
-    "q_daily_summary" -> dailySummarySql,
-    "q_revenue_by_nation" -> revenueByNationSql,
-    "q3_shipping_priority" -> shippingPrioritySql,
-    "q_mktseg_share" -> mktsegShareSql,
-    "q_customers_with_open_orders" -> customersWithOpenOrdersSql,
-    "q_customers_without_orders" -> customersWithoutOrdersSql,
-    "q_latest_order_per_customer" -> latestOrderPerCustomerSql,
-    "q_order_rollup" -> orderRollupSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_scd2_priority", scd2Priority, scd2PrioritySql),
+    Op("q_supplier_hhi", supplierHhi, supplierHhiSql),
+    Op("q_xyz_class", xyzClass, xyzClassSql),
+    Op("q_mk_trend", mkTrend, mkTrendSql),
+    Op("q_price_volume_mix", priceVolumeMix, priceVolumeMixSql),
+    Op("q_gap_fill", gapFill, gapFillSql),
+    Op("q_revenue_gini", revenueGini, revenueGiniSql),
+    Op("q_seasonal_decompose", seasonalDecompose, seasonalDecomposeSql),
+    Op("q_latency_quantiles", latencyQuantiles, latencyQuantilesSql),
+    Op("q_cube_orders", cubeOrders, cubeOrdersSql),
+    Op("q_wow_growth", wowGrowth, wowGrowthSql),
+    Op("q_lineitem_corr", lineitemCorr, lineitemCorrSql),
+    Op("q_chisq_segment", chisqSegment, chisqSegmentSql),
+    Op("q_ordered_funnel", orderedFunnel, orderedFunnelSql),
+    Op("q_part_best_supplier", partBestSupplier, partBestSupplierSql),
+    Op("q_rfm_segments", rfmSegments, rfmSegmentsSql),
+    Op("q_revenue_pareto", revenuePareto, revenueParetoSql),
+    Op("q_basket_pairs", basketPairs, basketPairsSql),
+    Op("q_rollup_revenue", rollupRevenue, rollupRevenueSql),
+    Op("q_approx_distinct", approxDistinct, approxDistinctSql),
+    Op("q_session_kpis", sessionKpis, sessionKpisSql),
+    Op("q1_pricing_summary", pricingSummary, pricingSummarySql),
+    Op("q_top_customers", topCustomers, topCustomersSql),
+    Op("q_order_priority", orderPriority, orderPrioritySql),
+    Op("q_daily_orders", dailyOrders, dailyOrdersSql),
+    Op("q_daily_summary", dailySummary, dailySummarySql),
+    Op("q_revenue_by_nation", revenueByNation, revenueByNationSql),
+    Op("q3_shipping_priority", shippingPriority, shippingPrioritySql),
+    Op("q_mktseg_share", mktsegShare, mktsegShareSql),
+    Op("q_customers_with_open_orders", customersWithOpenOrders, customersWithOpenOrdersSql),
+    Op("q_customers_without_orders", customersWithoutOrders, customersWithoutOrdersSql),
+    Op("q_latest_order_per_customer", latestOrderPerCustomer, latestOrderPerCustomerSql),
+    Op("q_order_rollup", orderRollup, orderRollupSql))
 }

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.scale.ValueQuantiles
 
 /** Robust (order-statistic) anomaly detection over the event stream —
@@ -102,11 +102,7 @@ object RobustStats {
       |FROM events e JOIN f ON e.event_type = f.event_type
       |GROUP BY 1, 2, 3, 4""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_value_mad" -> valueMad,
-    "q_iqr_outliers" -> iqrOutliers)
-
-  val oracles: Map[String, String] = Map(
-    "q_value_mad" -> valueMadSql,
-    "q_iqr_outliers" -> iqrOutliersSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_value_mad", valueMad, valueMadSql),
+    Op("q_iqr_outliers", iqrOutliers, iqrOutliersSql))
 }

@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.scale.{Bounded, CellTopK, Dedup, Partitioning, Similarity, SimHash64}
 import graft.functions.TextAnalysis
 
@@ -4296,47 +4296,50 @@ object ScaleQueries {
        |            ORDER BY cos_sim DESC, vec_id ASC) AS rn FROM s)
        |WHERE rn <= 3""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quality_classifier" -> qualityClassifier,
-    "q_bpe_pairs" -> bpePairs,
-    "q_bpe_train" -> bpeTrain,
-    "q_bpe_tokenize" -> bpeTokenize,
-    "q_url_dedup" -> urlDedup,
-    "q_delta_dedup" -> deltaDedup,
-    "q_hard_negatives" -> hardNegatives,
-    "q_table_profile" -> tableProfile,
-    "q_training_mix" -> trainingMix,
-    "q_unigram_logprob" -> unigramLogprob,
-    "q_repetition_filter" -> repetitionFilter,
-    "q_rolling_user_features" -> rollingUserFeatures,
-    "q_event_gaps" -> eventGaps,
-    "q_heavy_hitters" -> heavyHitters,
-    "q_heavy_hitters_lossy" -> heavyHittersLossy,
-    "q_heavy_hitters_cms" -> heavyHittersCms,
-    "q_mixture_weights" -> mixtureWeights,
-    "q_mixture_temperature" -> mixtureTemperature,
-    "q_quality_quartiles" -> qualityQuartiles,
-    "q_approx_quantiles" -> approxQuantiles,
-    "q_decontaminate" -> decontaminate,
-    "q_decontaminate_bloom" -> decontaminateBloom,
-    "q_doc_chunks" -> docChunks,
-    "q_seq_packing" -> seqPacking,
-    "q_embed_quantize" -> embedQuantize,
-    "q_bm25_search" -> bm25Search,
-    "q_tfidf_topterms" -> tfidfTopTerms,
-    "q_range_clicks" -> rangeClicks,
-    "q_asof_purchase" -> asofPurchase,
-    "q_salted_user_stats" -> saltedUserStats,
-    "q_kmeans_assign" -> kmeansAssign,
-    "q_cluster_prototypes" -> clusterPrototypes,
-    "q_pq_codes" -> pqCodes,
-    "q_pq_distortion" -> pqDistortion,
-    "q_pq_adc_topk" -> pqAdcTopK,
-    "q_ivfpq_topk" -> ivfPqTopK,
-    "q_ivfpq_probed" -> ivfPqProbed,
-    "q_ann_recall" -> annRecall,
-    "q_retrieval_metrics" -> retrievalMetrics,
-    "q_cluster_balance" -> clusterBalance,
+  val ops: Seq[Op] = Seq(
+    Op("q_quality_classifier", qualityClassifier, qualityClassifierSql),
+    Op("q_bpe_pairs", bpePairs, bpePairsSql),
+    Op("q_bpe_train", bpeTrain, bpeTrainSql),
+    Op("q_bpe_tokenize", bpeTokenize, bpeTokenizeSql),
+    Op("q_url_dedup", urlDedup, urlDedupSql),
+    Op("q_delta_dedup", deltaDedup, deltaDedupSql),
+    Op("q_hard_negatives", hardNegatives, hardNegativesSql),
+    Op("q_table_profile", tableProfile, tableProfileSql),
+    Op("q_training_mix", trainingMix, trainingMixSql),
+    Op("q_unigram_logprob", unigramLogprob, unigramLogprobSql),
+    Op("q_repetition_filter", repetitionFilter, repetitionFilterSql),
+    Op("q_rolling_user_features", rollingUserFeatures, rollingUserFeaturesSql),
+    Op("q_event_gaps", eventGaps, eventGapsSql),
+    Op("q_heavy_hitters", heavyHitters, heavyHittersSql),
+    Op("q_heavy_hitters_lossy", heavyHittersLossy, heavyHittersLossySql),
+    // CMS-gated candidate selection is exact-verified: same output
+    // relation (and oracle) as the exact threshold query
+    Op("q_heavy_hitters_cms", heavyHittersCms, heavyHittersLossySql),
+    Op("q_mixture_weights", mixtureWeights, mixtureWeightsSql),
+    Op("q_mixture_temperature", mixtureTemperature, mixtureTemperatureSql),
+    Op("q_quality_quartiles", qualityQuartiles, qualityQuartilesSql),
+    Op("q_approx_quantiles", approxQuantiles, approxQuantilesSql),
+    Op("q_decontaminate", decontaminate, decontaminateSql),
+    // sketch-gated, exact-verified: same output relation as the exact path
+    Op("q_decontaminate_bloom", decontaminateBloom, decontaminateSql),
+    Op("q_doc_chunks", docChunks, docChunksSql),
+    Op("q_seq_packing", seqPacking, seqPackingSql),
+    Op("q_embed_quantize", embedQuantize, embedQuantizeSql),
+    Op("q_bm25_search", bm25Search, bm25SearchSql),
+    Op("q_tfidf_topterms", tfidfTopTerms, tfidfTopTermsSql),
+    Op("q_range_clicks", rangeClicks, rangeClicksSql),
+    Op("q_asof_purchase", asofPurchase, asofPurchaseSql),
+    Op("q_salted_user_stats", saltedUserStats, saltedUserStatsSql),
+    Op("q_kmeans_assign", kmeansAssign, kmeansAssignSql),
+    Op("q_cluster_prototypes", clusterPrototypes, clusterPrototypesSql),
+    Op("q_pq_codes", pqCodes, pqCodesSql),
+    Op("q_pq_distortion", pqDistortion, pqDistortionSql),
+    Op("q_pq_adc_topk", pqAdcTopK, pqAdcTopKSql),
+    Op("q_ivfpq_topk", ivfPqTopK, ivfPqTopKSql),
+    Op("q_ivfpq_probed", ivfPqProbed, ivfPqProbedSql),
+    Op("q_ann_recall", annRecall, annRecallSql),
+    Op("q_retrieval_metrics", retrievalMetrics, retrievalMetricsSql),
+    Op("q_cluster_balance", clusterBalance, clusterBalanceSql),
     // Salt is result-identical (slicing only splits tasks) but keeps
     // the cluster-keyed join from collapsing to k=8 tasks: the r9 sf10
     // full sweep measured the unsalted registration at 682.8 s with one
@@ -4347,151 +4350,62 @@ object ScaleQueries {
     // over-salts any other cluster (verdict r9 #8). k itself stays at
     // the oracle-pinned default; the k-raised scale arm (17.6 s) lives
     // in ABBench.
-    "q_semantic_neardup" -> ((s: SparkSession, d: String) =>
-      semanticNearDup(s, d, salt = parallelismSalt(s))),
-    "q_span_dedup" -> spanDedup,
-    "q_dup_runs" -> dupRuns,
-    "q_winnow_pairs" -> winnowPairs,
-    "q_decontaminate_winnow" -> decontaminateWinnow,
-    "q_dsir_weights" -> dsirWeights,
-    "q_weighted_sample" -> weightedSample,
-    "q_canonical_docs" -> canonicalDocs,
-    "q_ngram_topk" -> ngramTopK,
-    "q_pmi_collocations" -> pmiCollocations,
-    "q_frame_sample" -> frameSample,
-    "q_image_neardup" -> ((s, d) => graft.multimodal.Multimodal.imageNeardup(s, d)),
-    "q_corpus_curation" -> corpusCuration,
-    "q_corpus_sample" -> corpusSample,
-    "q_corpus_quantiles" -> corpusQuantiles,
-    "q_knn_join" -> knnJoin,
-    "q_topk_per_user" -> topkPerUser,
-    "q_multimodal_stats" -> multimodalStats,
-    "q_dedup_exact" -> dedupExact,
-    "q_jaccard_pairs" -> jaccardPairs,
-    "q_containment_pairs" -> containmentPairs,
-    "q_containment_lsh" -> containmentLsh,
-    "q_dup_clusters" -> dupClusters,
-    "q_dup_clusters_lsh" -> dupClustersLsh,
-    "q_canonical_docs_lsh" -> canonicalDocsLsh,
-    "q_minhash_pairs" -> minhashPairs,
-    "q_simhash_pairs" -> simhashPairs,
-    "q_cosine_topk" -> cosineTopK,
-    "q_ann_lsh" -> annLsh,
-    "q_embed_neardup" -> embedNearDup,
-    "q_label_centroids" -> labelCentroids,
-    "q_ivf_topk" -> ivfTopK,
-    "q_token_counts" -> tokenCounts,
-    "q_run_metrics" -> ((s: SparkSession, dir: String) => graft.Metrics.runMetrics(s, dir)),
-    "q_lr_train" -> lrTrain,
-    "q_knn_graph" -> ((s: SparkSession, d: String) => knnGraph(s, d)),
-    "q_knn_delta" -> knnDelta,
-    "q_pagerank" -> pagerank,
-    "q_triangle_count" -> triangleCount,
-    "q_graph_coherence" -> graphCoherence,
-    "q_split_assign" -> splitAssign,
-    "q_bigram_logprob" -> bigramLogprob,
-    "q_hybrid_search" -> hybridSearch,
-    "q_training_shards" -> trainingShards,
-    "q_shard_manifest" -> shardManifest,
-    "q_quality_sample" -> qualitySample)
-
-  val oracles: Map[String, String] = Map(
-    "q_approx_quantiles" -> approxQuantilesSql,
-    "q_run_metrics" -> graft.Metrics.runMetricsSql,
-    "q_lr_train" -> lrTrainSql,
-    "q_knn_graph" -> knnGraphSql,
-    "q_knn_delta" -> knnDeltaSql,
-    "q_pagerank" -> pagerankSql,
-    "q_triangle_count" -> triangleCountSql,
-    "q_graph_coherence" -> graphCoherenceSql,
-    "q_split_assign" -> splitAssignSql,
-    "q_bigram_logprob" -> bigramLogprobSql,
-    "q_hybrid_search" -> hybridSearchSql,
-    "q_training_shards" -> trainingShardsSql,
-    "q_shard_manifest" -> shardManifestSql,
-    "q_quality_sample" -> qualitySampleSql,
-    "q_quality_classifier" -> qualityClassifierSql,
-    "q_bpe_pairs" -> bpePairsSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_tokenize" -> bpeTokenizeSql,
-    "q_url_dedup" -> urlDedupSql,
-    "q_delta_dedup" -> deltaDedupSql,
-    "q_hard_negatives" -> hardNegativesSql,
-    "q_table_profile" -> tableProfileSql,
-    "q_training_mix" -> trainingMixSql,
-    "q_unigram_logprob" -> unigramLogprobSql,
-    "q_repetition_filter" -> repetitionFilterSql,
-    "q_rolling_user_features" -> rollingUserFeaturesSql,
-    "q_event_gaps" -> eventGapsSql,
-    "q_heavy_hitters" -> heavyHittersSql,
-    "q_heavy_hitters_lossy" -> heavyHittersLossySql,
-    // CMS-gated candidate selection is exact-verified: same output
-    // relation (and oracle) as the exact threshold query
-    "q_heavy_hitters_cms" -> heavyHittersLossySql,
-    "q_mixture_weights" -> mixtureWeightsSql,
-    "q_mixture_temperature" -> mixtureTemperatureSql,
-    "q_quality_quartiles" -> qualityQuartilesSql,
-    "q_decontaminate" -> decontaminateSql,
-    // sketch-gated, exact-verified: same output relation as the exact path
-    "q_decontaminate_bloom" -> decontaminateSql,
-    "q_doc_chunks" -> docChunksSql,
-    "q_seq_packing" -> seqPackingSql,
-    "q_embed_quantize" -> embedQuantizeSql,
-    "q_bm25_search" -> bm25SearchSql,
-    "q_tfidf_topterms" -> tfidfTopTermsSql,
-    "q_range_clicks" -> rangeClicksSql,
-    "q_asof_purchase" -> asofPurchaseSql,
-    "q_salted_user_stats" -> saltedUserStatsSql,
-    "q_kmeans_assign" -> kmeansAssignSql,
-    "q_cluster_prototypes" -> clusterPrototypesSql,
-    "q_pq_codes" -> pqCodesSql,
-    "q_pq_distortion" -> pqDistortionSql,
-    "q_pq_adc_topk" -> pqAdcTopKSql,
-    "q_ivfpq_topk" -> ivfPqTopKSql,
-    "q_ivfpq_probed" -> ivfPqProbedSql,
-    "q_ann_recall" -> annRecallSql,
-    "q_retrieval_metrics" -> retrievalMetricsSql,
-    "q_cluster_balance" -> clusterBalanceSql,
-    "q_semantic_neardup" -> semanticNearDupSql,
-    "q_span_dedup" -> spanDedupSql,
-    "q_dup_runs" -> dupRunsSql,
-    "q_winnow_pairs" -> winnowPairsSql,
-    "q_decontaminate_winnow" -> decontaminateWinnowSql,
-    "q_dsir_weights" -> dsirWeightsSql,
-    "q_weighted_sample" -> weightedSampleSql,
-    "q_canonical_docs" -> canonicalDocsSql,
-    "q_ngram_topk" -> ngramTopKSql,
-    "q_pmi_collocations" -> pmiCollocationsSql,
-    "q_frame_sample" -> frameSampleSql,
-    "q_corpus_curation" -> corpusCurationSql,
-    "q_corpus_sample" -> corpusSampleSql,
-    "q_corpus_quantiles" -> corpusQuantilesSql,
-    "q_knn_join" -> knnJoinSql,
-    "q_topk_per_user" -> topkPerUserSql,
-    "q_multimodal_stats" -> multimodalStatsSql,
-    "q_image_neardup" -> graft.multimodal.Multimodal.imageNeardupSql,
-    "q_ivf_topk" -> ivfTopKSql,
-    "q_dedup_exact" -> dedupExactSql,
-    "q_jaccard_pairs" -> jaccardPairsSql,
-    "q_containment_pairs" -> containmentPairsSql,
+    Op("q_semantic_neardup",
+      (s, d) => semanticNearDup(s, d, salt = parallelismSalt(s)),
+      semanticNearDupSql),
+    Op("q_span_dedup", spanDedup, spanDedupSql),
+    Op("q_dup_runs", dupRuns, dupRunsSql),
+    Op("q_winnow_pairs", winnowPairs, winnowPairsSql),
+    Op("q_decontaminate_winnow", decontaminateWinnow, decontaminateWinnowSql),
+    Op("q_dsir_weights", dsirWeights, dsirWeightsSql),
+    Op("q_weighted_sample", weightedSample, weightedSampleSql),
+    Op("q_canonical_docs", canonicalDocs, canonicalDocsSql),
+    Op("q_ngram_topk", ngramTopK, ngramTopKSql),
+    Op("q_pmi_collocations", pmiCollocations, pmiCollocationsSql),
+    Op("q_frame_sample", frameSample, frameSampleSql),
+    Op("q_image_neardup", graft.multimodal.Multimodal.imageNeardup,
+      graft.multimodal.Multimodal.imageNeardupSql),
+    Op("q_corpus_curation", corpusCuration, corpusCurationSql),
+    Op("q_corpus_sample", corpusSample, corpusSampleSql),
+    Op("q_corpus_quantiles", corpusQuantiles, corpusQuantilesSql),
+    Op("q_knn_join", knnJoin, knnJoinSql),
+    Op("q_topk_per_user", topkPerUser, topkPerUserSql),
+    Op("q_multimodal_stats", multimodalStats, multimodalStatsSql),
+    Op("q_dedup_exact", dedupExact, dedupExactSql),
+    Op("q_jaccard_pairs", jaccardPairs, jaccardPairsSql),
+    Op("q_containment_pairs", containmentPairs, containmentPairsSql),
     // scale-path sibling: identical result premise (see containmentLsh
     // scaladoc), so it carries the exact tier's oracle verbatim
-    "q_containment_lsh" -> containmentPairsSql,
-    "q_dup_clusters" -> dupClustersSql,
+    Op("q_containment_lsh", containmentLsh, containmentPairsSql),
+    Op("q_dup_clusters", dupClusters, dupClustersSql),
     // The LSH tier carries the EXACT tier's oracle SQL: candidates are
     // exact-verified (precision exact by construction) and ScaleSpec
     // proves recall is exact on the gate corpora, so the composed
     // relations are equal — and deterministic, so the rows can't flake.
     // See dupClustersLsh.
-    "q_minhash_pairs" -> jaccardPairsSql,
+    Op("q_dup_clusters_lsh", dupClustersLsh, dupClustersSql),
+    Op("q_canonical_docs_lsh", canonicalDocsLsh, canonicalDocsSql),
+    Op("q_minhash_pairs", minhashPairs, jaccardPairsSql),
     // seedless FNV-1a makes the signatures themselves SQL-replayable —
     // see simhashPairsSql for the recursive-CTE construction.
-    "q_simhash_pairs" -> simhashPairsSql,
-    "q_dup_clusters_lsh" -> dupClustersSql,
-    "q_canonical_docs_lsh" -> canonicalDocsSql,
-    "q_cosine_topk" -> cosineTopKSql,
-    "q_ann_lsh" -> annLshSql,
-    "q_embed_neardup" -> embedNearDupSql,
-    "q_label_centroids" -> labelCentroidsSql,
-    "q_token_counts" -> tokenCountsSql)
+    Op("q_simhash_pairs", simhashPairs, simhashPairsSql),
+    Op("q_cosine_topk", cosineTopK, cosineTopKSql),
+    Op("q_ann_lsh", annLsh, annLshSql),
+    Op("q_embed_neardup", embedNearDup, embedNearDupSql),
+    Op("q_label_centroids", labelCentroids, labelCentroidsSql),
+    Op("q_ivf_topk", ivfTopK, ivfTopKSql),
+    Op("q_token_counts", tokenCounts, tokenCountsSql),
+    Op("q_run_metrics", graft.Metrics.runMetrics, graft.Metrics.runMetricsSql),
+    Op("q_lr_train", lrTrain, lrTrainSql),
+    Op("q_knn_graph", (s, d) => knnGraph(s, d), knnGraphSql),
+    Op("q_knn_delta", knnDelta, knnDeltaSql),
+    Op("q_pagerank", pagerank, pagerankSql),
+    Op("q_triangle_count", triangleCount, triangleCountSql),
+    Op("q_graph_coherence", graphCoherence, graphCoherenceSql),
+    Op("q_split_assign", splitAssign, splitAssignSql),
+    Op("q_bigram_logprob", bigramLogprob, bigramLogprobSql),
+    Op("q_hybrid_search", hybridSearch, hybridSearchSql),
+    Op("q_training_shards", trainingShards, trainingShardsSql),
+    Op("q_shard_manifest", shardManifest, shardManifestSql),
+    Op("q_quality_sample", qualitySample, qualitySampleSql))
 }

@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Num, Tables}
+import graft.{Num, Op, Tables}
 import graft.functions._
 
 /** Oracle-checked queries exercising the transform function library
@@ -640,31 +640,17 @@ object TransformQueries {
        |FROM events GROUP BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_engagement_extended" -> engagementExtended,
-    "q_combined_score" -> combinedScore,
-    "q_normalize_contacts" -> normalizeContacts,
-    "q_lead_scores" -> leadScores,
-    "q_device_parse" -> deviceParse,
-    "q_url_referrer" -> urlReferrer,
-    "q_text_quality" -> textQuality,
-    "q_pii_redact" -> piiRedact,
-    "q_model_costs" -> modelCosts,
-    "q_activity_enrich" -> activityEnrich,
-    "q_event_norm" -> eventNorm,
-    "q_envelope_flatten" -> envelopeFlatten)
-
-  val oracles: Map[String, String] = Map(
-    "q_engagement_extended" -> engagementExtendedSql,
-    "q_combined_score" -> combinedScoreSql,
-    "q_normalize_contacts" -> normalizeContactsSql,
-    "q_lead_scores" -> leadScoresSql,
-    "q_device_parse" -> deviceParseSql,
-    "q_url_referrer" -> urlReferrerSql,
-    "q_text_quality" -> textQualitySql,
-    "q_pii_redact" -> piiRedactSql,
-    "q_model_costs" -> modelCostsSql,
-    "q_activity_enrich" -> activityEnrichSql,
-    "q_event_norm" -> eventNormSql,
-    "q_envelope_flatten" -> envelopeFlattenSql)
+  val ops: Seq[Op] = Seq(
+    Op("q_engagement_extended", engagementExtended, engagementExtendedSql),
+    Op("q_combined_score", combinedScore, combinedScoreSql),
+    Op("q_normalize_contacts", normalizeContacts, normalizeContactsSql),
+    Op("q_lead_scores", leadScores, leadScoresSql),
+    Op("q_device_parse", deviceParse, deviceParseSql),
+    Op("q_url_referrer", urlReferrer, urlReferrerSql),
+    Op("q_text_quality", textQuality, textQualitySql),
+    Op("q_pii_redact", piiRedact, piiRedactSql),
+    Op("q_model_costs", modelCosts, modelCostsSql),
+    Op("q_activity_enrich", activityEnrich, activityEnrichSql),
+    Op("q_event_norm", eventNorm, eventNormSql),
+    Op("q_envelope_flatten", envelopeFlatten, envelopeFlattenSql))
 }

@@ -12,6 +12,15 @@ class ListenerSpec extends AnyFunSuite {
   lazy val spark = Spark.session
   val sf = "/root/testdata/sf0.001"
 
+  /** Attach once every event already posted is delivered: a previous
+    * suite's last query event can otherwise reach the new recorder
+    * first (seen: a `count()`'s rowsOut of 1 read as this test's query).
+    */
+  private def attachFresh(): Metrics.Recorder = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    Metrics.attach(spark)
+  }
+
   /** Listener-bus delivery is async; poll until the expected entries
     * land (bounded).
     */
@@ -22,7 +31,7 @@ class ListenerSpec extends AnyFunSuite {
   }
 
   test("recorder captures rows, files, bytes and duration of an executed query") {
-    val r = Metrics.attach(spark)
+    val r = attachFresh()
     try {
       val n = Tables.documents(spark, sf)
         .groupBy("source").agg(count(lit(1))).collect().length
@@ -40,7 +49,7 @@ class ListenerSpec extends AnyFunSuite {
   }
 
   test("metrics table is queryable and the healthy check follows the error rate") {
-    val r = Metrics.attach(spark)
+    val r = attachFresh()
     try {
       Tables.region(spark, sf).count()
       awaitEntries(r, 1)

@@ -53,8 +53,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("driver entry point returns rows (smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
-    // every registered oracle has a matching query
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
   test("cosine top-k broadcasts the query vector and avoids a global sort") {
