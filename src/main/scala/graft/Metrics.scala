@@ -160,10 +160,14 @@ object Metrics {
     * are host-dependent, but rowsOut comes from the executed plan's
     * numOutputRows and must equal the true table cardinality — which is
     * exactly what the DuckDB oracle checks (count(*) per table). This is
-    * the scrape endpoint made oracle-checkable.
+    * the scrape endpoint made oracle-checkable. The listener bus is
+    * drained before the recorder attaches: an earlier query's event still
+    * queued would otherwise reach it first and be reported as region's
+    * row count.
     */
   def runMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
     val r = attach(spark)
     val entries = try {
       Tables.region(spark, dir).collect()

@@ -495,10 +495,12 @@ object CorpusQueries {
     * q_dup_clusters_lsh / q_canonical_docs_lsh. At 100 TB the exact
     * tier's Σ C(df,2) pair expansion is the scale-killer; this path
     * shuffles only signatures and band buckets. Carries the exact
-    * tier's oracle SQL on the ScaleSpec/RegimeSpec premise: LSH candidates are
-    * exact-verified (precision exact by construction) and recall is
-    * proved set-equal on the gate corpora, so the cluster relation —
-    * and hence this histogram — equals the exact tier's.
+    * tier's oracle SQL: a corpus of at most Dedup.MaxGroup documents
+    * takes the exact tier outright (the minhashDupPairs gate), and past
+    * it LSH candidates are exact-verified (precision exact by
+    * construction) with recall pinned set-equal by RegimeSpec at sf0.1,
+    * so the cluster relation — and hence this histogram — equals the
+    * exact tier's.
     */
   def dupStatsLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

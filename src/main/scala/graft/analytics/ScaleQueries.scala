@@ -162,12 +162,23 @@ object ScaleQueries {
     * the fixture's MINIMUM excerpt length, so excerpt→parent recall is
     * structural, not a density accident (the default (4,5) guarantee
     * starts at 8 words and measurably missed two 7-word excerpts).
-    * Carries the exact tier's oracle SQL on the ScaleSpec/RegimeSpec
-    * premise that the verified pair set equals the exact tier's on the
-    * gate corpora (asserted at sf0.001, sf0.01 AND sf0.1 — the
-    * q_heavy_hitters rule).
+    *
+    * Gated on the augmented corpus size: at most [[Dedup.MaxGroup]] rows
+    * (the row count is the certificate) take the exact tier
+    * [[containmentPairs]], whose df cap cannot bind below that size — the
+    * same pairs, doubles and rounding, without the tiers' fixed cost of
+    * checkpoints, band self-join and winnow passes. So the exact tier's
+    * oracle SQL is exact by construction on small corpora; past the
+    * budget it rests on the premise that the verified pair set equals the
+    * exact tier's, which RegimeSpec asserts at sf0.1 and ScaleSpec at
+    * sf0.001 with the gate forced to these tiers (the q_heavy_hitters rule).
     */
-  def containmentLsh(spark: SparkSession, dir: String): DataFrame = {
+  def containmentLsh(spark: SparkSession, dir: String): DataFrame =
+    Bounded(spark, Dedup.MaxGroup)(docsWithPrefixes(spark, dir).count())(
+      containmentPairs(spark, dir))(containmentTiers(spark, dir))
+
+  /** [[containmentLsh]]'s candidate tiers, the path past its budget. */
+  private def containmentTiers(spark: SparkSession, dir: String): DataFrame = {
     // The augmented corpus feeds several derivations (the quotient
     // mapping, minhash signatures, winnow fingerprints, both verify
     // sides' shingle sets) and each would re-run the union-of-scans
@@ -372,8 +383,10 @@ object ScaleQueries {
        |WHERE rn = 1""".stripMargin
 
   /** MinHash+LSH near-dup pairs — the linear-ish scale path. xxhash64
-    * seeding is engine-specific, so no SQL oracle (rows-only); ScaleSpec
-    * asserts it finds exactly the exact-Jaccard pairs on testdata.
+    * seeding is engine-specific, so the signatures have no SQL analog;
+    * the pairs carry the exact tier's oracle because corpora up to
+    * Dedup.MaxGroup documents take the exact tier (the minhashDupPairs
+    * gate) and, past it, RegimeSpec asserts LSH recall equals it at sf0.1.
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashDupPairs(Tables.documents(spark, dir), "text", "doc_id", 3, 0.5)
@@ -387,15 +400,17 @@ object ScaleQueries {
     * self-join. At 100 TB the exact tier's total work is Σ C(df,2) —
     * quadratic in duplication — while this path shuffles only signatures
     * and band buckets. xxhash64 seeding is engine-specific, so the
-    * SIGNATURES have no SQL analog — but the composed RESULT does: LSH
-    * candidates are exact-verified (precision exact by construction) and
-    * ScaleSpec proves recall is exact on the gate corpora, so the cluster
-    * and canonical relations equal the exact tier's and these queries
-    * carry the exact tier's oracle SQL. Deterministic (fixed seeds, fixed
-    * gate data), so the oracle row can't flake; ScaleSpec set-equality
-    * (sf0.001) plus RegimeSpec's sf0.1 sweep guard the premise — recall
-    * is cardinality-dependent, so it is asserted where cardinality grows
-    * (the q_heavy_hitters rule).
+    * SIGNATURES have no SQL analog — but the composed RESULT does: a
+    * corpus of at most Dedup.MaxGroup documents takes the exact tier
+    * outright (the minhashDupPairs gate, exact by construction), and past
+    * it LSH candidates are exact-verified (precision exact by
+    * construction) with recall pinned equal to the exact tier by
+    * RegimeSpec at sf0.1 — recall is cardinality-dependent, so it is
+    * asserted where cardinality grows (the q_heavy_hitters rule). So the
+    * cluster and canonical relations equal the exact tier's and these
+    * queries carry the exact tier's oracle SQL. Deterministic (fixed
+    * seeds, fixed gate data), so the oracle row can't flake; ScaleSpec
+    * pins the forced LSH path at sf0.001.
     */
   def dupClustersLsh(spark: SparkSession, dir: String): DataFrame =
     Dedup.dupClusters(
@@ -4374,15 +4389,16 @@ object ScaleQueries {
     Op("q_dedup_exact", dedupExact, dedupExactSql),
     Op("q_jaccard_pairs", jaccardPairs, jaccardPairsSql),
     Op("q_containment_pairs", containmentPairs, containmentPairsSql),
-    // scale-path sibling: identical result premise (see containmentLsh
-    // scaladoc), so it carries the exact tier's oracle verbatim
+    // scale-path sibling: corpora up to Dedup.MaxGroup rows run the exact
+    // tier itself, larger ones the candidate tiers whose pair set equals
+    // it (see containmentLsh), so it carries the exact tier's oracle verbatim
     Op("q_containment_lsh", containmentLsh, containmentPairsSql),
     Op("q_dup_clusters", dupClusters, dupClustersSql),
-    // The LSH tier carries the EXACT tier's oracle SQL: candidates are
-    // exact-verified (precision exact by construction) and ScaleSpec
-    // proves recall is exact on the gate corpora, so the composed
-    // relations are equal — and deterministic, so the rows can't flake.
-    // See dupClustersLsh.
+    // The LSH tier carries the EXACT tier's oracle SQL: corpora up to
+    // Dedup.MaxGroup documents run the exact tier itself (the
+    // minhashDupPairs gate); past it candidates are exact-verified and
+    // RegimeSpec pins recall at sf0.1, so the composed relations are
+    // equal — and deterministic, so the rows can't flake. See dupClustersLsh.
     Op("q_dup_clusters_lsh", dupClustersLsh, dupClustersSql),
     Op("q_canonical_docs_lsh", canonicalDocsLsh, canonicalDocsSql),
     Op("q_minhash_pairs", minhashPairs, jaccardPairsSql),

@@ -456,20 +456,35 @@ object Dedup {
 
   /** Full MinHash near-dup pipeline: shingle → sign → band → candidates →
     * exact-verify Jaccard on candidates only.
+    *
+    * Gated on the corpus size: at most [[MaxGroup]] documents (the row
+    * count is the certificate) take the exact tier [[jaccardPairs]]
+    * instead. No shingle's df can exceed the row count, so the df cap
+    * drops nothing and the exact tier returns the all-pairs answer — the
+    * same d1 < d2 pairs and the same c / (n1 + n2 - c) doubles the
+    * verification computes as |∩| / |∪| — without the banding pipeline's
+    * fixed cost (eager signature checkpoint, over-cap census, band
+    * self-join), which dominates organic corpora of that size. Under mass
+    * duplication the exact tier's Σ C(df,2) expansion is the larger cost,
+    * still bounded by C(MaxGroup, 2) pairs per shingle. Past the budget the LSH
+    * tiers run; RegimeSpec pins their recall against the exact tier at
+    * sf0.1 and ScaleSpec/BoundedSpec pin the forced LSH path at sf0.001.
     */
   def minhashDupPairs(docs: DataFrame, textCol: String, keyCol: String,
-      n: Int, threshold: Double): DataFrame = {
-    val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-    val cands = lshCandidates(minhashSignatures(docs, textCol, keyCol, n))
-    // verify candidates with exact Jaccard over the shingle arrays
-    cands
-      .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
-      .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      n: Int, threshold: Double): DataFrame =
+    Bounded(docs.sparkSession, MaxGroup)(docs.count())(
+      jaccardPairs(docs, textCol, keyCol, n, threshold)) {
+      val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
+      val cands = lshCandidates(minhashSignatures(docs, textCol, keyCol, n))
+      // verify candidates with exact Jaccard over the shingle arrays
+      cands
+        .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
+        .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
+        .select(col("d1"), col("d2"),
+          (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
+            size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+    }
 
   /** Exact containment + jaccard scored on a CANDIDATE pair set only —
     * the scale path for superset/excerpt detection. `candidates` is any

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.{Preference, ScaleQueries}
 import graft.scale.{Bounded, Similarity}
@@ -93,6 +96,48 @@ class BoundedSpec extends AnyFunSuite {
         assert(fastDfs.forall(kernel), s"$site: fast path not taken on $input")
         assert(!fallbackDfs.exists(kernel), s"$site: forced fallback took the kernel on $input")
       }
+    }
+
+  /** `body`'s result and the lower-cased executed plan of every query it
+    * ran, eager checkpoints and cache builds included.
+    */
+  private def executedPlans[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString.toLowerCase)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, plans.toArray.map(_.toString).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The LSH near-dup gates (budget Dedup.MaxGroup documents): the fast
+    * path is the exact shingle tier, the fallback runs the LSH band
+    * self-join — the only plan holding the BandAgreeMask kernel.
+    */
+  private val lshSites: Seq[(String, String => DataFrame)] = Seq(
+    ("containmentLsh", d => ScaleQueries.containmentLsh(spark, d)),
+    ("minhashDupPairs", d => ScaleQueries.dupClustersLsh(spark, d)))
+
+  for ((site, run) <- lshSites; (input, dir) <- inputs)
+    test(s"$site: fast path ≡ forced fallback on the $input input") {
+      val (fast, fastPlans) = executedPlans(rows(run(dir())))
+      val (fallback, fallbackPlans) =
+        Gates.withFallback(spark)(executedPlans(rows(run(dir()))))
+      assert(fast == fallback,
+        s"$site diverges on $input: fast-only ${(fast -- fallback).take(3)}, " +
+          s"fallback-only ${(fallback -- fast).take(3)}")
+      if (input == "sf0.001") assert(fast.nonEmpty, s"$site: vacuous on $input")
+      assert(!fastPlans.exists(_.contains("bandagreemask")),
+        s"$site: fast path ran the LSH band self-join on $input")
+      assert(fallbackPlans.exists(_.contains("bandagreemask")),
+        s"$site: forced fallback skipped the LSH band self-join on $input")
     }
 
   test("the gate takes the fast path only when 0 < budget and n <= budget") {

@@ -16,8 +16,10 @@ class ScaleSpec extends AnyFunSuite {
   test("minhash+LSH finds exactly the exact-Jaccard near-dup pairs") {
     val exact = ScaleQueries.jaccardPairs(spark, sf)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = ScaleQueries.minhashPairs(spark, sf)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // forced past the corpus-size gate: below Dedup.MaxGroup documents
+    // the query runs the exact tier itself
+    val approx = Gates.withFallback(spark)(ScaleQueries.minhashPairs(spark, sf)
+      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // verification filters candidates by TRUE Jaccard >= 0.5, so
     // approx ⊆ exact always; the planted dups (j≈0.99) must all be found
     assert(approx.subsetOf(exact))
@@ -75,7 +77,8 @@ class ScaleSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1),
         r.getAs[Double]("containment"), r.getAs[Double]("jaccard"))).toSet
     val exact = key(ScaleQueries.containmentPairs(spark, sf))
-    val lsh = key(ScaleQueries.containmentLsh(spark, sf))
+    // forced past the corpus-size gate to the candidate tiers
+    val lsh = Gates.withFallback(spark)(key(ScaleQueries.containmentLsh(spark, sf)))
     assert(exact.nonEmpty)
     assert(lsh == exact,
       s"winnow path diverges: missed ${(exact -- lsh).take(5)}, extra ${(lsh -- exact).take(5)}")
@@ -228,22 +231,24 @@ class ScaleSpec extends AnyFunSuite {
   test("LSH-driven clustering equals the exact-Jaccard clustering") {
     // LSH recall is exact on testdata (asserted above), so the flagship
     // scale path must produce the IDENTICAL cluster and canonical sets.
+    // The LSH side is forced past the corpus-size gate, which would
+    // otherwise send testdata to the exact tier itself.
     val exactClusters = ScaleQueries.dupClusters(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshClusters = ScaleQueries.dupClustersLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lshClusters = Gates.withFallback(spark)(ScaleQueries.dupClustersLsh(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(lshClusters == exactClusters)
     assert(lshClusters.nonEmpty)
     val exactCanonical = ScaleQueries.canonicalDocs(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val lshCanonical = ScaleQueries.canonicalDocsLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val lshCanonical = Gates.withFallback(spark)(ScaleQueries.canonicalDocsLsh(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
     assert(lshCanonical == exactCanonical)
     // the size histogram over those clusters must then also agree
     val exactStats = graft.analytics.CorpusQueries.dupStats(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val lshStats = graft.analytics.CorpusQueries.dupStatsLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val lshStats = Gates.withFallback(spark)(graft.analytics.CorpusQueries.dupStatsLsh(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
     assert(lshStats == exactStats)
     assert(lshStats.nonEmpty)
   }
