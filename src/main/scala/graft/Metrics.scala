@@ -163,17 +163,20 @@ object Metrics {
     * the scrape endpoint made oracle-checkable. The listener bus is
     * drained before the recorder attaches: an earlier query's event still
     * queued would otherwise reach it first and be reported as region's
-    * row count.
+    * row count. Both waits are bounded by `waitMs`; a bus still backed up
+    * after it fails the query (ListenerBusDrain names the backlog) rather
+    * than risk reporting another query's rows.
     */
   def runMetrics(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    val waitMs = 30_000L
+    org.apache.spark.ListenerBusDrain(spark.sparkContext, waitMs)
     val r = attach(spark)
     val entries = try {
       Tables.region(spark, dir).collect()
       Tables.nation(spark, dir).collect()
       // listener-bus delivery is async; poll until both land (bounded)
-      val deadline = System.nanoTime() + 30_000_000_000L
+      val deadline = System.nanoTime() + waitMs * 1_000_000L
       while (r.snapshot().size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
       r.snapshot()
     } finally detach(spark, r)

@@ -440,10 +440,11 @@ object CorpusAudit {
     * candidate set only), NOT the corpus-quadratic shingle self-join; the
     * sweep itself is one explode over six literals + two tiny aggregates.
     * Oracle: the exact-Jaccard pair relation (same argument as
-    * q_minhash_pairs — corpora up to Dedup.MaxGroup documents take the
-    * exact tier through the minhashDupPairs gate; past it precision is
-    * exact by construction and recall set-equality against the exact
-    * tier is pinned by RegimeSpec at sf0.1).
+    * q_minhash_pairs — a corpus whose shingle pair expansion fits
+    * Dedup.MaxGroupPairs takes the exact tier through the minhashDupPairs
+    * gate; past it precision is exact by construction and recall
+    * set-equality against the exact tier is pinned, the gate forced, by
+    * ScaleSpec at sf0.001 and sf0.01 and RegimeSpec at sf0.1).
     */
   def dupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

@@ -495,12 +495,13 @@ object CorpusQueries {
     * q_dup_clusters_lsh / q_canonical_docs_lsh. At 100 TB the exact
     * tier's Σ C(df,2) pair expansion is the scale-killer; this path
     * shuffles only signatures and band buckets. Carries the exact
-    * tier's oracle SQL: a corpus of at most Dedup.MaxGroup documents
-    * takes the exact tier outright (the minhashDupPairs gate), and past
-    * it LSH candidates are exact-verified (precision exact by
-    * construction) with recall pinned set-equal by RegimeSpec at sf0.1,
-    * so the cluster relation — and hence this histogram — equals the
-    * exact tier's.
+    * tier's oracle SQL: a corpus whose shingle pair expansion fits
+    * Dedup.MaxGroupPairs takes the exact tier outright (the
+    * minhashDupPairs gate), and past it LSH candidates are exact-verified
+    * (precision exact by construction) with recall pinned set-equal, the
+    * gate forced, by ScaleSpec at sf0.001 and sf0.01 and RegimeSpec at
+    * sf0.1, so the cluster relation — and hence this histogram — equals
+    * the exact tier's.
     */
   def dupStatsLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

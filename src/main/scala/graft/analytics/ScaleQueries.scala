@@ -124,8 +124,9 @@ object ScaleQueries {
     * high-resemblance crowd pairs the minhash half already catches.
     * Below the cap live the doc-SPECIFIC runs (an excerpt shares its
     * parent's doc-specific windows at df≈2), 12.8M pre-fold rows at
-    * sf10. The split premise is certified where the oracle can check
-    * (ScaleSpec equality vs the exact tier at three gate scales).
+    * sf10. The split premise is certified where the oracle can check:
+    * equality with the exact tier, the gate forced to these tiers, in
+    * ScaleSpec at sf0.001 and sf0.01 and in RegimeSpec at sf0.1.
     *
     * RE-MEASURE AT THE NEXT CORPUS DECADE (the BASELINE.md minhash-perms
     * rule): the rarest-probe ceiling (rdf ≤ Dedup.MaxGroup, see
@@ -163,18 +164,22 @@ object ScaleQueries {
     * structural, not a density accident (the default (4,5) guarantee
     * starts at 8 words and measurably missed two 7-word excerpts).
     *
-    * Gated on the augmented corpus size: at most [[Dedup.MaxGroup]] rows
-    * (the row count is the certificate) take the exact tier
-    * [[containmentPairs]], whose df cap cannot bind below that size — the
-    * same pairs, doubles and rounding, without the tiers' fixed cost of
-    * checkpoints, band self-join and winnow passes. So the exact tier's
-    * oracle SQL is exact by construction on small corpora; past the
-    * budget it rests on the premise that the verified pair set equals the
-    * exact tier's, which RegimeSpec asserts at sf0.1 and ScaleSpec at
-    * sf0.001 with the gate forced to these tiers (the q_heavy_hitters rule).
+    * Gated on the exact tier's own cost: when the augmented corpus's
+    * 3-shingle pair expansion [[Dedup.pairExpansion]] is at most
+    * [[Dedup.MaxGroupPairs]], the exact tier [[containmentPairs]] runs —
+    * no shingle then has df > Dedup.MaxGroup, so its df cap drops nothing
+    * and the pairs, doubles and rounding are the same, without the tiers'
+    * fixed cost of checkpoints, band self-join and winnow passes. So the
+    * exact tier's oracle SQL is exact by construction within the budget;
+    * past it (sf0.1 and up, or a corpus of mass duplication) it rests on
+    * the premise that the verified pair set equals the exact tier's,
+    * which ScaleSpec asserts at sf0.001 and sf0.01 and RegimeSpec at
+    * sf0.1, each with the gate forced to these tiers (the q_heavy_hitters
+    * rule).
     */
   def containmentLsh(spark: SparkSession, dir: String): DataFrame =
-    Bounded(spark, Dedup.MaxGroup)(docsWithPrefixes(spark, dir).count())(
+    Bounded(spark, Dedup.MaxGroupPairs)(
+      Dedup.pairExpansion(docsWithPrefixes(spark, dir), "text", 3))(
       containmentPairs(spark, dir))(containmentTiers(spark, dir))
 
   /** [[containmentLsh]]'s candidate tiers, the path past its budget. */
@@ -384,9 +389,11 @@ object ScaleQueries {
 
   /** MinHash+LSH near-dup pairs — the linear-ish scale path. xxhash64
     * seeding is engine-specific, so the signatures have no SQL analog;
-    * the pairs carry the exact tier's oracle because corpora up to
-    * Dedup.MaxGroup documents take the exact tier (the minhashDupPairs
-    * gate) and, past it, RegimeSpec asserts LSH recall equals it at sf0.1.
+    * the pairs carry the exact tier's oracle because a corpus whose
+    * shingle pair expansion fits Dedup.MaxGroupPairs takes the exact tier
+    * (the minhashDupPairs gate) and, past it, ScaleSpec (sf0.001, sf0.01)
+    * and RegimeSpec (sf0.1) assert with the gate forced that LSH recall
+    * equals it.
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashDupPairs(Tables.documents(spark, dir), "text", "doc_id", 3, 0.5)
@@ -401,16 +408,17 @@ object ScaleQueries {
     * quadratic in duplication — while this path shuffles only signatures
     * and band buckets. xxhash64 seeding is engine-specific, so the
     * SIGNATURES have no SQL analog — but the composed RESULT does: a
-    * corpus of at most Dedup.MaxGroup documents takes the exact tier
-    * outright (the minhashDupPairs gate, exact by construction), and past
-    * it LSH candidates are exact-verified (precision exact by
-    * construction) with recall pinned equal to the exact tier by
-    * RegimeSpec at sf0.1 — recall is cardinality-dependent, so it is
-    * asserted where cardinality grows (the q_heavy_hitters rule). So the
-    * cluster and canonical relations equal the exact tier's and these
-    * queries carry the exact tier's oracle SQL. Deterministic (fixed
-    * seeds, fixed gate data), so the oracle row can't flake; ScaleSpec
-    * pins the forced LSH path at sf0.001.
+    * corpus whose shingle pair expansion fits Dedup.MaxGroupPairs takes
+    * the exact tier outright (the minhashDupPairs gate, exact by
+    * construction), and past it LSH candidates are exact-verified
+    * (precision exact by construction) with recall pinned equal to the
+    * exact tier by RegimeSpec at sf0.1 — recall is cardinality-dependent,
+    * so it is asserted where cardinality grows (the q_heavy_hitters
+    * rule). So the cluster and canonical relations equal the exact
+    * tier's and these queries carry the exact tier's oracle SQL.
+    * Deterministic (fixed seeds, fixed gate data), so the oracle row
+    * can't flake; ScaleSpec pins the forced LSH path at sf0.001 and
+    * sf0.01.
     */
   def dupClustersLsh(spark: SparkSession, dir: String): DataFrame =
     Dedup.dupClusters(
@@ -4389,16 +4397,18 @@ object ScaleQueries {
     Op("q_dedup_exact", dedupExact, dedupExactSql),
     Op("q_jaccard_pairs", jaccardPairs, jaccardPairsSql),
     Op("q_containment_pairs", containmentPairs, containmentPairsSql),
-    // scale-path sibling: corpora up to Dedup.MaxGroup rows run the exact
-    // tier itself, larger ones the candidate tiers whose pair set equals
-    // it (see containmentLsh), so it carries the exact tier's oracle verbatim
+    // scale-path sibling: a corpus whose pair expansion fits the gate runs
+    // the exact tier itself, any other the candidate tiers whose pair set
+    // equals it (see containmentLsh), so it carries the exact tier's oracle
+    // verbatim
     Op("q_containment_lsh", containmentLsh, containmentPairsSql),
     Op("q_dup_clusters", dupClusters, dupClustersSql),
-    // The LSH tier carries the EXACT tier's oracle SQL: corpora up to
-    // Dedup.MaxGroup documents run the exact tier itself (the
+    // The LSH tier carries the EXACT tier's oracle SQL: a corpus whose
+    // pair expansion fits the gate runs the exact tier itself (the
     // minhashDupPairs gate); past it candidates are exact-verified and
-    // RegimeSpec pins recall at sf0.1, so the composed relations are
-    // equal — and deterministic, so the rows can't flake. See dupClustersLsh.
+    // ScaleSpec/RegimeSpec pin recall with the gate forced, so the composed
+    // relations are equal — and deterministic, so the rows can't flake.
+    // See dupClustersLsh.
     Op("q_dup_clusters_lsh", dupClustersLsh, dupClustersSql),
     Op("q_canonical_docs_lsh", canonicalDocsLsh, canonicalDocsSql),
     Op("q_minhash_pairs", minhashPairs, jaccardPairsSql),

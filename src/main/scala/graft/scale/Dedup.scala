@@ -70,6 +70,24 @@ object Dedup {
     */
   val MaxGroup = 1000
 
+  /** C(MaxGroup, 2): the pair expansion of one shingle at the df cap,
+    * derived from MaxGroup rather than set on its own. Budget of the LSH
+    * entry points' gate on [[pairExpansion]].
+    */
+  val MaxGroupPairs: Long = MaxGroup.toLong * (MaxGroup - 1) / 2
+
+  /** Σ C(df, 2) over the distinct n-shingles of `docs`: the pair rows the
+    * exact tier's inverted index enumerates before its pair aggregate,
+    * and so its cost — quadratic in duplication, not in row count. One
+    * shingling pass and one aggregate; summed as a double so a hot
+    * corpus cannot overflow (Double.toLong saturates).
+    */
+  def pairExpansion(docs: DataFrame, textCol: String, n: Int): Long =
+    docs.select(explode(shingleHashes(col(textCol), n)).as("s"))
+      .groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .agg(coalesce(sum(col("df").cast("double") * (col("df") - 1) / 2), lit(0.0)))
+      .head().getDouble(0).toLong
+
   /** Exact n-gram Jaccard pairs ≥ threshold via shingle inverted index.
     * O(candidate pairs); run on bounded corpora or post-LSH candidates.
     *
@@ -457,22 +475,24 @@ object Dedup {
   /** Full MinHash near-dup pipeline: shingle → sign → band → candidates →
     * exact-verify Jaccard on candidates only.
     *
-    * Gated on the corpus size: at most [[MaxGroup]] documents (the row
-    * count is the certificate) take the exact tier [[jaccardPairs]]
-    * instead. No shingle's df can exceed the row count, so the df cap
-    * drops nothing and the exact tier returns the all-pairs answer — the
-    * same d1 < d2 pairs and the same c / (n1 + n2 - c) doubles the
-    * verification computes as |∩| / |∪| — without the banding pipeline's
-    * fixed cost (eager signature checkpoint, over-cap census, band
-    * self-join), which dominates organic corpora of that size. Under mass
-    * duplication the exact tier's Σ C(df,2) expansion is the larger cost,
-    * still bounded by C(MaxGroup, 2) pairs per shingle. Past the budget the LSH
-    * tiers run; RegimeSpec pins their recall against the exact tier at
-    * sf0.1 and ScaleSpec/BoundedSpec pin the forced LSH path at sf0.001.
+    * Gated on the exact tier's own cost: when the shingle index's pair
+    * expansion [[pairExpansion]] is at most [[MaxGroupPairs]] (the
+    * certificate), the exact tier [[jaccardPairs]] runs instead. No
+    * shingle can then have df > MaxGroup, so the df cap drops nothing and
+    * the exact tier returns the all-pairs answer — the same d1 < d2 pairs
+    * and the same c / (n1 + n2 - c) doubles the verification computes as
+    * |∩| / |∪| — without the banding pipeline's fixed cost (eager
+    * signature checkpoint, over-cap census, band self-join), which
+    * dominates a corpus of a few hundred organic documents. A corpus of
+    * mass duplication (1 000 copies of one 99-word document: 97 ×
+    * C(1000, 2) pairs) fails the certificate at any row count and keeps
+    * the LSH tiers, which fold copies into shared buckets. Past the
+    * budget, RegimeSpec pins LSH recall against the exact tier at sf0.1
+    * and ScaleSpec at sf0.001 and sf0.01, with the gate forced.
     */
   def minhashDupPairs(docs: DataFrame, textCol: String, keyCol: String,
       n: Int, threshold: Double): DataFrame =
-    Bounded(docs.sparkSession, MaxGroup)(docs.count())(
+    Bounded(docs.sparkSession, MaxGroupPairs)(pairExpansion(docs, textCol, n))(
       jaccardPairs(docs, textCol, keyCol, n, threshold)) {
       val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
       val cands = lshCandidates(minhashSignatures(docs, textCol, keyCol, n))

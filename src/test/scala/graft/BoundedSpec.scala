@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.{Preference, ScaleQueries}
-import graft.scale.{Bounded, Similarity}
+import graft.scale.{Bounded, Dedup, Similarity}
 
 /** Test helpers for the certified-bounded gates ([[graft.scale.Bounded]]). */
 object Gates {
@@ -47,6 +47,17 @@ class BoundedSpec extends AnyFunSuite {
   lazy val single = Gates.truncatedCopy(spark, sf, 1, tables: _*)
   private val inputs: Seq[(String, () => String)] =
     Seq("sf0.001" -> (() => sf), "empty" -> (() => empty), "single-row" -> (() => single))
+  /** 150 copies of sf0.001's longest document: far under Dedup.MaxGroup
+    * rows, yet its pair expansion is past Dedup.MaxGroupPairs.
+    */
+  lazy val copies: String = {
+    val out = java.nio.file.Files.createTempDirectory("graft_copies").toString
+    Tables.documents(spark, sf).orderBy(length(col("text")).desc, col("doc_id")).limit(1)
+      .crossJoin(spark.range(150).select(col("id").as("copy")))
+      .withColumn("doc_id", col("copy")).drop("copy")
+      .write.parquet(s"$out/documents.parquet")
+    out
+  }
 
   private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
@@ -108,37 +119,57 @@ class BoundedSpec extends AnyFunSuite {
         plans.add(qe.executedPlan.toString.toLowerCase)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBusDrain(spark.sparkContext)
+    ListenerBusDrain(spark.sparkContext, 30_000L)
     spark.listenerManager.register(listener)
     try {
       val out = body
-      ListenerBusDrain(spark.sparkContext)
+      ListenerBusDrain(spark.sparkContext, 30_000L)
       (out, plans.toArray.map(_.toString).toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** The LSH near-dup gates (budget Dedup.MaxGroup documents): the fast
-    * path is the exact shingle tier, the fallback runs the LSH band
-    * self-join — the only plan holding the BandAgreeMask kernel.
+  /** The LSH near-dup gates (budget Dedup.MaxGroupPairs of shingle pair
+    * expansion) with the exact-tier query each must equal: the fast path
+    * is that exact tier, the fallback runs the LSH band self-join — the
+    * only plan holding the BandAgreeMask kernel.
     */
-  private val lshSites: Seq[(String, String => DataFrame)] = Seq(
-    ("containmentLsh", d => ScaleQueries.containmentLsh(spark, d)),
-    ("minhashDupPairs", d => ScaleQueries.dupClustersLsh(spark, d)))
+  private val lshSites: Seq[(String, String => DataFrame, String => DataFrame)] = Seq(
+    ("containmentLsh", d => ScaleQueries.containmentLsh(spark, d),
+      d => ScaleQueries.containmentPairs(spark, d)),
+    ("minhashDupPairs", d => ScaleQueries.dupClustersLsh(spark, d),
+      d => ScaleQueries.dupClusters(spark, d)))
 
-  for ((site, run) <- lshSites; (input, dir) <- inputs)
+  // the copies input is under Dedup.MaxGroup rows but past the pair
+  // budget, so both runs take the LSH tiers
+  for ((site, run, exact) <- lshSites;
+       (input, dir) <- inputs :+ ("copies" -> (() => copies)))
     test(s"$site: fast path ≡ forced fallback on the $input input") {
+      val pastBudget = input == "copies"
       val (fast, fastPlans) = executedPlans(rows(run(dir())))
       val (fallback, fallbackPlans) =
         Gates.withFallback(spark)(executedPlans(rows(run(dir()))))
       assert(fast == fallback,
         s"$site diverges on $input: fast-only ${(fast -- fallback).take(3)}, " +
           s"fallback-only ${(fallback -- fast).take(3)}")
-      if (input == "sf0.001") assert(fast.nonEmpty, s"$site: vacuous on $input")
-      assert(!fastPlans.exists(_.contains("bandagreemask")),
-        s"$site: fast path ran the LSH band self-join on $input")
+      assert(fast == rows(exact(dir())), s"$site differs from the exact tier on $input")
+      if (input == "sf0.001" || pastBudget) assert(fast.nonEmpty, s"$site: vacuous on $input")
+      assert(fastPlans.exists(_.contains("bandagreemask")) == pastBudget,
+        s"$site: fast run ${if (pastBudget) "skipped" else "ran"} the LSH band self-join on $input")
       assert(fallbackPlans.exists(_.contains("bandagreemask")),
         s"$site: forced fallback skipped the LSH band self-join on $input")
     }
+
+  test("pairExpansion is Σ C(df, 2) over each document's distinct shingles") {
+    import spark.implicits._
+    // 3-shingles: "a b c" in all three docs (df 3), "b c d" in two (df 2),
+    // the rest once; doc 1's repeated "a b c" counts once
+    val docs = Seq((1L, "a b c a b c d"), (2L, "a b c d"), (3L, "a b c e"))
+      .toDF("doc_id", "text")
+    assert(Dedup.pairExpansion(docs, "text", 3) == 3 + 1)
+    assert(Dedup.pairExpansion(docs.limit(0), "text", 3) == 0)
+    assert(Dedup.MaxGroupPairs == 499500L)
+    assert(Dedup.pairExpansion(Tables.documents(spark, copies), "text", 3) > Dedup.MaxGroupPairs)
+  }
 
   test("the gate takes the fast path only when 0 < budget and n <= budget") {
     def gate(budget: Long, n: => Long) = Bounded(spark, budget)(n)("fast")("fallback")

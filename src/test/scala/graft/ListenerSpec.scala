@@ -17,7 +17,7 @@ class ListenerSpec extends AnyFunSuite {
     * first (seen: a `count()`'s rowsOut of 1 read as this test's query).
     */
   private def attachFresh(): Metrics.Recorder = {
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    org.apache.spark.ListenerBusDrain(spark.sparkContext, 30_000L)
     Metrics.attach(spark)
   }
 

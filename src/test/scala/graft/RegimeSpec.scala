@@ -112,8 +112,8 @@ class RegimeSpec extends AnyFunSuite {
     // true Jaccard); recall is probabilistic and cardinality-dependent —
     // exactly what must be measured HERE, not at sf0.001 (ScaleSpec).
     // Pair-equality implies cluster- and histogram-equality downstream.
-    // Forced past the corpus-size gate, so the check keeps testing LSH
-    // should this corpus ever fit under Dedup.MaxGroup documents.
+    // Forced past the pair-budget gate, so the check keeps testing LSH
+    // should this corpus's pair expansion ever fit Dedup.MaxGroupPairs.
     val exact = ScaleQueries.jaccardPairs(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard"))).toSet
     val lsh = Gates.withFallback(spark)(ScaleQueries.minhashPairs(spark, sf)
@@ -125,7 +125,7 @@ class RegimeSpec extends AnyFunSuite {
 
   test("q_containment_lsh: winnow-candidate containment equals the exact tier at sf0.1") {
     val exact = pairSet(ScaleQueries.containmentPairs(spark, sf))
-    // forced past the corpus-size gate to the candidate tiers
+    // forced past the pair-budget gate to the candidate tiers
     val lsh = Gates.withFallback(spark)(pairSet(ScaleQueries.containmentLsh(spark, sf)))
     assert(exact.nonEmpty)
     assert(lsh == exact,

@@ -116,12 +116,13 @@ class RegistrySweepSpec extends AnyFunSuite {
       // the kNN edges now come from the checkpointed cell-table kernel,
       // so only the kmeans seed scan + the score-side embedding read
       // remain (2, the unpinned default).
-      ("q_minhash_pairs", "documents") -> (2, "testdata is under the " +
-        "Dedup.MaxGroup corpus-size gate, so this runs the exact tier: one " +
-        "shingling scan. Past the gate (r9 emit-once banding) the signature " +
-        "pass sits behind lshCandidates' eager checkpoint and the two " +
-        "verify-side shingle reads share one exchange via ReuseExchange — " +
-        "pinned ≤ 2 so an AQE reuse regression is named here"),
+      ("q_minhash_pairs", "documents") -> (2, "testdata's shingle pair " +
+        "expansion fits the gate's Dedup.MaxGroupPairs budget, so this runs " +
+        "the exact tier: one shingling scan. Past the gate (r9 emit-once " +
+        "banding) the signature pass sits behind lshCandidates' eager " +
+        "checkpoint and the two verify-side shingle reads share one " +
+        "exchange via ReuseExchange — pinned ≤ 2 so an AQE reuse " +
+        "regression is named here"),
       ("q_span_dedup", "documents") -> (3, gateChain),
       ("q_dup_runs", "documents") -> (3, gateChain),
       ("q_ngram_diversity", "documents") -> (3, gateChain),

@@ -12,19 +12,24 @@ import graft.scale.SimHash64
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = Spark.session
   val sf = "/root/testdata/sf0.001"
+  /** The oracle-gate scales. Their corpora fit the LSH near-dup gate's
+    * pair budget, so Verify checks the exact tier there; the LSH-tier
+    * equalities below force the gate and run at both (sf0.1: RegimeSpec).
+    */
+  val gateScales = Seq(sf, "/root/testdata/sf0.01")
 
   test("minhash+LSH finds exactly the exact-Jaccard near-dup pairs") {
-    val exact = ScaleQueries.jaccardPairs(spark, sf)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // forced past the corpus-size gate: below Dedup.MaxGroup documents
-    // the query runs the exact tier itself
-    val approx = Gates.withFallback(spark)(ScaleQueries.minhashPairs(spark, sf)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    // verification filters candidates by TRUE Jaccard >= 0.5, so
-    // approx ⊆ exact always; the planted dups (j≈0.99) must all be found
-    assert(approx.subsetOf(exact))
-    assert(exact.nonEmpty)
-    assert(approx == exact, s"LSH missed ${exact -- approx}")
+    for (dir <- gateScales) {
+      val exact = ScaleQueries.jaccardPairs(spark, dir)
+        .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val approx = Gates.withFallback(spark)(ScaleQueries.minhashPairs(spark, dir)
+        .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      // verification filters candidates by TRUE Jaccard >= 0.5, so
+      // approx ⊆ exact always; the planted dups (j≈0.99) must all be found
+      assert(approx.subsetOf(exact), dir)
+      assert(exact.nonEmpty, dir)
+      assert(approx == exact, s"LSH missed ${exact -- approx} at $dir")
+    }
   }
 
   test("simhash LSH pairs cover the planted near-dups") {
@@ -76,12 +81,13 @@ class ScaleSpec extends AnyFunSuite {
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1),
         r.getAs[Double]("containment"), r.getAs[Double]("jaccard"))).toSet
-    val exact = key(ScaleQueries.containmentPairs(spark, sf))
-    // forced past the corpus-size gate to the candidate tiers
-    val lsh = Gates.withFallback(spark)(key(ScaleQueries.containmentLsh(spark, sf)))
-    assert(exact.nonEmpty)
-    assert(lsh == exact,
-      s"winnow path diverges: missed ${(exact -- lsh).take(5)}, extra ${(lsh -- exact).take(5)}")
+    for (dir <- gateScales) {
+      val exact = key(ScaleQueries.containmentPairs(spark, dir))
+      val lsh = Gates.withFallback(spark)(key(ScaleQueries.containmentLsh(spark, dir)))
+      assert(exact.nonEmpty, dir)
+      assert(lsh == exact, s"winnow path diverges at $dir: " +
+        s"missed ${(exact -- lsh).take(5)}, extra ${(lsh -- exact).take(5)}")
+    }
   }
 
   test("triangles: K4, path, and K4-minus-an-edge fixtures count exactly") {
@@ -231,26 +237,28 @@ class ScaleSpec extends AnyFunSuite {
   test("LSH-driven clustering equals the exact-Jaccard clustering") {
     // LSH recall is exact on testdata (asserted above), so the flagship
     // scale path must produce the IDENTICAL cluster and canonical sets.
-    // The LSH side is forced past the corpus-size gate, which would
-    // otherwise send testdata to the exact tier itself.
-    val exactClusters = ScaleQueries.dupClusters(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshClusters = Gates.withFallback(spark)(ScaleQueries.dupClustersLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    assert(lshClusters == exactClusters)
-    assert(lshClusters.nonEmpty)
-    val exactCanonical = ScaleQueries.canonicalDocs(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val lshCanonical = Gates.withFallback(spark)(ScaleQueries.canonicalDocsLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
-    assert(lshCanonical == exactCanonical)
-    // the size histogram over those clusters must then also agree
-    val exactStats = graft.analytics.CorpusQueries.dupStats(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val lshStats = Gates.withFallback(spark)(graft.analytics.CorpusQueries.dupStatsLsh(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
-    assert(lshStats == exactStats)
-    assert(lshStats.nonEmpty)
+    // The LSH side is forced past the gate, which would otherwise send
+    // testdata to the exact tier itself.
+    for (dir <- gateScales) {
+      val exactClusters = ScaleQueries.dupClusters(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val lshClusters = Gates.withFallback(spark)(ScaleQueries.dupClustersLsh(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(lshClusters == exactClusters, dir)
+      assert(lshClusters.nonEmpty, dir)
+      val exactCanonical = ScaleQueries.canonicalDocs(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      val lshCanonical = Gates.withFallback(spark)(ScaleQueries.canonicalDocsLsh(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
+      assert(lshCanonical == exactCanonical, dir)
+      // the size histogram over those clusters must then also agree
+      val exactStats = graft.analytics.CorpusQueries.dupStats(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val lshStats = Gates.withFallback(spark)(graft.analytics.CorpusQueries.dupStatsLsh(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+      assert(lshStats == exactStats, dir)
+      assert(lshStats.nonEmpty, dir)
+    }
   }
 
   test("TopKAgg equals the window formulation, including under many partitions") {
