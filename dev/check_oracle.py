@@ -50,7 +50,7 @@ def main(sf_dir, out_dir, only=None, skip=None):
     for name, sql in sorted(oracle.items()):
         # `only` entries are substrings; a '=' prefix demands an EXACT
         # match (dev/sweep_sf1.sh re-runs one heavy oracle per process —
-        # a substring would drag q_dup_stats_lsh into q_dup_stats' run)
+        # a substring would drag q_dbscan_stats into q_dbscan's run)
         if only and not any(
                 (o[1:] == name if o.startswith("=") else o in name)
                 for o in only):
@@ -117,8 +117,8 @@ if __name__ == "__main__":
     # matching queries (fresh-process reruns of resource-failed oracles).
     # optional 4th arg: comma-separated EXACT names to skip — the
     # spill-prone oracle families dev/sweep_sf1.sh re-runs in their own
-    # DuckDB process (exact-name so a skip can never swallow an LSH
-    # sibling via substring match; empty string = no filter).
+    # DuckDB process (exact-name so a skip can never swallow another
+    # query whose name contains it; empty string = no filter).
     only = sys.argv[3].split(",") if len(sys.argv) > 3 and sys.argv[3] else None
     skip = set(sys.argv[4].split(",")) if len(sys.argv) > 4 and sys.argv[4] else None
     sys.exit(main(sys.argv[1], sys.argv[2], only, skip))

@@ -30,14 +30,15 @@ OUT="${2:-/tmp/verify_sf1}"
 # each main reads it through graft.Sessions.cpus, whose default is 4
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 
-# DuckDB-heavy oracles: the exact-dup closure chains and the graph/
-# markov CTE stacks (AS MATERIALIZED since r9, but their evaluate-once
+# DuckDB-heavy oracles: every query carrying the exact near-dup pair or
+# closure SQL (the shingle self-join chains) and the graph/markov CTE
+# stacks (AS MATERIALIZED since r9, but their evaluate-once
 # relations still spill GBs at sf1 row counts). q_dbscan/q_dbscan_stats
 # joined r10: their recursive min-label closure emits m^2 (node, label)
 # pairs per component, and ScaleUp's exact-copy embeddings merge the
 # eps-blobs into one ~0.9n-core component at sf1.
-HEAVY="q_dup_stats q_dup_clusters q_canonical_docs q_jaccard_pairs \
-q_containment_pairs q_containment_lsh q_source_overlap q_triangle_count \
+HEAVY="q_dup_stats_lsh q_dup_clusters_lsh q_canonical_docs_lsh q_minhash_pairs \
+q_containment_lsh q_source_overlap q_triangle_count \
 q_attribution_markov q_pagerank q_dbscan q_dbscan_stats"
 
 if [ ! -e "$SF1/documents.parquet" ]; then
@@ -61,8 +62,8 @@ rc=$?
 echo "== sweep_sf1: heavy families, one DuckDB process each =="
 hfail=0
 for q in $HEAVY; do
-  # '=' prefix = exact name, so q_dup_stats' spill-prone run can never
-  # drag the scale-safe q_dup_stats_lsh into its process
+  # '=' prefix = exact name, so one heavy oracle's process can never
+  # drag in another query whose name contains it (q_dbscan, q_dbscan_stats)
   python3 dev/check_oracle.py "$SF1" "$OUT" "=$q" || hfail=1
 done
 

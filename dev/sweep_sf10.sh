@@ -7,10 +7,10 @@
 #   2. graft.PremiseCheck $SF10 — the DBSCAN quotient-occupancy and
 #      core-structure premises at the 100x corpus (cardinality regimes
 #      move with scale, not just rounding — the q_heavy_hitters rule).
-#   3. graft.Bench over the full registry MINUS the six exact-name
-#      bounded-verification quadratic-tier queries (documented
-#      out-of-regime at sf10; their LSH siblings run). Seed 42, reps 2,
-#      heavy-tail min-of-2-warm, artifact arm included since r12.
+#   3. graft.Bench over the full registry (every near-dup query goes
+#      through the shingle pair-expansion gate, so none runs the exact
+#      quadratic tier past its budget). Seed 42, reps 2, heavy-tail
+#      min-of-2-warm, artifact arm included since r12.
 #
 # Usage: dev/sweep_sf10.sh [sf10Dir] [outJson]
 set -uo pipefail
@@ -22,8 +22,6 @@ OUT="${2:-dev/bench_sf10_full.json}"
 # each main reads it through graft.Sessions.cpus, whose default is 4
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 
-SKIP="q_jaccard_pairs,q_canonical_docs,q_dup_clusters,q_dup_stats,q_source_overlap,q_containment_pairs"
-
 if [ ! -e "$SF10/documents.parquet" ]; then
   echo "== sweep_sf10: synthesizing $SF10 (ScaleUp 100x of sf0.1) =="
   sbt -batch "runMain graft.ScaleUp /root/testdata/sf0.1 $SF10 100" || exit 1
@@ -32,7 +30,7 @@ fi
 echo "== sweep_sf10: density data premises at 100x =="
 sbt -batch "runMain graft.PremiseCheck $SF10" || exit 1
 
-echo "== sweep_sf10: full-registry bench (skips: $SKIP) -> $OUT =="
+echo "== sweep_sf10: full-registry bench -> $OUT =="
 # 48 g driver heap: the sf10 corpus needs it (24 g default OOM'd the
 # q_containment_lsh warm rep mid-sweep on the first r12 attempt —
 # boxed shingle buffers across 32 executor threads; prior rounds'
@@ -40,7 +38,7 @@ echo "== sweep_sf10: full-registry bench (skips: $SKIP) -> $OUT =="
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
   SPARK_GRAFT_SF_DIR="$SF10" \
   SPARK_GRAFT_BENCH_SEED=42 SPARK_GRAFT_BENCH_REPS=2 \
-  SPARK_GRAFT_BENCH_SKIP="$SKIP" SPARK_GRAFT_BENCH_OUT="$OUT" \
+  SPARK_GRAFT_BENCH_OUT="$OUT" \
   SPARK_GRAFT_ART_DIR="$SF10/_bench_artifacts" \
   sbt -batch "runMain graft.Bench" || exit 1
 echo "== sweep_sf10: DONE ($OUT) =="

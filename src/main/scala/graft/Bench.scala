@@ -58,24 +58,11 @@ object Bench {
         Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
       }
     }
-    // SPARK_GRAFT_BENCH_ONLY (builder-only, comma-separated substrings)
-    // restricts the run to matching query names — used for targeted
-    // stress runs (e.g. the sf10 scale-family pass) where the exact
-    // quadratic verification tier would be run outside its documented
-    // bounded regime. The driver sets no filter and benches everything.
+    // SPARK_GRAFT_BENCH_ONLY (comma-separated substrings) restricts the
+    // run to matching query names — used for targeted runs (e.g. one
+    // query family at one scale). Unset, the whole registry runs.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    // SPARK_GRAFT_BENCH_SKIP (builder-only, comma-separated EXACT names)
-    // removes queries from a sweep. Exists for the full-registry sf10
-    // stress: the exact quadratic verification tier (q_jaccard_pairs,
-    // q_dup_clusters, ...) is documented bounded-verification-only and
-    // OOMs by design outside its regime — a sweep that dies there
-    // forfeits the timings of every query after it (two full-sweep
-    // attempts lost to q_dup_clusters at sf10). Skips are exact-name so
-    // a skip can never silently swallow a scale-safe LSH sibling
-    // (q_dup_clusters_lsh) via substring match. The driver sets no skip.
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").toSet.filter(_.nonEmpty)).getOrElse(Set.empty[String])
     // Seeded order shuffle: a fixed alphabetical order let every
     // host-noise window land on an alphabetically contiguous block of
     // queries, which reads exactly like a targeted regression (r7 q_p*,
@@ -136,13 +123,12 @@ object Bench {
     val registryTimings: Seq[(String, Seq[Either[String, Double]])] =
       rng.shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
         .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-        .filter { case (name, _) => !skip.contains(name) }
         .map { case (name, fn) => runOne(name, fn, minWarm = 0) }
     // Artifact arm (VERDICT r11 #1): the production-topology rows —
     // build each shared artifact once (its cost is a row), then the
     // Θ(artifact) consumer forms. Runs AFTER the shuffled registry
     // sweep, in declaration order (builds precede consumers — run order
-    // is semantic here, so no seed shuffle). Same only/skip filters so
+    // is semantic here, so no seed shuffle). Same only filter so
     // targeted stress runs stay targeted. Each row gets ≥2 warm samples
     // whatever its cold time: without the shuffle a host-noise window
     // can cover a contiguous run of art rows (r13: two phantom art
@@ -151,7 +137,6 @@ object Bench {
     val artifactTimings: Seq[(String, Seq[Either[String, Double]])] =
       Artifacts.phases(artBase)
         .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-        .filter { case (name, _) => !skip.contains(name) }
         .map { case (name, fn) => runOne(name, fn, minWarm = 2) }
     val timings = registryTimings ++ artifactTimings
     // Artifact order is sorted by name regardless of run order — the

@@ -460,20 +460,22 @@ object CorpusQueries {
   // ---------------------------------------------------------------------
 
   /** Duplicate-cluster size histogram over the near-dup graph (Jaccard ≥
-    * 0.5 — the exact tier the LSH flagship is verified against), plus the
-    * singleton balance: for each cluster size, how many clusters and docs.
-    * The dedup-rate dashboard row a corpus run reports. Costs one extra
-    * tiny aggregate on top of the already-built cluster relation (cluster
-    * ids are bounded by corpus size, the histogram by log of it).
+    * 0.5 through the Dedup.minhashDupPairs gate), plus the singleton
+    * balance: for each cluster size, how many clusters and docs. The
+    * dedup-rate dashboard row a corpus run reports. Costs one extra tiny
+    * aggregate on top of the cluster relation (cluster ids are bounded by
+    * corpus size, the histogram by log of it). The cluster relation is
+    * q_dup_clusters_lsh's, so this carries its exact answer's oracle SQL:
+    * a corpus whose shingle pair expansion fits Dedup.MaxGroupPairs takes
+    * the gate's fast path, the exact shingle tier, and past it LSH
+    * candidates are exact-verified (precision exact by construction) with
+    * recall pinned set-equal, the gate forced, by ScaleSpec at sf0.001
+    * and sf0.01 and RegimeSpec at sf0.1.
     */
-  def dupStats(spark: SparkSession, dir: String): DataFrame = {
+  def dupStatsLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    dupStatsFrom(docs, Dedup.dupClusters(
-      Dedup.jaccardPairs(docs, "text", "doc_id", 3, 0.5)))
-  }
-
-  /** Histogram body shared by the exact and LSH dup-stats tiers. */
-  private def dupStatsFrom(docs: DataFrame, clusters: DataFrame): DataFrame = {
+    val clusters = Dedup.dupClusters(
+      Dedup.minhashDupPairs(docs, "text", "doc_id", 3, 0.5))
     val sizes = clusters.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     val hist = sizes.groupBy(col("cluster_size")).agg(
@@ -487,26 +489,6 @@ object CorpusQueries {
       (col("total") - col("clustered")).as("n_clusters"),
       (col("total") - col("clustered")).as("n_docs"))
     hist.unionByName(singletons)
-  }
-
-  /** LSH-input dup-stats tier — the same histogram over clusters built
-    * from `Dedup.minhashDupPairs` banded candidates instead of the
-    * quadratic shingle self-join, completing the LSH family alongside
-    * q_dup_clusters_lsh / q_canonical_docs_lsh. At 100 TB the exact
-    * tier's Σ C(df,2) pair expansion is the scale-killer; this path
-    * shuffles only signatures and band buckets. Carries the exact
-    * tier's oracle SQL: a corpus whose shingle pair expansion fits
-    * Dedup.MaxGroupPairs takes the exact tier outright (the
-    * minhashDupPairs gate), and past it LSH candidates are exact-verified
-    * (precision exact by construction) with recall pinned set-equal, the
-    * gate forced, by ScaleSpec at sf0.001 and sf0.01 and RegimeSpec at
-    * sf0.1, so the cluster relation — and hence this histogram — equals
-    * the exact tier's.
-    */
-  def dupStatsLsh(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    dupStatsFrom(docs, Dedup.dupClusters(
-      Dedup.minhashDupPairs(docs, "text", "doc_id", 3, 0.5)))
   }
 
   // Reuses the exact-jaccard recursive-CTE cluster relation (see
@@ -925,7 +907,6 @@ object CorpusQueries {
     Op("q_budget_allocation", budgetAllocation, budgetAllocationSql),
     Op("q_keep_rate_ci", keepRateCi, keepRateCiSql),
     Op("q_ess_weights", essWeights, essWeightsSql),
-    Op("q_dup_stats", dupStats, dupStatsSql),
     Op("q_dup_stats_lsh", dupStatsLsh, dupStatsSql),
     Op("q_global_index", globalIndex, globalIndexSql),
     Op("q_exact_median", exactMedian, exactMedianSql),

@@ -128,18 +128,21 @@ object CorpusStats {
   // Cross-source near-duplicate overlap matrix.
   // ---------------------------------------------------------------------
 
-  /** Which sources duplicate each other: the exact Jaccard ≥ 0.5
-    * near-dup pairs rolled up to an unordered (source, source) matrix —
-    * the provenance dashboard a dedup run emits (mirror-site detection,
-    * crawl overlap). The pair relation is tiny relative to the corpus,
-    * so the two provenance joins shuffle pairs + a two-column id→source
-    * projection, never document text; the matrix itself is bounded by
-    * (sources choose 2).
+  /** Which sources duplicate each other: the Jaccard ≥ 0.5 near-dup
+    * pairs rolled up to an unordered (source, source) matrix — the
+    * provenance dashboard a dedup run emits (mirror-site detection, crawl
+    * overlap). The pairs come through the Dedup.minhashDupPairs gate
+    * (the exact shingle tier within its budget, exact-verified LSH
+    * candidates past it, pinned equal by RegimeSpec at sf0.1), so the
+    * exact answer's oracle holds at every scale. The pair relation is
+    * tiny relative to the corpus, so the two provenance joins shuffle
+    * pairs + a two-column id→source projection, never document text; the
+    * matrix itself is bounded by (sources choose 2).
     */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val srcs = docs.select(col("doc_id"), col("source"))
-    Dedup.jaccardPairs(docs, "text", "doc_id", 3, 0.5)
+    Dedup.minhashDupPairs(docs, "text", "doc_id", 3, 0.5)
       .join(srcs.select(col("doc_id").as("d1"), col("source").as("s1")), "d1")
       .join(srcs.select(col("doc_id").as("d2"), col("source").as("s2")), "d2")
       .select(least(col("s1"), col("s2")).as("src_a"),

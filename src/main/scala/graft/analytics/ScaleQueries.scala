@@ -8,10 +8,10 @@ import graft.functions.TextAnalysis
 
 /** Scale-tier queries: deduplication, similarity search, token/fingerprint
   * ops over `documents` and `embeddings` (the LLM-training-data operators
-  * of BASELINE.json's north star). SQL-expressible ops carry DuckDB
-  * oracles; hash-seeded ops (MinHash via xxhash64, SimHash) are rows-only
-  * and are instead cross-checked against their exact counterparts in
-  * ScaleSpec.
+  * of BASELINE.json's north star). Every query carries DuckDB oracle SQL;
+  * the hash-seeded tiers (MinHash via xxhash64) carry their exact answer's
+  * SQL, and ScaleSpec/RegimeSpec pin them against the exact tier with
+  * their gates forced.
   */
 object ScaleQueries {
 
@@ -38,8 +38,10 @@ object ScaleQueries {
        |FROM $docsWithCopiesSql d
        |GROUP BY md5(text) HAVING count(*) > 1""".stripMargin
 
-  /** Exact word-3-gram Jaccard near-dup pairs (quadratic baseline). */
-  def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
+  /** Exact word-3-gram Jaccard near-dup pairs: the spec reference LSH
+    * recall is pinned against (q_minhash_pairs runs it as its fast path).
+    */
+  private[graft] def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.jaccardPairs(Tables.documents(spark, dir), "text", "doc_id", 3, 0.5)
       .select(col("d1"), col("d2"), Num.r(col("jaccard"), 6).as("jaccard"))
 
@@ -109,8 +111,9 @@ object ScaleQueries {
   /** Containment (|A∩B| / min(|A|,|B|)) near-superset pairs ≥ 0.9 over
     * the prefix-augmented corpus; jaccard rides along so the report shows
     * which pairs a resemblance-thresholded pass would have missed.
+    * [[containmentLsh]]'s fast path and the spec reference for its tiers.
     */
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.containmentPairs(docsWithPrefixes(spark, dir), "text", "doc_id", 3, 0.9)
       .select(col("d1"), col("d2"),
         Num.r(col("containment"), 6).as("containment"),
@@ -325,17 +328,10 @@ object ScaleQueries {
        |JOIN sizes s2 ON d2 = s2.doc_id
        |WHERE CAST(c AS DOUBLE) / least(s1.n_sh, s2.n_sh) >= 0.9""".stripMargin
 
-  /** Dedup clusters: connected components over the exact near-dup pairs
-    * (keep min doc_id per cluster as canonical). Oracle: recursive-CTE
-    * transitive closure with min-reachable labels.
-    */
-  def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    Dedup.dupClusters(
-      Dedup.jaccardPairs(Tables.documents(spark, dir), "text", "doc_id", 3, 0.5))
-
   /** The full recursive-CTE prelude ending in a `clusters(doc_id,
-    * cluster_id)` relation — shared by the cluster/canonical oracles here
-    * and the dup-statistics oracle (CorpusQueries.dupStatsSql).
+    * cluster_id)` relation — transitive closure of the exact near-dup
+    * pairs with min-reachable labels, shared by the cluster/canonical
+    * oracles here and the dup-statistics oracle (CorpusQueries.dupStatsSql).
     */
   private[analytics] val dupClustersCteSql: String =
     s"""WITH RECURSIVE $jaccardCtesSql,
@@ -356,23 +352,6 @@ object ScaleQueries {
     s"""$dupClustersCteSql
        |SELECT doc_id, cluster_id FROM clusters""".stripMargin
 
-  /** Canonical-document selection per near-dup cluster: keep the
-    * highest-quality member, smallest doc_id on ties
-    * (Dedup.canonicalPerCluster — single hash aggregate, argmax as
-    * max(struct), no window). Oracle: the recursive-CTE clusters joined
-    * back to documents with the same completeness scoring, argmax via
-    * row_number.
-    */
-  def canonicalDocs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val clusters = Dedup.dupClusters(
-      Dedup.jaccardPairs(docs, "text", "doc_id", 3, 0.5))
-    Dedup.canonicalPerCluster(docs, clusters, "doc_id",
-        graft.functions.Scoring.completenessScore(col("text")))
-      .select(col("cluster_id"), col("canonical_doc_id"), col("n_members"),
-        Num.r(col("quality"), 4).as("quality"))
-  }
-
   val canonicalDocsSql: String =
     s"""$dupClustersCteSql,
        |scored AS (
@@ -387,38 +366,33 @@ object ScaleQueries {
        |      FROM scored)
        |WHERE rn = 1""".stripMargin
 
-  /** MinHash+LSH near-dup pairs — the linear-ish scale path. xxhash64
-    * seeding is engine-specific, so the signatures have no SQL analog;
-    * the pairs carry the exact tier's oracle because a corpus whose
-    * shingle pair expansion fits Dedup.MaxGroupPairs takes the exact tier
-    * (the minhashDupPairs gate) and, past it, ScaleSpec (sf0.001, sf0.01)
-    * and RegimeSpec (sf0.1) assert with the gate forced that LSH recall
-    * equals it.
+  /** Jaccard ≥ 0.5 near-dup pairs through the minhashDupPairs gate:
+    * a corpus whose shingle pair expansion fits Dedup.MaxGroupPairs takes
+    * the gate's fast path, the exact shingle tier; past it MinHash+LSH
+    * candidates are exact-verified. xxhash64 seeding is engine-specific,
+    * so the signatures have no SQL analog, but the pairs carry the exact
+    * answer's oracle: ScaleSpec (sf0.001, sf0.01) and RegimeSpec (sf0.1)
+    * assert with the gate forced that LSH recall equals it.
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashDupPairs(Tables.documents(spark, dir), "text", "doc_id", 3, 0.5)
       .select(col("d1"), col("d2"), Num.r(col("jaccard"), 6).as("jaccard"))
 
-  /** LSH-driven dedup clustering — the FLAGSHIP clustering path at scale.
-    * Same connected-components + canonical-selection composition as
-    * q_dup_clusters / q_canonical_docs, but the pair input is
-    * Dedup.minhashDupPairs (banded LSH candidates, exact-verified on the
-    * candidate set only) instead of the corpus-wide quadratic shingle
-    * self-join. At 100 TB the exact tier's total work is Σ C(df,2) —
-    * quadratic in duplication — while this path shuffles only signatures
-    * and band buckets. xxhash64 seeding is engine-specific, so the
-    * SIGNATURES have no SQL analog — but the composed RESULT does: a
-    * corpus whose shingle pair expansion fits Dedup.MaxGroupPairs takes
-    * the exact tier outright (the minhashDupPairs gate, exact by
-    * construction), and past it LSH candidates are exact-verified
-    * (precision exact by construction) with recall pinned equal to the
-    * exact tier by RegimeSpec at sf0.1 — recall is cardinality-dependent,
-    * so it is asserted where cardinality grows (the q_heavy_hitters
-    * rule). So the cluster and canonical relations equal the exact
-    * tier's and these queries carry the exact tier's oracle SQL.
-    * Deterministic (fixed seeds, fixed gate data), so the oracle row
-    * can't flake; ScaleSpec pins the forced LSH path at sf0.001 and
-    * sf0.01.
+  /** Dedup clustering: connected components (min doc_id as cluster id)
+    * over the Jaccard ≥ 0.5 pairs of Dedup.minhashDupPairs, and
+    * [[canonicalDocsLsh]]'s highest-quality member per cluster (smallest
+    * doc_id on ties; Dedup.canonicalPerCluster — one hash aggregate, no
+    * window). The gate's fast path, the exact shingle tier, runs when the
+    * corpus's shingle pair expansion fits Dedup.MaxGroupPairs (exact by
+    * construction); past it banded LSH candidates are exact-verified
+    * (precision exact by construction), so the path shuffles only
+    * signatures and band buckets instead of the Σ C(df,2) pair expansion
+    * that is quadratic in duplication. Recall is pinned equal to the
+    * exact answer, the gate forced, by ScaleSpec at sf0.001 and sf0.01
+    * and RegimeSpec at sf0.1 — recall is cardinality-dependent, so it is
+    * asserted where cardinality grows (the q_heavy_hitters rule). So the
+    * cluster and canonical relations equal the exact answer and carry its
+    * recursive-CTE oracle SQL; fixed seeds keep the rows deterministic.
     */
   def dupClustersLsh(spark: SparkSession, dir: String): DataFrame =
     Dedup.dupClusters(
@@ -4382,7 +4356,6 @@ object ScaleQueries {
     Op("q_decontaminate_winnow", decontaminateWinnow, decontaminateWinnowSql),
     Op("q_dsir_weights", dsirWeights, dsirWeightsSql),
     Op("q_weighted_sample", weightedSample, weightedSampleSql),
-    Op("q_canonical_docs", canonicalDocs, canonicalDocsSql),
     Op("q_ngram_topk", ngramTopK, ngramTopKSql),
     Op("q_pmi_collocations", pmiCollocations, pmiCollocationsSql),
     Op("q_frame_sample", frameSample, frameSampleSql),
@@ -4395,20 +4368,13 @@ object ScaleQueries {
     Op("q_topk_per_user", topkPerUser, topkPerUserSql),
     Op("q_multimodal_stats", multimodalStats, multimodalStatsSql),
     Op("q_dedup_exact", dedupExact, dedupExactSql),
-    Op("q_jaccard_pairs", jaccardPairs, jaccardPairsSql),
-    Op("q_containment_pairs", containmentPairs, containmentPairsSql),
-    // scale-path sibling: a corpus whose pair expansion fits the gate runs
-    // the exact tier itself, any other the candidate tiers whose pair set
-    // equals it (see containmentLsh), so it carries the exact tier's oracle
-    // verbatim
+    // The near-dup gates carry the exact answer's oracle SQL: a corpus
+    // whose pair expansion fits the gate takes its fast path, the exact
+    // shingle tier; past it candidates are exact-verified and
+    // ScaleSpec/RegimeSpec pin recall with the gate forced, so the
+    // relations are equal and deterministic. See containmentLsh and
+    // dupClustersLsh.
     Op("q_containment_lsh", containmentLsh, containmentPairsSql),
-    Op("q_dup_clusters", dupClusters, dupClustersSql),
-    // The LSH tier carries the EXACT tier's oracle SQL: a corpus whose
-    // pair expansion fits the gate runs the exact tier itself (the
-    // minhashDupPairs gate); past it candidates are exact-verified and
-    // ScaleSpec/RegimeSpec pin recall with the gate forced, so the composed
-    // relations are equal — and deterministic, so the rows can't flake.
-    // See dupClustersLsh.
     Op("q_dup_clusters_lsh", dupClustersLsh, dupClustersSql),
     Op("q_canonical_docs_lsh", canonicalDocsLsh, canonicalDocsSql),
     Op("q_minhash_pairs", minhashPairs, jaccardPairsSql),

@@ -136,9 +136,10 @@ object Dedup {
     * and the same EXACT-TIER status: Σ C(df,2) pair expansion is
     * quadratic in duplication density (BASELINE.md round-7 sf1 spot
     * check: ~23 s warm on the adversarial ScaleUp corpus, right beside
-    * the exact jaccard entry). The bounded verification baseline; at
-    * volume run it on post-LSH / delta candidate sets, not the raw
-    * corpus. Jaccard rides along for the contrast report.
+    * the exact jaccard entry). So it runs behind a gate on that cost
+    * (ScaleQueries.containmentLsh); at volume run it on post-LSH / delta
+    * candidate sets, not the raw corpus. Jaccard rides along for the
+    * contrast report.
     */
   def containmentPairs(docs: DataFrame, textCol: String, keyCol: String,
       n: Int, threshold: Double, maxDf: Int = MaxGroup): DataFrame =

@@ -495,7 +495,10 @@ object ABBench {
           .count()
       }
       time(s"labelcent_vecsum_$i") { graft.scale.Similarity.labelCentroids(emb).count() }
-      time(s"dupclust_exact_$i") { analytics.ScaleQueries.dupClusters(spark, sfDir).count() }
+      time(s"dupclust_exact_$i") {
+        graft.scale.Dedup.dupClusters(graft.scale.Dedup.jaccardPairs(
+          Tables.documents(spark, sfDir), "text", "doc_id", 3, 0.5)).count()
+      }
       time(s"dupclust_lsh_$i") { analytics.ScaleQueries.dupClustersLsh(spark, sfDir).count() }
       time(s"knngraph_$i") { analytics.ScaleQueries.knnGraph(spark, sfDir).count() }
       time(s"knngraph_salted_$i") { knnGraphSalted(spark, sfDir).count() }

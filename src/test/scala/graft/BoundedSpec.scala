@@ -137,7 +137,8 @@ class BoundedSpec extends AnyFunSuite {
     ("containmentLsh", d => ScaleQueries.containmentLsh(spark, d),
       d => ScaleQueries.containmentPairs(spark, d)),
     ("minhashDupPairs", d => ScaleQueries.dupClustersLsh(spark, d),
-      d => ScaleQueries.dupClusters(spark, d)))
+      d => Dedup.dupClusters(
+        Dedup.jaccardPairs(Tables.documents(spark, d), "text", "doc_id", 3, 0.5))))
 
   // the copies input is under Dedup.MaxGroup rows but past the pair
   // budget, so both runs take the LSH tiers

@@ -111,7 +111,7 @@ class CorpusPrepSpec extends AnyFunSuite {
 
   test("dup stats: docs column accounts the whole corpus exactly once") {
     val total = Tables.documents(spark, sf).count()
-    val rows = CorpusQueries.dupStats(spark, sf).collect()
+    val rows = CorpusQueries.dupStatsLsh(spark, sf).collect()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == total)
     rows.foreach { r =>
       val cs = r.getAs[Long]("cluster_size")

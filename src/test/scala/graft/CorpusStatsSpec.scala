@@ -54,6 +54,10 @@ class CorpusStatsSpec extends AnyFunSuite {
       assert(r.getAs[String]("src_a") <= r.getAs[String]("src_b"))
     }
     assert(m.map(_.getAs[Long]("n_pairs")).sum === nPairs)
+    // the pairs come through the LSH near-dup gate: its forced LSH tiers
+    // must produce the same matrix
+    val lsh = Gates.withFallback(spark)(CorpusStats.sourceOverlap(spark, sf).collect())
+    assert(lsh.map(_.toSeq).toSet == m.map(_.toSeq).toSet)
   }
 
   test("semantic decontamination broadcasts the eval set and bounds sims") {

@@ -106,7 +106,7 @@ class RegimeSpec extends AnyFunSuite {
 
   test("q_minhash_pairs / q_dup_*_lsh: LSH recall equals the exact Jaccard tier at sf0.1") {
     // THE premise behind q_dup_clusters_lsh / q_canonical_docs_lsh /
-    // q_dup_stats_lsh carrying the exact tier's oracle SQL: banded
+    // q_dup_stats_lsh / q_source_overlap carrying the exact tier's oracle SQL: banded
     // MinHash candidates, exact-verified, recover every exact pair.
     // Precision is exact by construction (candidates are re-scored with
     // true Jaccard); recall is probabilistic and cardinality-dependent —

@@ -223,7 +223,7 @@ class ScaleSpec extends AnyFunSuite {
   test("dedup clusters are consistent: every pair co-clustered, id = min member") {
     val pairs = ScaleQueries.jaccardPairs(spark, sf)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val clusters = ScaleQueries.dupClusters(spark, sf)
+    val clusters = ScaleQueries.dupClustersLsh(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // both endpoints of every near-dup pair share a cluster
     pairs.foreach { case (a, b) => assert(clusters(a) == clusters(b), s"($a,$b) split") }
@@ -237,22 +237,25 @@ class ScaleSpec extends AnyFunSuite {
   test("LSH-driven clustering equals the exact-Jaccard clustering") {
     // LSH recall is exact on testdata (asserted above), so the flagship
     // scale path must produce the IDENTICAL cluster and canonical sets.
-    // The LSH side is forced past the gate, which would otherwise send
-    // testdata to the exact tier itself.
+    // The gate scales' pair expansion fits the gate's budget, so the
+    // unforced run is the exact tier by construction; the LSH side is
+    // forced past the gate.
     for (dir <- gateScales) {
-      val exactClusters = ScaleQueries.dupClusters(spark, dir)
+      val expansion = graft.scale.Dedup.pairExpansion(Tables.documents(spark, dir), "text", 3)
+      assert(expansion <= graft.scale.Dedup.MaxGroupPairs, s"$dir: $expansion pairs")
+      val exactClusters = ScaleQueries.dupClustersLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val lshClusters = Gates.withFallback(spark)(ScaleQueries.dupClustersLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
       assert(lshClusters == exactClusters, dir)
       assert(lshClusters.nonEmpty, dir)
-      val exactCanonical = ScaleQueries.canonicalDocs(spark, dir)
+      val exactCanonical = ScaleQueries.canonicalDocsLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
       val lshCanonical = Gates.withFallback(spark)(ScaleQueries.canonicalDocsLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet)
       assert(lshCanonical == exactCanonical, dir)
       // the size histogram over those clusters must then also agree
-      val exactStats = graft.analytics.CorpusQueries.dupStats(spark, dir)
+      val exactStats = graft.analytics.CorpusQueries.dupStatsLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val lshStats = Gates.withFallback(spark)(graft.analytics.CorpusQueries.dupStatsLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
