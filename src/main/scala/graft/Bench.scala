@@ -1,6 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The registry names a run times, in run order: those matching a
+    * substring of `only` (every name when `only` is empty), shuffled by
+    * `seed`. The filter comes first, so a filtered run's order depends
+    * only on the seed and the selected names, not on what else is
+    * registered.
+    */
+  def runOrder(names: Seq[String], only: Seq[String], seed: Long): Seq[String] =
+    new scala.util.Random(seed)
+      .shuffle(names.filter(n => only.isEmpty || only.exists(n.contains)).sorted)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
@@ -72,7 +82,6 @@ object Bench {
     // SPARK_GRAFT_BENCH_SEED pins it for A/B runs.
     val seed = sys.env.get("SPARK_GRAFT_BENCH_SEED").map(_.toLong)
       .getOrElse(System.currentTimeMillis())
-    val rng = new scala.util.Random(seed)
     // Warm-rep hygiene (r9 "what's wrong" #3): localCheckpoint RDDs
     // from a completed rep are freed only when the driver GC enqueues
     // their weak refs and the ContextCleaner drains them — with a
@@ -120,10 +129,10 @@ object Bench {
       println(s"[bench] $name $shown")
       name -> (cold +: rest)
     }
+    val registry = SparkEntry.queries
     val registryTimings: Seq[(String, Seq[Either[String, Double]])] =
-      rng.shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
-        .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }
-        .map { case (name, fn) => runOne(name, fn, minWarm = 0) }
+      runOrder(registry.keys.toSeq, only, seed)
+        .map(name => runOne(name, registry(name), minWarm = 0))
     // Artifact arm (VERDICT r11 #1): the production-topology rows —
     // build each shared artifact once (its cost is a row), then the
     // Θ(artifact) consumer forms. Runs AFTER the shuffled registry

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dump `.explain("formatted")` for registered queries to files — the
   * optimization-round evidence trail (plans/rN/<query>_{before,after}.txt).
@@ -13,7 +17,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Runs in the same `Sessions.local` session as Bench, so the dumped plan
   * is the plan the bench runs (AQE initial plan; the formatted dump is
-  * pre-execution).
+  * pre-execution). A query that materializes a relation with an eager
+  * `localCheckpoint` while it is built plans it as `Scan ExistingRDD`;
+  * the executed plan of each such checkpoint follows the query's plan.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -27,10 +33,21 @@ object Plans {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") checkpoints.add(qe.explainString(FormattedMode))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     selected.foreach { case (name, fn) =>
       try {
+        ListenerBusDrain(spark.sparkContext, 30_000L)
+        checkpoints.clear()
         val df = fn(spark, dir)
-        val txt = df.queryExecution.explainString(FormattedMode)
+        ListenerBusDrain(spark.sparkContext, 30_000L)
+        val txt = (df.queryExecution.explainString(FormattedMode) +:
+          checkpoints.asScala.toSeq.map("== Eager localCheckpoint (executed) ==\n" + _))
+          .mkString("\n")
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), txt + "\n")
         println(s"[plans] wrote $name ($suffix)")

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Num, Op, Tables}
-import graft.scale.{Bounded, CellTopK, Dedup, Partitioning, Similarity, SimHash64}
+import graft.scale.{Bounded, CellKernel, Dedup, Partitioning, Similarity, SimHash64}
 import graft.functions.TextAnalysis
 
 /** Scale-tier queries: deduplication, similarity search, token/fingerprint
@@ -1755,17 +1755,13 @@ object ScaleQueries {
     // vector table fits the cell-table budget (the SAME relation the
     // broadcast/salted join would ship), emit each probe row's
     // qualifying (v2, cos) pairs in one tight loop over its cell slice
-    // (CellPairsExpr: identical commuted IEEE dot/den, identical 1e6
+    // (CellKernel: identical commuted IEEE dot/den, identical 1e6
     // snap, pair-once by v1 < v2). The salt knob is result-identical
     // task splitting for the JOIN shape and is simply unused here.
-    Bounded(spark, CellTopK.TableRows)(emb.count()) {
-      val bc = CellTopK.broadcastTable(assigned, "cluster")
-      assigned.select(col("cluster"), col("vec_id").as("v1"),
-          CellTopK.pairsColumn(bc, SemDedupTau,
-            col("cluster"), col("vec_id"), col("embedding")).as("ps"))
-        .select(col("cluster"), col("v1"), explode(col("ps")).as("p"))
-        .select(col("cluster"), col("v1"), col("p.id").as("v2"),
-          col("p.score").as("cos_sim"))
+    Bounded(spark, CellKernel.TableRows)(emb.count()) {
+      val cells = assigned.select(col("cluster"), col("vec_id"), col("embedding"))
+      CellKernel.pairsAbove(cells, cells, SemDedupTau)
+        .select(col("cluster"), col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
     } {
       val a0 = assigned.select(col("cluster"), col("vec_id").as("v1"), col("embedding").as("e1"))
       val b0 = assigned.select(col("cluster"), col("vec_id").as("v2"), col("embedding").as("e2"))
@@ -1831,12 +1827,11 @@ object ScaleQueries {
     // fits the broadcast budget — the SAME condition the broadcast join
     // below already relies on — evaluate each probe row's exact top-k
     // in one tight loop over a flat-float cell table instead
-    // (scale/CellTopK.scala: bit-identical snapped cosines, identical
+    // (scale/CellKernel.scala: bit-identical snapped cosines, identical
     // (score desc, id asc) selection, same output schema).
     // Beyond BROADCAST size entirely, the salted-slice shuffle arm
     // (ABBench) / IVF-PQ tier remain the documented escalation.
-    Bounded(spark, CellTopK.TableRows)(emb.count()) {
-      val bc = CellTopK.broadcastTable(asg, "cluster")
+    Bounded(spark, CellKernel.TableRows)(emb.count()) {
       // EAGER checkpoint: the kernel runs exactly once, as a plain
       // projection job (measured stable: 40 s × 3 reps at sf10).
       // Running it inside a consumer's InMemoryRelation cache build
@@ -1844,15 +1839,9 @@ object ScaleQueries {
       // the columnar cache builder wraps the kernel's iterator in
       // batch-unroll memory accounting; checkpointing hands consumers a
       // materialized edge RDD, so persists/caches downstream store
-      // Θ(edges) rows, never re-driving the kernel — and the table can
-      // be released as soon as the checkpoint holds the rows.
-      val out = asg.select(col("cluster"), col("vec_id"),
-          CellTopK.topKColumn(bc, KnnGraphK,
-            col("cluster"), col("vec_id"), col("embedding")).as("top"))
-        .transform(rankTop("vec_id", "nbr_id"))
-        .localCheckpoint()
-      bc.destroy()
-      out
+      // Θ(edges) rows, never re-driving the kernel.
+      val cells = asg.select(col("cluster"), col("vec_id"), col("embedding"))
+      CellKernel.topK(cells, cells, KnnGraphK).localCheckpoint()
     } {
       // the cell id alone has only KmeansK distinct values, so a plain
       // shuffle equi-join runs the whole n²/K pair volume through K tasks
@@ -1960,22 +1949,17 @@ object ScaleQueries {
     // id-space disjointness — the kernel's `id != probeId` self-exclusion
     // must never fire here (the join keeps the origin vector, cos = 1.0),
     // so every history id must sit below the 1e6 delta offset.
-    // Numerics are bit-identical (CellTopK scaladoc): commuted IEEE
+    // Numerics are bit-identical (CellKernel scaladoc): commuted IEEE
     // dot/den, same 1e6 snap, same (score desc, id asc) selection.
     lazy val ids = emb.agg(count(lit(1)), coalesce(max(col("vec_id")), lit(0L))).head()
-    Bounded(spark, CellTopK.TableRows)(
+    Bounded(spark, CellKernel.TableRows)(
       if (ids.getLong(1) < 1000000L) ids.getLong(0) else Bounded.Uncertified) {
-      val bc = CellTopK.broadcastTable(hist, "cluster")
       // eager checkpoint: kernel runs once as a plain projection job
-      // (never inside a consumer's InMemoryRelation build — CLAUDE.md),
-      // after which the table is released
-      val out = delta.select(col("cluster"), col("q_id"),
-          CellTopK.topKColumn(bc, KnnGraphK,
-            col("cluster"), col("q_id"), col("q_emb")).as("top"))
-        .transform(rankTop("q_id", "vec_id"))
+      // (never inside a consumer's InMemoryRelation build — CLAUDE.md)
+      CellKernel.topK(delta.select(col("cluster"), col("q_id"), col("q_emb")),
+          hist.select(col("cluster"), col("vec_id"), col("embedding")), KnnGraphK)
+        .withColumnRenamed("nbr_id", "vec_id")
         .localCheckpoint()
-      bc.destroy()
-      out
     } {
       val den = col("nrm") * col("q_nrm")
       hist.join(broadcast(delta), Seq("cluster"))

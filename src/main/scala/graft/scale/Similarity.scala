@@ -137,25 +137,20 @@ object Similarity {
     // CERTIFIED-BOUNDED fast path (r13): the bucket self-join is
     // Σ C(bucket, 2) join rows; when the vector table fits the shared
     // cell-table budget, emit each probe row's qualifying pairs in one
-    // tight loop over its bucket slice (CellPairsExpr — identical
+    // tight loop over its bucket slice (CellKernel — identical
     // snapped cosine, pair-once by v1 < v2). The bucket BIT DECISIONS
     // are the exact lshSignature expressions (dot(embedding, plane) >= 0
     // per plane in sorted-pid order); the int encoding Σ bitᵢ·2ⁱ is a
     // bijection of the concat-string bucket, so the pair partition is
     // identical by construction (no plane: every row in bucket 0, as
     // the empty concat puts every row in bucket "").
-    Bounded(embeddings.sparkSession, CellTopK.TableRows)(embeddings.count()) {
+    Bounded(embeddings.sparkSession, CellKernel.TableRows)(embeddings.count()) {
       val bucketInt = planes(embeddings, planeIds).zipWithIndex.map { case (pe, i) =>
         when(dot(col("embedding"), typedLit(pe)) >= 0, lit(1 << i)).otherwise(lit(0))
       }.foldLeft(lit(0))(_ + _).cast("int")
-      val withB = embeddings.select(col("vec_id"), col("embedding"),
-        bucketInt.as("bucket"))
-      val bc = CellTopK.broadcastTable(withB, "bucket")
-      withB.select(col("vec_id").as("v1"),
-          CellTopK.pairsColumn(bc, threshold,
-            col("bucket"), col("vec_id"), col("embedding")).as("ps"))
-        .select(col("v1"), explode(col("ps")).as("p"))
-        .select(col("v1"), col("p.id").as("v2"), col("p.score").as("cos_sim"))
+      val cells = embeddings.select(bucketInt.as("bucket"), col("vec_id"), col("embedding"))
+      CellKernel.pairsAbove(cells, cells, threshold)
+        .select(col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
     } {
       val sigs = lshSignature(embeddings, planeIds)
       // precompute the norm once per vector — per-pair work is then a

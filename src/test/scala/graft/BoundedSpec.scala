@@ -61,16 +61,9 @@ class BoundedSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
-  /** A cell-table kernel sits in the plan: the pair kernels inline their
-    * expression, the top-k kernels hand back their checkpointed output.
-    */
-  private def kernel(df: DataFrame): Boolean = {
-    val p = df.queryExecution.executedPlan.toString.toLowerCase
-    p.contains("cellpairsexpr") || p.contains("existingrdd")
-  }
-
   /** Per gated site: input preparation (outside the gate) returning the
-    * gated query, and whether its fast path is a cell-table kernel.
+    * gated query, and whether its fast path is a cell-table kernel, the
+    * only plan holding the CellKernel node.
     */
   private val sites: Seq[(String, String => (() => Seq[DataFrame]), Boolean)] = Seq(
     ("dupClusters", d => () => Seq(ScaleQueries.dupClustersLsh(spark, d)), false),
@@ -91,12 +84,9 @@ class BoundedSpec extends AnyFunSuite {
   for ((site, prepare, isKernel) <- sites; (input, dir) <- inputs)
     test(s"$site: fast path ≡ forced fallback on the $input input") {
       val run = prepare(dir())
-      val fastDfs = run()
-      val fast = fastDfs.map(rows)
-      val (fallbackDfs, fallback) = Gates.withFallback(spark) {
-        val dfs = run()
-        (dfs, dfs.map(rows))
-      }
+      val (fast, fastPlans) = executedPlans(run().map(rows))
+      val (fallback, fallbackPlans) =
+        Gates.withFallback(spark)(executedPlans(run().map(rows)))
       assert(fast == fallback,
         s"$site diverges on $input: fast-only ${fast.zip(fallback).map(p => (p._1 -- p._2).take(3))}, " +
           s"fallback-only ${fast.zip(fallback).map(p => (p._2 -- p._1).take(3))}")
@@ -104,8 +94,9 @@ class BoundedSpec extends AnyFunSuite {
       // the switch decides the path whatever the input size: a forced
       // fallback never reaches a kernel, even on empty input
       if (isKernel) {
-        assert(fastDfs.forall(kernel), s"$site: fast path not taken on $input")
-        assert(!fallbackDfs.exists(kernel), s"$site: forced fallback took the kernel on $input")
+        assert(fastPlans.exists(_.contains("cellkernel")), s"$site: fast path not taken on $input")
+        assert(!fallbackPlans.exists(_.contains("cellkernel")),
+          s"$site: forced fallback took the kernel on $input")
       }
     }
 
@@ -205,20 +196,23 @@ class BoundedSpec extends AnyFunSuite {
         e.stageInfos.foreach(s => names.add(s.name))
     }
     spark.sparkContext.addSparkListener(listener)
-    val got =
-      try {
-        val df = ScaleQueries.knnDelta(spark, dir)
-        // a marker job: once its start is delivered, every earlier one is
-        spark.sparkContext.parallelize(Seq(1), 1).map(identity).count()
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (!names.toArray.exists(_.toString.contains("BoundedSpec")) &&
-            System.nanoTime() < deadline) Thread.sleep(20)
-        df
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (got, plans) = executedPlans {
+      val df =
+        try {
+          val df = ScaleQueries.knnDelta(spark, dir)
+          // a marker job: once its start is delivered, every earlier one is
+          spark.sparkContext.parallelize(Seq(1), 1).map(identity).count()
+          val deadline = System.nanoTime() + 10_000_000_000L
+          while (!names.toArray.exists(_.toString.contains("BoundedSpec")) &&
+              System.nanoTime() < deadline) Thread.sleep(20)
+          df
+        } finally spark.sparkContext.removeSparkListener(listener)
+      rows(df)
+    }
     val collects = names.toArray.map(_.toString).filter(_.startsWith("collect at"))
     assert(collects.forall(_.contains("KMeans.scala")),
       s"knnDelta collected outside the k-means fit: ${collects.mkString(", ")}")
-    assert(!kernel(got))
-    assert(rows(got) == Gates.withFallback(spark)(rows(ScaleQueries.knnDelta(spark, dir))))
+    assert(!plans.exists(_.contains("cellkernel")))
+    assert(got == Gates.withFallback(spark)(rows(ScaleQueries.knnDelta(spark, dir))))
   }
 }

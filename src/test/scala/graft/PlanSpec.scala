@@ -263,6 +263,27 @@ class PlanSpec extends AnyFunSuite {
     assert(pj.contains("topk"), s"expected the bounded TopKAgg:\n$pj")
   }
 
+  test("cell-table pair kernels plan as one CellKernel node, never in a Filter") {
+    // a kernel written as an expression is copied by the optimizer into
+    // inferred filters (`size(ps) > 0 AND isnotnull(ps)`) and runs twice
+    // per row; a plan node cannot be copied into a condition
+    object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (name <- Seq("q_semantic_neardup", "q_embed_neardup")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val conditions = df.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
+      assert(!conditions.exists(_.exists(_.nodeName.startsWith("Cell"))),
+        s"$name evaluates a kernel in a filter:\n${conditions.mkString("\n")}")
+      df.collect()
+      val kernels = Stages.collect(df.queryExecution.executedPlan) {
+        case p if p.nodeName == "CellKernel" => p
+      }
+      assert(kernels.size == 1,
+        s"$name: ${kernels.size} CellKernel nodes in\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("split assignment is map-side: one accounting shuffle only") {
     val p = plan(analytics.ScaleQueries.splitAssign(spark, sf))
     assert(nodeCount(p, "Exchange") <= 1, s"split assignment grew shuffles:\n$p")

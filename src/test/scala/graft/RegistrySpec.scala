@@ -18,6 +18,21 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
+  test("a filtered bench run's order depends only on the seed and the selected names") {
+    val only = Seq("q_semantic_neardup", "q_knn_graph", "q_embed_neardup", "q_minhash_pairs")
+    val registry = SparkEntry.queries.keys.toSeq
+    val selected = registry.filter(n => only.exists(n.contains))
+    val order = Bench.runOrder(selected, only, 42L)
+    assert(order.sorted == selected.sorted && selected.size >= only.size)
+    // the registry as it is, and with five more names (the near-dup
+    // queries an earlier registry held)
+    val removed = Seq("q_jaccard_pairs", "q_containment_pairs", "q_dup_clusters",
+      "q_canonical_docs", "q_dup_stats")
+    for (names <- Seq(registry, registry ++ removed, (removed ++ registry).reverse))
+      assert(Bench.runOrder(names, only, 42L) == order)
+    assert(Bench.runOrder(registry, Nil, 42L).sorted == registry.sorted)
+  }
+
   // A module whose `ops` precedes a `*Sql` val it reads registers a null
   // oracle: Scala initialises object vals in declaration order.
   test("every registered query carries non-blank oracle SQL") {
