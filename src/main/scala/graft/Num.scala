@@ -19,6 +19,12 @@ object Num {
   /** Round half-up (toward +inf) at scale s, IEEE-stable across engines. */
   def r(c: Column, s: Int): Column = floor(c * lit(p(s)) + lit(0.5)) / lit(p(s))
 
+  /** The scalar twin of [[r]] for driver-side doubles: the same IEEE
+    * expression (Spark's floor-to-LONG and math.floor agree wherever
+    * |x·10^s| < 2⁶³), and math.pow(10, s) is exact for these powers.
+    */
+  def rd(x: Double, s: Int): Double = math.floor(x * p(s) + 0.5) / p(s)
+
   /** The same expression as SQL text for the DuckDB oracle. */
   def rSql(e: String, s: Int): String = {
     val pow = p(s)

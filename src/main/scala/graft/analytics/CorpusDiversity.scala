@@ -520,7 +520,6 @@ object CorpusDiversity {
     import graft.scale.Similarity
     val emb = Tables.embeddings(spark, dir)
     val qids = ScaleQueries.KnnQueryIds
-    def snap9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     val signs = (0 until JlOutDim).map(k =>
       (0 until JlInDim).map(j => jlSign(k, j)))
     val qs = emb.filter(col("vec_id").isInCollection(qids))
@@ -530,7 +529,7 @@ object CorpusDiversity {
         val p = signs.map { s =>
           var acc = 0.0; var j = 0
           while (j < JlInDim) { acc += v(j) * s(j); j += 1 }
-          snap9(acc / 4.0)
+          Num.rd(acc / 4.0, 9)
         }
         (r.getLong(0), p)
       }.sortBy(_._1)

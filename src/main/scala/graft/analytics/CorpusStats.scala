@@ -304,14 +304,6 @@ object CorpusStats {
     */
   val PcaIters = 12
 
-  /** Snap grid for the per-iteration eigenvector components: every
-    * mat-vec result and every normalized component is re-snapped to 1e-9
-    * before the next step, so the engines' different summation orders
-    * (driver loop vs SQL aggregate) can never compound across
-    * iterations — the same stage-snapping discipline as q_lr_train.
-    */
-  private def snap(x: Double, s: Double): Double = math.floor(x * s + 0.5) / s
-
   /** First principal component of the embedding table, distributed the
     * way PCA actually scales: ONE corpus scan aggregates the d×d second
     * moments (the bounded VecSumAgg covariance above), the driver runs
@@ -332,11 +324,14 @@ object CorpusStats {
       val c = r.getAs[Double]("cov")
       a(i)(j) = c; a(j)(i) = c
     }
+    // every mat-vec result and normalized component re-snaps to 1e-9, so
+    // the engines' summation orders (driver loop vs SQL aggregate) never
+    // compound across iterations (the q_lr_train discipline)
     def matvec(x: Array[Double]): Array[Double] =
       Array.tabulate(d) { i =>
         var acc = 0.0; var j = 0
         while (j < d) { acc += a(i)(j) * x(j); j += 1 }
-        snap(acc, 1e9)
+        Num.rd(acc, 9)
       }
     var v = Array.tabulate(d)(i => if (i == 0) 1.0 else 0.0)
     for (_ <- 1 to PcaIters) {
@@ -344,10 +339,10 @@ object CorpusStats {
       var nn = 0.0; var i = 0
       while (i < d) { nn += y(i) * y(i); i += 1 }
       val nv = math.sqrt(nn)
-      v = y.map(x => snap(x / nv, 1e9))
+      v = y.map(x => Num.rd(x / nv, 9))
     }
     val yF = matvec(v)
-    val lambda = snap(math.sqrt(yF.map(x => x * x).sum), 1e6)
+    val lambda = Num.rd(math.sqrt(yF.map(x => x * x).sum), 6)
     val vLit = array(v.map(lit): _*)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),

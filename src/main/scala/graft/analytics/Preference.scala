@@ -77,16 +77,6 @@ object Preference {
     */
   val BtCollectPairs = 1000000L
 
-  /** Scalar twin of Num.r: floor(x·10^s + 0.5)/10^s over doubles — the
-    * identical IEEE expression (Spark's floor-to-LONG and math.floor
-    * agree wherever |x·10^s| < 2⁶³, which every snapped MM quantity
-    * satisfies by magnitudes: den ≤ Σn/2 ≈ 10⁶ at 1e-9 → 10¹⁵).
-    */
-  private def rs(x: Double, s: Int): Double = {
-    val p = math.pow(10, s)
-    math.floor(x * p + 0.5) / p
-  }
-
   /** The MM fixed point computed on the DRIVER from the collected
     * pair-bounded graph (VERDICT r12 #3, the dupClusters union-find
     * precedent): one collect job replaces BtIters × (2 broadcast builds
@@ -138,9 +128,10 @@ object Preference {
         den(ea(k)) += t; den(eb(k)) += t
         k += 1
       }
+      // Num.rd stays below long overflow here: den ≤ Σn/2 ≈ 10⁶ at 1e-9
       var i = 0
       while (i < nP) {
-        p(i) = rs((wins(i).toDouble + 0.5) / rs(den(i), 9), 9)
+        p(i) = Num.rd((wins(i).toDouble + 0.5) / Num.rd(den(i), 9), 9)
         i += 1
       }
     }

@@ -1717,65 +1717,22 @@ object ScaleQueries {
     */
   val SemDedupTau = 0.4
 
-  /** Probe-side salt sized to the RUNTIME, not to this host: one slice
-    * per default-parallelism unit gives the cluster-keyed pair join
-    * k×cores-way task granularity wherever it runs (on a 1000-executor
-    * cluster the salt scales with it; a hard-coded 32 would collapse
-    * parallelism there exactly as salt=1 did at the sf10 stress).
-    * Salting is result-identical — slices only split tasks — so the
-    * knob is free to track the environment. Beyond ~4× the pair-volume
-    * CPU floor extra slices buy nothing (r9 measured salt 32 vs 64 as
-    * 132 vs 133 s on 32 cores), so the value needs no cap: candidate
-    * replication cost is one broadcast-sized relation per slice.
-    */
-  def parallelismSalt(spark: SparkSession): Int =
-    math.max(1, spark.sparkContext.defaultParallelism)
-
   /** `k` is THE scale knob: cells hold ~n/k vectors and the pair stage is
     * Σ C(cell, 2) ≈ n²/(2k), so k must grow with n to keep cells bounded
-    * (the registered gate query keeps the oracle-pinned default k but
-    * registers salt = [[parallelismSalt]], i.e. the runtime's default
-    * parallelism — 32 on the gate host; the sf10 stress measured the
-    * fixed-k failure mode — see BASELINE.md "sf10 stress").
-    * `salt` splits the probe side into hash slices with the candidate
-    * side replicated per slice: same pair volume, but k×salt tasks
-    * instead of k — without it the cluster-keyed shuffle join collapses
-    * parallelism to k tasks regardless of cores (measured: 7 of 32 cores
-    * busy for ~30 min at sf10, k=8).
+    * (the registered gate query keeps the oracle-pinned default k; the
+    * sf10 stress measured the fixed-k failure mode — see BASELINE.md
+    * "sf10 stress"). The within-cell pairs come from
+    * `CellKernel.pairsAbove`, which emits each vector's qualifying pairs
+    * in one loop over its cell under the cell-table budget and runs a
+    * salted cell equi-join past it.
     */
-  def semanticNearDup(spark: SparkSession, dir: String,
-      k: Int = KmeansK, salt: Int = 1): DataFrame = {
+  def semanticNearDup(spark: SparkSession, dir: String, k: Int = KmeansK): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val trained = graft.scale.KMeans.fit(emb, k, iters = 1)
-    val assigned = graft.scale.KMeans.assign(emb, trained)
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-    // CERTIFIED-BOUNDED fast path (r13): the within-cell pair join is
-    // Σ C(cell, 2) join rows each paying row construction + a snapped
-    // cosine projection for a usually-sparse qualifying set; when the
-    // vector table fits the cell-table budget (the SAME relation the
-    // broadcast/salted join would ship), emit each probe row's
-    // qualifying (v2, cos) pairs in one tight loop over its cell slice
-    // (CellKernel: identical commuted IEEE dot/den, identical 1e6
-    // snap, pair-once by v1 < v2). The salt knob is result-identical
-    // task splitting for the JOIN shape and is simply unused here.
-    Bounded(spark, CellKernel.TableRows)(emb.count()) {
-      val cells = assigned.select(col("cluster"), col("vec_id"), col("embedding"))
-      CellKernel.pairsAbove(cells, cells, SemDedupTau)
-        .select(col("cluster"), col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
-    } {
-      val a0 = assigned.select(col("cluster"), col("vec_id").as("v1"), col("embedding").as("e1"))
-      val b0 = assigned.select(col("cluster"), col("vec_id").as("v2"), col("embedding").as("e2"))
-      val (a, b, keys) =
-        if (salt <= 1) (a0, b0, Seq("cluster"))
-        else (a0.withColumn("slice", pmod(xxhash64(col("v1")), lit(salt.toLong))),
-          b0.withColumn("slice", explode(lit((0L until salt.toLong).toArray))),
-          Seq("cluster", "slice"))
-      a.join(b, keys)
-        .filter(col("v1") < col("v2"))
-        .select(col("cluster"), col("v1"), col("v2"),
-          Num.r(Similarity.cosine(col("e1"), col("e2")), 6).as("cos_sim"))
-        .filter(col("cos_sim") >= SemDedupTau)
-    }
+    val cells = graft.scale.KMeans.assign(emb, trained)
+      .select(col("cluster"), col("vec_id"), col("embedding"))
+    CellKernel.pairsAbove(cells, SemDedupTau)
+      .select(col("cluster"), col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
   }
 
   val semanticNearDupSql: String =
@@ -1797,82 +1754,28 @@ object ScaleQueries {
     * (SemDeDup/DiverseSampling-style pipelines build exactly this
     * artifact). The quadratic term drops from n² to n²/K (K cells,
     * ~n/K per cell); at 100 TB you raise K so cells stay bounded, and
-    * the per-cell compare is a streaming equi-join on cluster — no
-    * per-cluster array in one task — followed by the bounded TopKAgg
-    * (O(n·k) state, no per-vector sort). Scores are rounded BEFORE
-    * ranking with an id tiebreak so rank order can't flip on an ulp.
+    * the per-cell compare is one loop per vector over its cell
+    * (`CellKernel`) or, past its budget, a broadcast equi-join on
+    * cluster followed by the bounded TopKAgg (O(n·k) state, no
+    * per-vector sort). Scores are rounded BEFORE ranking with an id
+    * tiebreak so rank order can't flip on an ulp.
     */
   val KnnGraphK = 3
-  val KnnGraphSalt = 16
-
-  /** One row per (cluster, key, rank) from the per-key top-k array `top`. */
-  private def rankTop(key: String, nbr: String)(df: DataFrame): DataFrame =
-    df.select(col("cluster"), col(key), posexplode(col("top")).as(Seq("rank0", "e")))
-      .select(col("cluster"), col(key), (col("rank0") + 1).as("rank"),
-        col("e.id").as(nbr), col("e.score").as("cos_sim"))
 
   /** `cells` is the IVF scale knob (see semanticNearDup): the pair
     * stream is n·(n/cells), so cells must track n to keep the per-vector
     * candidate list bounded. The registered gate query keeps the fixed
     * default; BASELINE.md "sf10 stress" records the measured fixed-k
-    * cost at 200k vectors and the cells-raised arm.
+    * cost at 200k vectors and the cells-raised arm. Beyond the
+    * cell-table budget of `CellKernel.topK` (its broadcast join
+    * fallback), the salted-slice shuffle arm (ABBench) and the IVF-PQ
+    * tier are the documented escalation.
     */
   def knnGraph(spark: SparkSession, dir: String, cells: Int = KmeansK): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val trained = graft.scale.KMeans.fit(emb, cells, iters = 1)
-    val asg = graft.scale.KMeans.assign(emb, trained)
-    // CERTIFIED-BOUNDED fast path (VERDICT r12 #5): the pair stage is
-    // n²/cells rows through join+hash-agg machinery (~88 s warm at the
-    // sf10 stress for ~3 s of dot-product FLOPs); when the vector table
-    // fits the broadcast budget — the SAME condition the broadcast join
-    // below already relies on — evaluate each probe row's exact top-k
-    // in one tight loop over a flat-float cell table instead
-    // (scale/CellKernel.scala: bit-identical snapped cosines, identical
-    // (score desc, id asc) selection, same output schema).
-    // Beyond BROADCAST size entirely, the salted-slice shuffle arm
-    // (ABBench) / IVF-PQ tier remain the documented escalation.
-    Bounded(spark, CellKernel.TableRows)(emb.count()) {
-      // EAGER checkpoint: the kernel runs exactly once, as a plain
-      // projection job (measured stable: 40 s × 3 reps at sf10).
-      // Running it inside a consumer's InMemoryRelation cache build
-      // instead was ERRATIC (q_pagerank reps 52/102/183 s, same work) —
-      // the columnar cache builder wraps the kernel's iterator in
-      // batch-unroll memory accounting; checkpointing hands consumers a
-      // materialized edge RDD, so persists/caches downstream store
-      // Θ(edges) rows, never re-driving the kernel.
-      val cells = asg.select(col("cluster"), col("vec_id"), col("embedding"))
-      CellKernel.topK(cells, cells, KnnGraphK).localCheckpoint()
-    } {
-      // the cell id alone has only KmeansK distinct values, so a plain
-      // shuffle equi-join runs the whole n²/K pair volume through K tasks
-      // (observed at sf1: 8 tasks carried 50M pairs, 26-82 s). BROADCAST
-      // the candidate side instead: the vector table rides as a hash
-      // relation (vectors are tiny next to the corpus they embed), the
-      // pair stream never shuffles or materializes, and parallelism comes
-      // from the probe side's partitions. Beyond broadcast size, salt the
-      // probe side into hash slices and replicate candidates per slice
-      // (K×S-way shuffle join — the arm kept in ABBench); beyond THAT,
-      // all-vectors graphs use the IVF-PQ tier.
-      // norms precompute once per SIDE (not per pair) — bit-identical to
-      // recomputing inside cosine (same expression over the same array),
-      // so the oracle may still recompute; cuts the pair stage from three
-      // dot products to one
-      val a = asg.select(col("cluster"), col("vec_id"), col("embedding"),
-        Similarity.norm(col("embedding")).as("nrm"))
-      val b = asg.select(col("cluster"), col("vec_id").as("nbr_id"),
-        col("embedding").as("nbr_emb"),
-        Similarity.norm(col("embedding")).as("nbr_nrm"))
-      val den = col("nrm") * col("nbr_nrm")
-      a.join(broadcast(b), Seq("cluster"))
-        .filter(col("vec_id") =!= col("nbr_id"))
-        .select(col("cluster"), col("vec_id"), col("nbr_id"),
-          Num.r(when(den > 0,
-            Similarity.dot(col("embedding"), col("nbr_emb")) / den)
-            .otherwise(0.0), 6).as("cos_sim"))
-        .groupBy(col("cluster"), col("vec_id"))
-        .agg(graft.scale.TopK.topK(col("cos_sim"), col("nbr_id"), KnnGraphK).as("top"))
-        .transform(rankTop("vec_id", "nbr_id"))
-    }
+    CellKernel.topK(graft.scale.KMeans.assign(emb, trained)
+      .select(col("cluster"), col("vec_id"), col("embedding")), KnnGraphK)
   }
 
   val knnGraphSql: String =
@@ -1919,9 +1822,10 @@ object ScaleQueries {
     * applied to the vector tier: a DELTA of new vectors is searched
     * against the persisted corpus without reshuffling it. The trained
     * coarse codebook (driver-held, same k-means tier) assigns both sides
-    * as a pure projection; the delta rides as a BROADCAST against one
-    * scan of the history's assigned vectors, restricted to matching
-    * cells; top-k per delta vector through the bounded TopKAgg. At
+    * as a pure projection; each delta vector's top-k comes from one loop
+    * over its cell of the broadcast history or, past the cell-table
+    * budget, from the delta riding as a BROADCAST against one scan of
+    * the history's assigned vectors, ranked by the bounded TopKAgg. At
     * 100 TB the history is only ever scanned (filter-pruned to probed
     * cells via the persisted IVF-PQ codes table in the production
     * layout), never shuffled, and each increment's cost is proportional
@@ -1932,45 +1836,14 @@ object ScaleQueries {
     val emb = Tables.embeddings(spark, dir)
     val trained = graft.scale.KMeans.fit(emb, KmeansK, iters = 1)
     val hist = graft.scale.KMeans.assign(emb, trained)
-      .select(col("cluster"), col("vec_id"), col("embedding"),
-        Similarity.norm(col("embedding")).as("nrm"))
+      .select(col("cluster"), col("vec_id"), col("embedding"))
     val deltaRaw = emb.filter(col("vec_id") % 10 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000L)
     val delta = graft.scale.KMeans.assign(deltaRaw, trained)
-      .select(col("cluster"), col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"),
-        Similarity.norm(col("embedding")).as("q_nrm"))
-    // CERTIFIED-BOUNDED fast path (r13): the knnGraph cell-table kernel
-    // applied to the delta probe — the history rides as the broadcast
-    // flat-float table (the SAME relation the join below broadcasts as a
-    // hash table) and each delta row's exact top-k is one tight loop, no
-    // candidate pair row ever exists. One aggregate certifies both
-    // premises before anything is collected: the table budget, and
-    // id-space disjointness — the kernel's `id != probeId` self-exclusion
-    // must never fire here (the join keeps the origin vector, cos = 1.0),
-    // so every history id must sit below the 1e6 delta offset.
-    // Numerics are bit-identical (CellKernel scaladoc): commuted IEEE
-    // dot/den, same 1e6 snap, same (score desc, id asc) selection.
-    lazy val ids = emb.agg(count(lit(1)), coalesce(max(col("vec_id")), lit(0L))).head()
-    Bounded(spark, CellKernel.TableRows)(
-      if (ids.getLong(1) < 1000000L) ids.getLong(0) else Bounded.Uncertified) {
-      // eager checkpoint: kernel runs once as a plain projection job
-      // (never inside a consumer's InMemoryRelation build — CLAUDE.md)
-      CellKernel.topK(delta.select(col("cluster"), col("q_id"), col("q_emb")),
-          hist.select(col("cluster"), col("vec_id"), col("embedding")), KnnGraphK)
-        .withColumnRenamed("nbr_id", "vec_id")
-        .localCheckpoint()
-    } {
-      val den = col("nrm") * col("q_nrm")
-      hist.join(broadcast(delta), Seq("cluster"))
-        .select(col("cluster"), col("q_id"), col("vec_id"),
-          Num.r(when(den > 0,
-            Similarity.dot(col("embedding"), col("q_emb")) / den)
-            .otherwise(0.0), 6).as("cos_sim"))
-        .groupBy(col("cluster"), col("q_id"))
-        .agg(graft.scale.TopK.topK(col("cos_sim"), col("vec_id"), KnnGraphK).as("top"))
-        .transform(rankTop("q_id", "vec_id"))
-    }
+      .select(col("cluster"), col("vec_id").as("q_id"), col("embedding"))
+    // the cross form keeps a history row whose id equals the q_id, as
+    // the oracle's join does
+    CellKernel.topK(delta, hist, KnnGraphK).withColumnRenamed("nbr_id", "vec_id")
   }
 
   val knnDeltaSql: String =
@@ -2158,7 +2031,7 @@ object ScaleQueries {
       }
     }
     val trans: Option[Double] =
-      if (w2 != 0L) Some(math.floor(6.0 * t / w2 * 1e6 + 0.5) / 1e6) else None
+      if (w2 != 0L) Some(Num.rd(6.0 * t / w2, 6)) else None
     Seq((deg.size.toLong, rows.length.toLong, t, trans))
       .toDF("n_nodes", "n_edges", "n_triangles", "transitivity")
   }
@@ -3930,9 +3803,6 @@ object ScaleQueries {
     * (doc_id % 3 = 0) keep the oracle self-contained.
     */
   val LrSteps = 3
-  private def rD(x: Double, s: Int): Double = {
-    val p = math.pow(10, s); math.floor(x * p + 0.5) / p
-  }
 
   def lrTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -3952,10 +3822,10 @@ object ScaleQueries {
         Num.savg(sum((p - col("y")) * col("x1")), count(lit(1)), 6, 9).as("gc"),
         Num.savg(sum((p - col("y")) * col("x2")), count(lit(1)), 6, 9).as("gs"))
         .head()
-      w = (rD(w._1 - 0.5 * g.getDouble(0), 9),
-        rD(w._2 - 0.5 * g.getDouble(1), 9),
-        rD(w._3 - 0.5 * g.getDouble(2), 9))
-      (step, rD(w._1, 6), rD(w._2, 6), rD(w._3, 6))
+      w = (Num.rd(w._1 - 0.5 * g.getDouble(0), 9),
+        Num.rd(w._2 - 0.5 * g.getDouble(1), 9),
+        Num.rd(w._3 - 0.5 * g.getDouble(2), 9))
+      (step, Num.rd(w._1, 6), Num.rd(w._2, 6), Num.rd(w._3, 6))
     }
     rows.toDF("step", "w_bias", "w_chars", "w_vowel")
   }
@@ -4321,19 +4191,13 @@ object ScaleQueries {
     Op("q_ann_recall", annRecall, annRecallSql),
     Op("q_retrieval_metrics", retrievalMetrics, retrievalMetricsSql),
     Op("q_cluster_balance", clusterBalance, clusterBalanceSql),
-    // Salt is result-identical (slicing only splits tasks) but keeps
-    // the cluster-keyed join from collapsing to k=8 tasks: the r9 sf10
-    // full sweep measured the unsalted registration at 682.8 s with one
-    // CPU-pinned task carrying a whole cell; salt 8/32/64 measured
-    // 264/132/133 s (salt 32 = the pair-volume CPU floor at 32 cores).
-    // Since r10 the salt DERIVES from the runtime's parallelism instead
-    // of hard-coding this host's 32 cores — a fixed literal under- or
-    // over-salts any other cluster (verdict r9 #8). k itself stays at
+    // Past the cell-table budget the pairs come from a cell-keyed join
+    // salted inside CellKernel by the runtime's parallelism: unsalted,
+    // the r9 sf10 sweep measured 682.8 s with one CPU-pinned task per
+    // cell; salt 8/32/64 measured 264/132/133 s at 32 cores. k stays at
     // the oracle-pinned default; the k-raised scale arm (17.6 s) lives
     // in ABBench.
-    Op("q_semantic_neardup",
-      (s, d) => semanticNearDup(s, d, salt = parallelismSalt(s)),
-      semanticNearDupSql),
+    Op("q_semantic_neardup", semanticNearDup(_, _), semanticNearDupSql),
     Op("q_span_dedup", spanDedup, spanDedupSql),
     Op("q_dup_runs", dupRuns, dupRunsSql),
     Op("q_winnow_pairs", winnowPairs, winnowPairsSql),

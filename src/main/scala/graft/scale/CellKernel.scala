@@ -3,20 +3,21 @@ package graft.scale
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, BroadcastMode, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.functions.{broadcast, col, lit, posexplode, when}
 import org.apache.spark.sql.types._
 
 /** Per-cell exact top-k, or every pair above a cosine threshold, as ONE
   * plan node: a probe relation of (cell int, id bigint, embedding
   * array<float>) rows against a broadcast table of the same shape.
   *
-  * The join+aggregate formulation (probe ⋈_cell broadcast(candidates)
+  * The join+aggregate formulation (broadcast(probe) ⋈_cell candidates
   * → filter self → snapped cosine → TopKAgg per (cell, id)) materializes
   * every candidate PAIR as a row: at the sf10 stress that is ~5·10⁹
   * pairs, each paying join-row construction, a per-pair `floor`
@@ -32,6 +33,15 @@ import org.apache.spark.sql.types._
   * The node installs its planner strategy in the session that builds it,
   * so it plans in any session, with or without `GraftExtensions`.
   *
+  * Queries reach the node only through the object's entry points,
+  * `topK(cells, k)` (self form), `topK(probe, table, k)` (cross form)
+  * and `pairsAbove(cells, tau)`. Each gates on the table's row count
+  * through [[Bounded]] at [[CellKernel.TableRows]]: under budget it
+  * builds the node (and checkpoints top-k output); past budget it runs
+  * the join formulation above, written once here, with the same schema
+  * and bit-identical snapped cosines. Top-k joins broadcast(probe) to
+  * the table on the cell; pairs run a salted cell equi-join.
+  *
   * Output: the probe's (cell, id) followed by (rank int, nbr_id bigint,
   * cos_sim double) per top-k neighbor, or by (nbr_id, cos_sim) per pair.
   *
@@ -45,9 +55,10 @@ import org.apache.spark.sql.types._
   *    floor(x·1e6 + 0.5)/1e6 — Spark's floor-to-LONG and Math.floor
   *    agree at |cos| ≤ 1;
   *  - top-k selection order is the TopKAgg total order (score desc, id
-  *    asc), which is insertion-order-free, and ranks follow it; a cell
-  *    of one (only self) yields no rows, like the no-pairs-no-group
-  *    aggregate;
+  *    asc), which is insertion-order-free, and ranks follow it; the self
+  *    form skips the candidate whose id is the probe's, so a cell of one
+  *    yields no rows, like the no-pairs-no-group aggregate, while the
+  *    cross form keeps every candidate;
   *  - pairs are the candidates with id > probe id (each unordered pair
   *    once, by its smaller endpoint) whose snapped cosine clears tau, in
   *    table order (the pair relation is order-free).
@@ -77,26 +88,100 @@ object CellKernel {
   val TableRows = 1000000L
 
   sealed trait Mode
-  final case class TopK(k: Int) extends Mode
+  /** `self`: probe and table are one relation, and a row is never its
+    * own neighbor. */
+  final case class TopK(k: Int, self: Boolean) extends Mode
   final case class PairsAbove(tau: Double) extends Mode
 
-  /** Each probe row's top-`k` table rows of its cell, self excluded. */
+  /** Each row's top-`k` rows of its cell, itself excluded. */
+  def topK(cells: DataFrame, k: Int): DataFrame = topK(TopK(k, self = true), cells, cells)
+
+  /** Each probe row's top-`k` table rows of its cell. Every candidate is
+    * kept, a table row whose id equals the probe's too. */
   def topK(probe: DataFrame, table: DataFrame, k: Int): DataFrame =
-    node(TopK(k), probe, table, "rank" -> IntegerType, "nbr_id" -> LongType,
-      "cos_sim" -> DoubleType)
+    topK(TopK(k, self = false), probe, table)
 
-  /** Each probe row's pairs with the larger ids of its cell at snapped
-    * cosine ≥ `tau`. */
-  def pairsAbove(probe: DataFrame, table: DataFrame, tau: Double): DataFrame =
-    node(PairsAbove(tau), probe, table, "nbr_id" -> LongType, "cos_sim" -> DoubleType)
+  private def topK(mode: TopK, probe: DataFrame, table: DataFrame): DataFrame = {
+    requireCells(probe, table)
+    Bounded(probe.sparkSession, TableRows)(table.count()) {
+      // eager checkpoint: the node runs once, as a plain job, and never
+      // inside a consumer's persist() cache build (CLAUDE.md)
+      node(mode, probe, table, "rank" -> IntegerType, "nbr_id" -> LongType,
+        "cos_sim" -> DoubleType).localCheckpoint()
+    } {
+      // the probe rides as a broadcast hash relation against one table
+      // scan; a shuffle join on cell alone would run in as many tasks as
+      // there are cells
+      val keep = if (mode.self) col("id") =!= col("nbr_id") else lit(true)
+      scored(probe, table, keep)((p, t) => t.join(broadcast(p), "cell"))
+        .groupBy(col("cell"), col("id"))
+        .agg(graft.scale.TopK.topK(col("cos_sim"), col("nbr_id"), mode.k).as("top"))
+        .select(col("cell"), col("id"), posexplode(col("top")).as(Seq("rank0", "e")))
+        .select(col("cell"), col("id"), (col("rank0") + 1).as("rank"),
+          col("e.id").as("nbr_id"), col("e.score").as("cos_sim"))
+        .transform(asProbe(probe))
+    }
+  }
 
-  private def node(mode: Mode, probe: DataFrame, table: DataFrame,
-      out: (String, DataType)*): DataFrame = {
-    for (side <- Seq(probe, table))
+  /** Each row's pairs with the larger ids of its cell at snapped cosine
+    * ≥ `tau`. */
+  def pairsAbove(cells: DataFrame, tau: Double): DataFrame = {
+    requireCells(cells)
+    val spark = cells.sparkSession
+    Bounded(spark, TableRows)(cells.count()) {
+      node(PairsAbove(tau), cells, cells, "nbr_id" -> LongType, "cos_sim" -> DoubleType)
+    } {
+      scored(cells, cells, col("id") < col("nbr_id"))(
+          Partitioning.saltedJoin(_, _, "cell", parallelismSalt(spark)))
+        .filter(col("cos_sim") >= tau)
+        .transform(asProbe(cells))
+    }
+  }
+
+  /** Probe-side salt of the past-budget pair join, sized to the runtime:
+    * a join keyed on the cell alone runs in as many tasks as there are
+    * cells (measured at the sf10 stress: 7 of 32 cores busy for ~30 min
+    * at 8 cells), and one slice per default-parallelism unit gives it
+    * cells × cores tasks wherever it runs. Slices only split tasks, so
+    * the rows are the same at any salt; past ~4× the pair-volume CPU
+    * floor more slices buy nothing (salt 32 vs 64: 132 vs 133 s on 32
+    * cores).
+    */
+  private def parallelismSalt(spark: SparkSession): Int =
+    math.max(1, spark.sparkContext.defaultParallelism)
+
+  /** The cell equi-join of `probe` and `table` as (cell, id, nbr_id,
+    * cos_sim) rows that satisfy `keep`, where cos_sim is the kernel's
+    * snapped cosine: each side's norm is computed once, as the node
+    * does, which is bit-identical to recomputing it per pair.
+    */
+  private def scored(probe: DataFrame, table: DataFrame, keep: Column)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val p = probe.toDF("cell", "id", "emb")
+      .withColumn("nrm", Similarity.norm(col("emb")))
+    val t = table.toDF("cell", "nbr_id", "nbr_emb")
+      .withColumn("nbr_nrm", Similarity.norm(col("nbr_emb")))
+    val den = col("nrm") * col("nbr_nrm")
+    join(p, t).filter(keep)
+      .select(col("cell"), col("id"), col("nbr_id"),
+        graft.Num.r(when(den > 0, Similarity.dot(col("emb"), col("nbr_emb")) / den)
+          .otherwise(0.0), 6).as("cos_sim"))
+  }
+
+  /** `df` with its (cell, id) columns named as the probe's, as the node
+    * names them. */
+  private def asProbe(probe: DataFrame)(df: DataFrame): DataFrame =
+    df.toDF(probe.columns.take(2) ++ df.columns.drop(2): _*)
+
+  private def requireCells(sides: DataFrame*): Unit =
+    for (side <- sides)
       require(side.schema.map(_.dataType) match {
         case Seq(IntegerType, LongType, ArrayType(FloatType, _)) => true
         case _ => false
       }, s"CellKernel sides are (int, bigint, array<float>), got ${side.schema.simpleString}")
+
+  private def node(mode: Mode, probe: DataFrame, table: DataFrame,
+      out: (String, DataType)*): DataFrame = {
     val spark = probe.sparkSession
     install(spark)
     GraftColumnBridge.ofRows(spark, CellKernel(mode,
@@ -202,9 +287,9 @@ final class CellTable(cells: Array[InternalRow], mode: CellKernel.Mode) {
   private val nrms = cells.map(_.getArray(2))
   private val dim = ids.indices.find(ids(_).numElements() > 0)
     .map(c => flat(c).numElements() / ids(c).numElements()).getOrElse(0)
-  private val (ranked, k, tau) = mode match {
-    case CellKernel.TopK(k) => (true, k, 0.0)
-    case CellKernel.PairsAbove(tau) => (false, 0, tau)
+  private val (ranked, self, k, tau) = mode match {
+    case CellKernel.TopK(k, self) => (true, self, k, 0.0)
+    case CellKernel.PairsAbove(tau) => (false, true, 0, tau)
   }
   // hits of the current probe row: snapped scores and candidate ids
   private var ks = new Array[Double](if (ranked) k else 16)
@@ -233,7 +318,7 @@ final class CellTable(cells: Array[InternalRow], mode: CellKernel.Mode) {
     var m = 0
     while (m < cid.numElements()) {
       val nbr = cid.getLong(m)
-      if (if (ranked) nbr != id else nbr > id) {
+      if (if (ranked) !self || nbr != id else nbr > id) {
         var dot = 0.0
         val off = m * dim
         var j = 0

@@ -134,39 +134,18 @@ object Similarity {
     * engines share).
     */
   def nearDupPairs(embeddings: DataFrame, planeIds: Seq[Long], threshold: Double): DataFrame = {
-    // CERTIFIED-BOUNDED fast path (r13): the bucket self-join is
-    // Σ C(bucket, 2) join rows; when the vector table fits the shared
-    // cell-table budget, emit each probe row's qualifying pairs in one
-    // tight loop over its bucket slice (CellKernel — identical
-    // snapped cosine, pair-once by v1 < v2). The bucket BIT DECISIONS
-    // are the exact lshSignature expressions (dot(embedding, plane) >= 0
-    // per plane in sorted-pid order); the int encoding Σ bitᵢ·2ⁱ is a
-    // bijection of the concat-string bucket, so the pair partition is
-    // identical by construction (no plane: every row in bucket 0, as
-    // the empty concat puts every row in bucket "").
-    Bounded(embeddings.sparkSession, CellKernel.TableRows)(embeddings.count()) {
-      val bucketInt = planes(embeddings, planeIds).zipWithIndex.map { case (pe, i) =>
-        when(dot(col("embedding"), typedLit(pe)) >= 0, lit(1 << i)).otherwise(lit(0))
-      }.foldLeft(lit(0))(_ + _).cast("int")
-      val cells = embeddings.select(bucketInt.as("bucket"), col("vec_id"), col("embedding"))
-      CellKernel.pairsAbove(cells, cells, threshold)
-        .select(col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
-    } {
-      val sigs = lshSignature(embeddings, planeIds)
-      // precompute the norm once per vector — per-pair work is then a
-      // single dot product (the norm value is bit-identical to
-      // recomputing it per pair, so the oracle SQL may still recompute)
-      val withSig = embeddings.join(sigs, Seq("vec_id"))
-        .select(col("vec_id"), col("embedding"), col("bucket"),
-          norm(col("embedding")).as("nrm"))
-      val den = col("a.nrm") * col("b.nrm")
-      withSig.as("a").join(withSig.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-          graft.Num.r(when(den > 0, dot(col("a.embedding"), col("b.embedding")) / den)
-            .otherwise(0.0), 6).as("cos_sim"))
-        .filter(col("cos_sim") >= threshold)
-    }
+    // The buckets are cells of CellKernel.pairsAbove. The bucket BIT
+    // DECISIONS are the exact lshSignature expressions (dot(embedding,
+    // plane) >= 0 per plane in sorted-pid order); the int encoding
+    // Σ bitᵢ·2ⁱ is a bijection of the concat-string bucket, so the pair
+    // partition is identical by construction (no plane: every row in
+    // bucket 0, as the empty concat puts every row in bucket "").
+    val bucketInt = planes(embeddings, planeIds).zipWithIndex.map { case (pe, i) =>
+      when(dot(col("embedding"), typedLit(pe)) >= 0, lit(1 << i)).otherwise(lit(0))
+    }.foldLeft(lit(0))(_ + _).cast("int")
+    CellKernel.pairsAbove(
+        embeddings.select(bucketInt.as("bucket"), col("vec_id"), col("embedding")), threshold)
+      .select(col("vec_id").as("v1"), col("nbr_id").as("v2"), col("cos_sim"))
   }
 
   /** IVF top-k: coarse quantization by label centroid — probe the single

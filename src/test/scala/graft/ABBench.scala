@@ -234,7 +234,8 @@ object ABBench {
     * the registered query broadcasts.
     */
   private def knnGraphSalted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.analytics.ScaleQueries.{KmeansK, KnnGraphK, KnnGraphSalt}
+    import graft.analytics.ScaleQueries.{KmeansK, KnnGraphK}
+    val KnnGraphSalt = 16
     import graft.scale.Similarity
     val emb = Tables.embeddings(spark, dir)
     val trained = graft.scale.KMeans.fit(emb, KmeansK, iters = 1)
@@ -513,12 +514,10 @@ object ABBench {
         Gates.withFallback(spark)(analytics.ScaleQueries.knnDelta(spark, sfDir).count())
       }
       time(s"semneardup_kernel_$i") {
-        analytics.ScaleQueries.semanticNearDup(spark, sfDir,
-          salt = analytics.ScaleQueries.parallelismSalt(spark)).count()
+        analytics.ScaleQueries.semanticNearDup(spark, sfDir).count()
       }
       time(s"semneardup_join_$i") {
-        Gates.withFallback(spark)(analytics.ScaleQueries.semanticNearDup(spark, sfDir,
-          salt = analytics.ScaleQueries.parallelismSalt(spark)).count())
+        Gates.withFallback(spark)(analytics.ScaleQueries.semanticNearDup(spark, sfDir).count())
       }
       time(s"embedneardup_kernel_$i") {
         analytics.ScaleQueries.embedNearDup(spark, sfDir).count()
@@ -611,20 +610,14 @@ object ABBench {
       time(s"seasonal_$i") { analytics.Relational.seasonalDecompose(spark, sfDir).count() }
       time(s"benford_$i") { analytics.Audit.benford(spark, sfDir).count() }
       // round-7 sf10 stress arms: the fixed-k IVF failure mode vs the
-      // raised-cells / salted scale knobs, and 7-chunk vs 8×8-pair
+      // raised-cells scale knob (the k-raised pair join runs forced, as
+      // it would past the cell-table budget), and 7-chunk vs 8×8-pair
       // simhash banding (opt-in via the name filter — the *_fixed arms
       // are the measured multi-minute regimes)
       time(s"semneardup_fixed_$i") { analytics.ScaleQueries.semanticNearDup(spark, sfDir).count() }
-      time(s"semneardup_k64s8_$i") {
-        analytics.ScaleQueries.semanticNearDup(spark, sfDir, k = 64, salt = 8).count() }
-      // r10 salt-by-parallelism registration: the literal-32 arm vs the
-      // derived salt (equal on a 32-core host; the A/B exists so any
-      // host where they differ has a recorded comparison)
-      time(s"semneardup_salt32_$i") {
-        analytics.ScaleQueries.semanticNearDup(spark, sfDir, salt = 32).count() }
-      time(s"semneardup_psalt_$i") {
-        analytics.ScaleQueries.semanticNearDup(spark, sfDir,
-          salt = analytics.ScaleQueries.parallelismSalt(spark)).count() }
+      time(s"semneardup_k64_join_$i") {
+        Gates.withFallback(spark)(
+          analytics.ScaleQueries.semanticNearDup(spark, sfDir, k = 64).count()) }
       time(s"knngraph_cells8_$i") { analytics.ScaleQueries.knnGraph(spark, sfDir).count() }
       time(s"knngraph_cells64_$i") {
         analytics.ScaleQueries.knnGraph(spark, sfDir, cells = 64).count() }

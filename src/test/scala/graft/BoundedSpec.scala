@@ -1,7 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -69,8 +70,7 @@ class BoundedSpec extends AnyFunSuite {
     ("dupClusters", d => () => Seq(ScaleQueries.dupClustersLsh(spark, d)), false),
     ("btFit", d => () =>
       Seq(Preference.btRating(spark, d), Preference.btRatingSe(spark, d)), false),
-    ("semanticNearDup", d => () =>
-      Seq(ScaleQueries.semanticNearDup(spark, d, salt = 4)), true),
+    ("semanticNearDup", d => () => Seq(ScaleQueries.semanticNearDup(spark, d)), true),
     ("knnGraph", d => () => Seq(ScaleQueries.knnGraph(spark, d)), true),
     ("knnDelta", d => () => Seq(ScaleQueries.knnDelta(spark, d)), true),
     ("triangleStatsOf", { d =>
@@ -182,37 +182,31 @@ class BoundedSpec extends AnyFunSuite {
     assert(fast == fallback)
   }
 
-  test("knnDelta collects no history rows when an id reaches the delta offset") {
-    // one history id at the offset voids the disjointness premise: the
-    // one-row certificate aggregate must decide that before any collect
+  test("knnDelta keeps a history row whose id equals a delta q_id") {
+    // vec 0 returns as the delta query 1000000; its nearest neighbor,
+    // renamed to 1000000, must stay among its candidates on both paths
+    val nbr = ScaleQueries.knnGraph(spark, sf)
+      .filter(col("vec_id") === 0L && col("rank") === 1).head().getAs[Long]("nbr_id")
     val dir = java.nio.file.Files.createTempDirectory("graft_knn_ids").toString
     Tables.embeddings(spark, sf)
-      .withColumn("vec_id", when(col("vec_id") === 499L, lit(1000499L))
+      .withColumn("vec_id", when(col("vec_id") === nbr, lit(1000000L))
         .otherwise(col("vec_id")))
       .write.parquet(s"$dir/embeddings.parquet")
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(s => names.add(s.name))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (got, plans) = executedPlans {
-      val df =
-        try {
-          val df = ScaleQueries.knnDelta(spark, dir)
-          // a marker job: once its start is delivered, every earlier one is
-          spark.sparkContext.parallelize(Seq(1), 1).map(identity).count()
-          val deadline = System.nanoTime() + 10_000_000_000L
-          while (!names.toArray.exists(_.toString.contains("BoundedSpec")) &&
-              System.nanoTime() < deadline) Thread.sleep(20)
-          df
-        } finally spark.sparkContext.removeSparkListener(listener)
-      rows(df)
-    }
-    val collects = names.toArray.map(_.toString).filter(_.startsWith("collect at"))
-    assert(collects.forall(_.contains("KMeans.scala")),
-      s"knnDelta collected outside the k-means fit: ${collects.mkString(", ")}")
-    assert(!plans.exists(_.contains("cellkernel")))
-    assert(got == Gates.withFallback(spark)(rows(ScaleQueries.knnDelta(spark, dir))))
+    val (fast, plans) = executedPlans(rows(ScaleQueries.knnDelta(spark, dir)))
+    assert(plans.exists(_.contains("cellkernel")), "the fast path was not taken")
+    assert(fast == Gates.withFallback(spark)(rows(ScaleQueries.knnDelta(spark, dir))))
+    // (cluster, q_id, rank, vec_id, cos_sim)
+    assert(fast.exists(r => r(1) == 1000000L && r(3) == 1000000L),
+      s"the history row 1000000 is missing from q_id 1000000's neighbors: " +
+        fast.filter(_(1) == 1000000L).mkString(", "))
+  }
+
+  test("no file under src/main but CellKernel.scala gates or builds the cell kernel") {
+    val needles = Seq("CellKernel.TableRows", "CellKernel(", "CellKernelExec(")
+    val forks = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => needles.exists(Files.readString(p).contains))
+      .map(_.getFileName.toString).toList
+    assert(forks == List("CellKernel.scala"))
   }
 }
