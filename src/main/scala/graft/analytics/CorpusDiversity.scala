@@ -162,9 +162,8 @@ object CorpusDiversity {
     * the same dial q_source_overlap reads from the near-dup graph but at
     * n-gram granularity).
     *
-    * Scale shape: trigrams are built map-side with zip_with over slices
-    * (per CLAUDE.md — indexing the split array inside a HOF lambda
-    * re-evaluates the split per element) and leave the scan as xxhash64
+    * Scale shape: trigrams are built map-side by Winnow.wordGrams over
+    * the projected word array and leave the scan as xxhash64
     * longs; gram instances shuffle once into the (source, gram-hash)
     * relation, everything after is gram-vocabulary-bounded: the
     * source-count aggregate and the hash-keyed join back are both over
@@ -173,16 +172,9 @@ object CorpusDiversity {
     * realistic gram vocabulary (the shingle tier's standing trade).
     */
   def ngramDiversity(spark: SparkSession, dir: String): DataFrame = {
-    val w = col("w")
-    val tri = when(size(w) >= 3,
-      zip_with(slice(w, lit(1), size(w) - 2),
-        zip_with(slice(w, lit(2), size(w) - 2), slice(w, lit(3), size(w) - 2),
-          (b, c) => concat(b, lit(" "), c)),
-        (a, bc) => concat(a, lit(" "), bc)))
-      .otherwise(array().cast("array<string>"))
     val sg = Tables.documents(spark, dir)
       .select(col("source"), split(trim(lower(col("text"))), "\\s+").as("w"))
-      .select(col("source"), explode(tri).as("g"))
+      .select(col("source"), explode(graft.scale.Winnow.wordGrams(col("w"), 3)).as("g"))
       .select(col("source"), xxhash64(col("g")).as("gh"))
       .groupBy(col("source"), col("gh")).agg(count(lit(1)).as("c"))
     val per = sg.groupBy(col("source")).agg(

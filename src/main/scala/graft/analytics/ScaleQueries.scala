@@ -3,13 +3,13 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Num, Op, Tables}
-import graft.scale.{Bounded, CellKernel, Dedup, Partitioning, Similarity, SimHash64}
+import graft.scale.{Bounded, CellKernel, Dedup, Partitioning, Similarity, SimHash64, Winnow}
 import graft.functions.TextAnalysis
 
 /** Scale-tier queries: deduplication, similarity search, token/fingerprint
   * ops over `documents` and `embeddings` (the LLM-training-data operators
   * of BASELINE.json's north star). Every query carries DuckDB oracle SQL;
-  * the hash-seeded tiers (MinHash via xxhash64) carry their exact answer's
+  * the hash-permuted tiers (MinHash) carry their exact answer's
   * SQL, and ScaleSpec/RegimeSpec pin them against the exact tier with
   * their gates forced.
   */
@@ -182,7 +182,7 @@ object ScaleQueries {
     */
   def containmentLsh(spark: SparkSession, dir: String): DataFrame =
     Bounded(spark, Dedup.MaxGroupPairs)(
-      Dedup.pairExpansion(docsWithPrefixes(spark, dir), "text", 3))(
+      Dedup.pairExpansion(Dedup.postings(docsWithPrefixes(spark, dir), "text", "doc_id", 3)))(
       containmentPairs(spark, dir))(containmentTiers(spark, dir))
 
   /** [[containmentLsh]]'s candidate tiers, the path past its budget. */
@@ -226,7 +226,7 @@ object ScaleQueries {
     val mh = Dedup.lshCandidates(
       Dedup.minhashSignatures(repDocs, "text", "doc_id", 3))
     // one fingerprint relation feeds both winnow tiers (EAGER checkpoint)
-    val fps = graft.scale.Winnow.fingerprints(repDocs, "text", "doc_id",
+    val fps = Winnow.fingerprints(repDocs, "text", "doc_id",
       k = 3, win = 3).localCheckpoint()
     val fpDf = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
     // RARE-FP tier: all pairs within genuinely rare fingerprints
@@ -235,9 +235,7 @@ object ScaleQueries {
       .join(fpDf.filter(col("df") > 1 && col("df") <= ContainRareDf), Seq("fp"))
       .groupBy(col("fp"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(explode(flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))),
-          y => struct(x.as("d1"), y.as("d2")))))).as("p"))
+      .select(explode(Dedup.pairsOf(col("ds"))).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
     // RAREST-PROBE tier (r9, forced by the sf1 sweep): a doc whose EVERY
     // fingerprint is common — a 5-word excerpt has exactly one winnow
@@ -269,7 +267,8 @@ object ScaleQueries {
       .select(least(col("pd"), col("od")).as("d1"),
         greatest(col("pd"), col("od")).as("d2"))
     val cands = mh.unionByName(rare).unionByName(probed).distinct()
-    val vRep = Dedup.containmentOnCandidates(repDocs, "text", "doc_id", 3, 0.9, cands)
+    val vRep = Dedup.containmentAbove(
+      Dedup.overlapsOf(repDocs, "text", "doc_id", 3, cands), 0.9)
     // cross-group expansion: every member pair of a verified rep pair
     // shares the reps' texts, hence their exact scores
     val cross = vRep
@@ -369,8 +368,8 @@ object ScaleQueries {
   /** Jaccard ≥ 0.5 near-dup pairs through the minhashDupPairs gate:
     * a corpus whose shingle pair expansion fits Dedup.MaxGroupPairs takes
     * the gate's fast path, the exact shingle tier; past it MinHash+LSH
-    * candidates are exact-verified. xxhash64 seeding is engine-specific,
-    * so the signatures have no SQL analog, but the pairs carry the exact
+    * candidates are exact-verified. The MinHash permutations have no SQL
+    * analog, so neither do the signatures, but the pairs carry the exact
     * answer's oracle: ScaleSpec (sf0.001, sf0.01) and RegimeSpec (sf0.1)
     * assert with the gate forced that LSH recall equals it.
     */
@@ -773,16 +772,6 @@ object ScaleQueries {
     * UTF8String.compareTo vs DuckDB binary collation.
     */
   def ngramTopK(spark: SparkSession, dir: String): DataFrame = {
-    // tokenize ONCE into a materialized column: an expression referenced
-    // inside a HOF lambda is re-evaluated per element, so building
-    // bigrams with element_at(split(...), i) would pay O(words²) regex
-    // splits per document. zip_with over two slices of the attribute is
-    // one split + O(words) concats per row.
-    val w = col("w")
-    val bigrams = when(size(w) >= 2,
-      zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
     // The corpus-wide count shuffle keys on (language, xxhash64(bigram))
     // — 8-byte longs instead of two-word strings (~3× smaller, the
     // shingle tier's trick). Winners resolve through a TINY second join:
@@ -797,7 +786,7 @@ object ScaleQueries {
     val grams = Tables.documents(spark, dir)
       .select(TextAnalysis.language(col("text")).as("language"),
         split(trim(lower(col("text"))), "\\s+").as("w"))
-      .select(col("language"), explode(bigrams).as("bigram"))
+      .select(col("language"), explode(Winnow.wordGrams(col("w"), 2)).as("bigram"))
     val counts = grams
       .select(col("language"), xxhash64(col("bigram")).as("bh"))
       .groupBy(col("language"), col("bh"))
@@ -2699,56 +2688,58 @@ object ScaleQueries {
        |       ${Num.rSql(s"CAST(sum(n_tokens) AS DOUBLE) / $PackCap", 4)} AS fill_ratio
        |FROM c GROUP BY 1, 2, 3""".stripMargin
 
-  /** Word-3-gram distinct shingles per doc — shared by the decontamination
-    * paths. Shingle definition matches the Jaccard tier (trim + whitespace
-    * split, 3-word windows); built with zip_with over slices (per CLAUDE.md:
-    * indexing the split array inside a HOF lambda re-evaluates the split
-    * per element).
+  /** Word-3-gram distinct shingles per doc as (doc_id, s) — shared by the
+    * decontamination paths. Shingle definition matches the Jaccard tier
+    * (trim + whitespace split, 3-word windows).
     */
-  private def wordTriShingles(docs: DataFrame): DataFrame = {
-    val w = col("w")
-    val tri = when(size(w) >= 3,
-      zip_with(slice(w, lit(1), size(w) - 2),
-        zip_with(slice(w, lit(2), size(w) - 2), slice(w, lit(3), size(w) - 2),
-          (b, c) => concat(b, lit(" "), c)),
-        (a, bc) => concat(a, lit(" "), bc)))
-      .otherwise(array().cast("array<string>"))
+  private def wordTriShingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
-      .select(col("doc_id"), explode(tri).as("s"))
+      .select(col("doc_id"), explode(Winnow.wordGrams(col("w"), 3)).as("s"))
       .distinct()
+
+  /** The eval-overlap flag of the decontamination paths. `units` and
+    * `evalUnits` are (doc_id, unit) relations, one row per distinct unit
+    * of a doc (shingles, fingerprints). Returns, for every doc of `units`
+    * holding a unit of the eval set, (doc_id, n, hits, ratio) with the
+    * count columns named `n` and `hits`.
+    *
+    * The eval set is a parameter precisely because at 100 TB the broadcast
+    * side must be bounded by the BENCHMARK's size, not the corpus's: eval
+    * units are built from the eval table alone (real benchmark suites are
+    * a few MB next to a training corpus), broadcast, and probed map-side.
+    * The only corpus-wide shuffle is the per-doc aggregate.
+    */
+  private def evalOverlap(units: DataFrame, evalUnits: DataFrame,
+      n: String, hits: String): DataFrame = {
+    val ev = broadcast(evalUnits.toDF("doc_id", "ev_u").select(col("ev_u")).distinct())
+    units.toDF("doc_id", "u").join(ev, col("u") === col("ev_u"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as(n), count(col("ev_u")).as(hits))
+      .filter(col(hits) > 0)
+      .select(col("doc_id"), col(n), col(hits),
+        Num.r(col(hits).cast("double") / col(n), 6).as("ratio"))
+  }
+
+  /** Registered testdata wiring of the decontamination queries: with no
+    * benchmark suite shipped in the test environment, every 25th doc
+    * stands in as the eval table. The `% 25` synthesis lives HERE
+    * (testdata only), not in the operators — their broadcast side is
+    * still built from the eval-table parameter.
+    */
+  private def againstEvery25th(against: (DataFrame, DataFrame) => DataFrame)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    against(docs, docs.filter(col("doc_id") % 25 === 0))
   }
 
   /** Benchmark decontamination against an EXTERNAL eval table: flag corpus
     * docs sharing word-3-gram shingles with `evalDocs` (doc_id, text).
-    *
-    * The eval set is a parameter precisely because at 100 TB the broadcast
-    * side must be bounded by the BENCHMARK's size, not the corpus's: eval
-    * shingles are built from `evalDocs` alone (real benchmark suites are
-    * a few MB next to a training corpus), broadcast, and probed map-side.
-    * The only corpus-wide shuffle is the per-doc distinct-shingle
-    * aggregate.
     */
-  def decontaminateAgainst(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
-    val shd = wordTriShingles(docs)
-    val ev = broadcast(
-      wordTriShingles(evalDocs).select(col("s").as("ev_s")).distinct())
-    shd.join(ev, col("s") === col("ev_s"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shingles"), count(col("ev_s")).as("n_overlap"))
-      .filter(col("n_overlap") > 0)
-      .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
-        Num.r(col("n_overlap").cast("double") / col("n_shingles"), 6).as("ratio"))
-  }
+  def decontaminateAgainst(docs: DataFrame, evalDocs: DataFrame): DataFrame =
+    evalOverlap(wordTriShingles(docs), wordTriShingles(evalDocs), "n_shingles", "n_overlap")
 
-  /** Registered testdata wiring: with no benchmark suite shipped in the
-    * test environment, every 25th doc stands in as the eval table. The
-    * `% 25` synthesis lives HERE (testdata only), not in the operator —
-    * the broadcast side is still built from the eval-table parameter.
-    */
-  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    decontaminateAgainst(docs, docs.filter(col("doc_id") % 25 === 0))
-  }
+  def decontaminate(spark: SparkSession, dir: String): DataFrame =
+    againstEvery25th(decontaminateAgainst)(spark, dir)
 
   /** Decontamination for eval sets TOO BIG to broadcast exactly: a Bloom
     * filter over the eval shingle hashes gates the corpus map-side
@@ -2777,10 +2768,8 @@ object ScaleQueries {
         Num.r(col("n_overlap").cast("double") / col("n_shingles"), 6).as("ratio"))
   }
 
-  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    decontaminateBloomAgainst(docs, docs.filter(col("doc_id") % 25 === 0))
-  }
+  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
+    againstEvery25th(decontaminateBloomAgainst)(spark, dir)
 
   val decontaminateSql: String =
     s"""WITH toks AS (
@@ -3065,25 +3054,16 @@ object ScaleQueries {
   require(RepetitionMaxDupTriRatio < NullRatioSentinel,
     "trainingMix null-ratio sentinel must exceed RepetitionMaxDupTriRatio")
   def repetitionFilter(spark: SparkSession, dir: String): DataFrame = {
-    val w = col("w")
-    // slices + zip_with, NOT element_at(w, i) in a transform lambda: if
-    // the w-projection collapses into this one, a lambda-body reference
-    // re-evaluates the split PER ELEMENT (O(words²) regex splits — this
-    // exact query cost 60 s at sf0.1 in that shape); zip_with arguments
-    // are evaluated once per row
-    def grams(n: Int): Column = {
-      val parts = (1 to n).map(j => slice(w, lit(j), size(w) - (n - 1)))
-      when(size(w) >= n,
-        parts.reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y))))
-        .otherwise(array().cast("array<string>"))
-    }
+    // wordGrams over the projected `w`, NOT element_at(split, i) in a
+    // transform lambda: that re-evaluates the split PER ELEMENT (this
+    // exact query cost 60 s at sf0.1 in that shape)
     def dupRatio(g: Column): Column =
       when(size(g) > 0,
         Num.r((size(g) - size(array_distinct(g))).cast("double") / size(g), 6))
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
       .select(col("doc_id"),
-        grams(2).as("g2"), grams(3).as("g3"))
+        Winnow.wordGrams(col("w"), 2).as("g2"), Winnow.wordGrams(col("w"), 3).as("g3"))
       .select(col("doc_id"),
         size(col("g3")).as("n_tri"),
         dupRatio(col("g2")).as("dup_bi_ratio"),
@@ -3218,19 +3198,11 @@ object ScaleQueries {
     * map-side projection both the batch operator and the streaming
     * span-frequency maintenance (Streams.spanDfStream) share.
     */
-  def spanHashes(docs: DataFrame): DataFrame = {
-    val w = col("w")
-    val spans = {
-      val parts = (1 to 3).map(j => slice(w, lit(j), size(w) - 2))
-      when(size(w) >= 3,
-        parts.reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y))))
-        .otherwise(array().cast("array<string>"))
-    }
+  def spanHashes(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
-      .select(col("doc_id"),
-        explode(array_distinct(transform(spans, s => xxhash64(s)))).as("sh"))
-  }
+      .select(col("doc_id"), explode(array_distinct(
+        transform(Winnow.wordGrams(col("w"), 3), s => xxhash64(s)))).as("sh"))
 
   /** Maximal duplicated-RUN detection — the bounded approximation of
     * exact substring dedup (Lee et al. 2021, "Deduplicating Training
@@ -3247,18 +3219,12 @@ object ScaleQueries {
     */
   val DupRunMinTokens = 12
   def dupRuns(spark: SparkSession, dir: String): DataFrame = {
-    val w = col("w")
-    val spans = {
-      val parts = (1 to 3).map(j => slice(w, lit(j), size(w) - 2))
-      when(size(w) >= 3,
-        parts.reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y))))
-        .otherwise(array().cast("array<string>"))
-    }
     val docs = Tables.documents(spark, dir)
     val sp = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .select(col("doc_id"),
-        posexplode(transform(spans, s => xxhash64(s))).as(Seq("pos0", "sh")))
+        posexplode(transform(Winnow.wordGrams(col("w"), 3), s => xxhash64(s)))
+          .as(Seq("pos0", "sh")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("sh"))
     val dup = sp.groupBy("sh").agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= 2).select("sh")
@@ -3418,31 +3384,15 @@ object ScaleQueries {
     * verbatim run of GramK + WinSize − 1 = 8 words shared with an eval
     * doc is detected. This is the contamination mode shingle-SET overlap
     * under-weighs: one long quoted eval passage inside a long document
-    * is a low shingle RATIO but a certain fingerprint hit. Same
-    * broadcast posture as [[decontaminateAgainst]] — the eval
-    * fingerprint side is bounded by the benchmark, the per-doc aggregate
-    * is the only corpus-wide shuffle.
+    * is a low shingle RATIO but a certain fingerprint hit. The same
+    * eval-overlap plan as [[decontaminateAgainst]] over fingerprints.
     */
-  def decontaminateWinnowAgainst(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
-    val fps = graft.scale.Winnow.fingerprints(docs, "text", "doc_id")
-    val ev = broadcast(
-      graft.scale.Winnow.fingerprints(evalDocs, "text", "doc_id")
-        .select(col("fp").as("ev_fp")).distinct())
-    fps.join(ev, col("fp") === col("ev_fp"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_fps"), count(col("ev_fp")).as("n_hits"))
-      .filter(col("n_hits") > 0)
-      .select(col("doc_id"), col("n_fps"), col("n_hits"),
-        Num.r(col("n_hits").cast("double") / col("n_fps"), 6).as("ratio"))
-  }
+  def decontaminateWinnowAgainst(docs: DataFrame, evalDocs: DataFrame): DataFrame =
+    evalOverlap(Winnow.fingerprints(docs, "text", "doc_id"),
+      Winnow.fingerprints(evalDocs, "text", "doc_id"), "n_fps", "n_hits")
 
-  /** Registered testdata wiring: every 25th doc stands in as the eval
-    * table (the q_decontaminate convention).
-    */
-  def decontaminateWinnow(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    decontaminateWinnowAgainst(docs, docs.filter(col("doc_id") % 25 === 0))
-  }
+  def decontaminateWinnow(spark: SparkSession, dir: String): DataFrame =
+    againstEvery25th(decontaminateWinnowAgainst)(spark, dir)
 
   val decontaminateWinnowSql: String =
     s"""WITH $winnowFpCtesSql,

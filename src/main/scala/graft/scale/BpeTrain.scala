@@ -36,15 +36,9 @@ object BpeTrain {
     * Pair key = "a b" (symbols never contain whitespace, so the space
     * separator is unambiguous).
     */
-  def pairCounts(wf: DataFrame): DataFrame = {
-    val s = col("s")
-    val pairs = when(size(s) >= 2,
-      zip_with(slice(s, lit(1), size(s) - 1), slice(s, lit(2), size(s) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
-    wf.select(col("freq"), explode(pairs).as("pair"))
+  def pairCounts(wf: DataFrame): DataFrame =
+    wf.select(col("freq"), explode(Winnow.wordGrams(col("s"), 2)).as("pair"))
       .groupBy("pair").agg(sum(col("freq")).as("n"))
-  }
 
   /** One greedy merge pass over the symbol arrays (map-side fold). */
   def applyMerge(wf: DataFrame, a: String, b: String): DataFrame =

@@ -11,13 +11,21 @@ import org.apache.spark.sql.functions._
   *  - exact dedup = one hash shuffle on a 128-bit digest (never on the
   *    full text);
   *  - exact Jaccard is the quadratic baseline — candidate generation via
-  *    shingle inverted index (explode + self-join) with per-doc shingle
-  *    dedup to bound hot keys;
-  *  - MinHash+LSH is the linear-ish scale path: 64 permutations via
-  *    seeded xxhash64, banded 16×4, candidates from band-bucket join
-  *    only, then exact verification on the candidate set. At 100 TB the
-  *    band join shuffles only (band, bucket, doc_id) tuples — a tiny
-  *    fraction of corpus bytes.
+  *    shingle inverted index (explode + groupBy pair expansion) with
+  *    per-doc shingle dedup to bound hot keys;
+  *  - MinHash+LSH is the linear-ish scale path: 128 permutations
+  *    (FNV-1a shingle hashes remixed by splitmix64), banded 32×4,
+  *    candidates from band-bucket join only, then exact verification on
+  *    the candidate set. At 100 TB the band join shuffles only (band,
+  *    bucket, doc_id) tuples — a tiny fraction of corpus bytes.
+  *
+  * Every shingle near-dup query scores through one OVERLAP RELATION
+  * (d1, d2, c = |A∩B|, n1 = |A|, n2 = |B|) with d1 < d2, over the
+  * distinct n-shingle sets A, B. Two producers build it — the exact
+  * inverted index [[overlapCounts]] and the candidate verifier
+  * [[overlapsOf]] — and two measures read it, [[jaccard]] and
+  * [[containment]]. A candidate tier therefore changes only which pairs
+  * reach [[overlapsOf]], never how a pair is scored.
   */
 object Dedup {
 
@@ -38,28 +46,17 @@ object Dedup {
   def shingleHashes(text: Column, n: Int): Column =
     ShingleExprs.shingleHashes(text, n)
 
-  /** Enumerate ordered (d1 < d2) pairs from a sorted id array — HOF pair
-    * expansion after a groupBy(shingle), which costs ONE shuffle of
-    * (shingle, doc_id) instead of a self-join's two.
+  /** Enumerate ordered (x, y) pairs, x before y, of a sorted array as
+    * structs (d1, d2) — HOF pair expansion after a groupBy(key), which
+    * costs ONE shuffle of (key, member) instead of a self-join's two.
+    * Members are ids, or (doc_id, n_sh) structs, which sort doc_id first
+    * and so carry each doc's set size into the pair in the same d1 < d2
+    * order.
     */
-  private[graft] def pairsOf(sortedIds: Column): Column =
-    flatten(transform(sortedIds, (x, i) =>
-      transform(slice(sortedIds, i + 2, size(sortedIds)),
+  private[graft] def pairsOf(sorted: Column): Column =
+    flatten(transform(sorted, (x, i) =>
+      transform(slice(sorted, i + 2, size(sorted)),
         y => struct(x.as("d1"), y.as("d2")))))
-
-  /** Pair expansion that carries each doc's shingle-set size alongside its
-    * id: structs sort by (doc_id, n_sh) — doc_id first, so the d1 < d2
-    * order is identical to pairsOf — and every emitted pair already holds
-    * both set sizes. Eliminates the separate per-doc size aggregate (a
-    * second full shingling pass over the corpus) and the two size joins
-    * that jaccardPairs otherwise needs; the inverted-index shuffle rows
-    * widen by one long, a rounding error next to a rescan of corpus text.
-    */
-  private def pairsWithSizes(sortedMembers: Column): Column =
-    flatten(transform(sortedMembers, (x, i) =>
-      transform(slice(sortedMembers, i + 2, size(sortedMembers)),
-        y => struct(x.getField("doc_id").as("d1"), x.getField("n_sh").as("n1"),
-          y.getField("doc_id").as("d2"), y.getField("n_sh").as("n2")))))
 
   /** Default document-frequency / bucket-size cap: far above any organic
     * shingle df (testdata max df is 25 at sf0.1; natural-language shingle
@@ -76,78 +73,111 @@ object Dedup {
     */
   val MaxGroupPairs: Long = MaxGroup.toLong * (MaxGroup - 1) / 2
 
-  /** Σ C(df, 2) over the distinct n-shingles of `docs`: the pair rows the
+  /** Shingle postings (doc_id, n_sh, s): one row per distinct n-shingle
+    * s of each document, carrying the doc's distinct-shingle count n_sh —
+    * the one relation both the exact tier's inverted index
+    * ([[overlapCounts]]) and its cost certificate ([[pairExpansion]])
+    * read, so the certificate measures exactly what the tier expands.
+    */
+  def postings(docs: DataFrame, textCol: String, keyCol: String, n: Int): DataFrame =
+    docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("shs"))
+      .select(col("doc_id"), size(col("shs")).as("n_sh"), explode(col("shs")).as("s"))
+
+  /** Σ C(df, 2) over the shingles of `postings`: the pair rows the
     * exact tier's inverted index enumerates before its pair aggregate,
     * and so its cost — quadratic in duplication, not in row count. One
     * shingling pass and one aggregate; summed as a double so a hot
     * corpus cannot overflow (Double.toLong saturates).
     */
-  def pairExpansion(docs: DataFrame, textCol: String, n: Int): Long =
-    docs.select(explode(shingleHashes(col(textCol), n)).as("s"))
-      .groupBy(col("s")).agg(count(lit(1)).as("df"))
+  def pairExpansion(postings: DataFrame): Long =
+    postings.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .agg(coalesce(sum(col("df").cast("double") * (col("df") - 1) / 2), lit(0.0)))
       .head().getDouble(0).toLong
 
-  /** Exact n-gram Jaccard pairs ≥ threshold via shingle inverted index.
-    * O(candidate pairs); run on bounded corpora or post-LSH candidates.
+  /** The EXACT producer of the overlap relation: an inverted index over
+    * `postings` whose pair expansion counts c per pair and carries both
+    * set sizes — one shingling pass, no second corpus scan and no size
+    * joins. O(candidate pairs); run on bounded corpora.
     *
     * `maxDf` guards the scale-killer: one ubiquitous shingle (a stop-word
     * trigram, a boilerplate header) shared by k docs expands to a single
     * O(k²) array in ONE task. Shingles with df > maxDf are dropped from
     * candidate generation — pairs whose overlap consists ONLY of such
-    * boilerplate shingles are not reported, and a reported pair's jaccard
-    * can be under-counted by the dropped shingles' contribution. With the
+    * boilerplate shingles are not reported, and a reported pair's c can
+    * be under-counted by the dropped shingles' contribution. With the
     * default cap no organic corpus is affected (see MaxGroup).
+    */
+  private[graft] def overlapCounts(postings: DataFrame, maxDf: Int): DataFrame =
+    postings.groupBy(col("s"))
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh")))).as("ds"))
+      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
+      .select(explode(pairsOf(col("ds"))).as("p"))
+      .groupBy(col("p.d1.doc_id").as("d1"), col("p.d2.doc_id").as("d2"))
+      .agg(count(lit(1)).as("c"),
+        first(col("p.d1.n_sh")).as("n1"), first(col("p.d2.n_sh")).as("n2"))
+
+  /** The VERIFYING producer of the overlap relation: any candidate
+    * (d1, d2) relation, each pair scored on the two shingle arrays
+    * joined in — one array_intersect per pair. Shingle arrays are
+    * distinct, so |A∪B| = n1 + n2 − c exactly and the measures compute
+    * the same doubles as over [[overlapCounts]]. Θ(candidates), not
+    * Σ C(df,2) over the corpus; precision is exact by construction.
+    */
+  def overlapsOf(docs: DataFrame, textCol: String, keyCol: String, n: Int,
+      candidates: DataFrame): DataFrame = {
+    val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
+    candidates.select(col("d1"), col("d2"))
+      .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
+      .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
+      .select(col("d1"), col("d2"), size(array_intersect(col("sh1"), col("sh2"))).as("c"),
+        size(col("sh1")).as("n1"), size(col("sh2")).as("n2"))
+  }
+
+  /** Jaccard resemblance |A∩B| / |A∪B| over an overlap relation. */
+  val jaccard: Column = col("c").cast("double") / (col("n1") + col("n2") - col("c"))
+
+  /** Containment |A∩B| / min(|A|, |B|) over an overlap relation — the
+    * asymmetric near-dup measure. A truncated crawl, a quoted article,
+    * an excerpt shard is ~fully contained in its parent while its
+    * Jaccard resemblance falls with the length ratio, so a
+    * Jaccard-thresholded dedup pass never pairs them; containment reads
+    * 1.0 regardless of the parent's extra length (Broder's containment,
+    * the measure superset-dedup passes run on).
+    */
+  val containment: Column = col("c").cast("double") / least(col("n1"), col("n2"))
+
+  /** (d1, d2, jaccard) pairs of an overlap relation at jaccard ≥ threshold. */
+  def jaccardAbove(overlaps: DataFrame, threshold: Double): DataFrame =
+    overlaps.select(col("d1"), col("d2"), jaccard.as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** (d1, d2, containment, jaccard) pairs of an overlap relation at
+    * containment ≥ threshold; jaccard rides along for the contrast
+    * report.
+    */
+  def containmentAbove(overlaps: DataFrame, threshold: Double): DataFrame =
+    overlaps.select(col("d1"), col("d2"), containment.as("containment"), jaccard.as("jaccard"))
+      .filter(col("containment") >= threshold)
+
+  /** Exact n-gram Jaccard pairs ≥ threshold via the shingle inverted
+    * index ([[overlapCounts]], df-capped at `maxDf`).
     */
   def jaccardPairs(docs: DataFrame, textCol: String, keyCol: String,
       n: Int, threshold: Double, maxDf: Int = MaxGroup): DataFrame =
-    overlapCounts(docs, textCol, keyCol, n, maxDf)
-      .select(col("d1"), col("d2"),
-        (col("c").cast("double") / (col("n1") + col("n2") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardAbove(overlapCounts(postings(docs, textCol, keyCol, n), maxDf), threshold)
 
-  /** Shared candidate-pair overlap relation for the exact-similarity
-    * family: (d1, d2, c = |shingles ∩|, n1, n2 = distinct-shingle
-    * counts). One shingling pass — each exploded (shingle, doc) row
-    * carries the doc's distinct-shingle count, so similarity denominators
-    * need no second corpus scan and no size joins downstream.
-    */
-  private def overlapCounts(docs: DataFrame, textCol: String, keyCol: String,
-      n: Int, maxDf: Int): DataFrame = {
-    val sh = docs
-      .select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("shs"))
-      .select(col("doc_id"), size(col("shs")).as("n_sh"), explode(col("shs")).as("s"))
-    sh.groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh")))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
-      .select(explode(pairsWithSizes(col("ds"))).as("p"))
-      .groupBy(col("p.d1").as("d1"), col("p.d2").as("d2"))
-      .agg(count(lit(1)).as("c"), first(col("p.n1")).as("n1"), first(col("p.n2")).as("n2"))
-  }
-
-  /** Exact n-gram CONTAINMENT pairs ≥ threshold: |A∩B| / min(|A|, |B|) —
-    * the asymmetric near-dup measure. A truncated crawl, a quoted
-    * article, an excerpt shard is ~fully contained in its parent while
-    * its Jaccard resemblance falls with the length ratio, so a
-    * Jaccard-thresholded dedup pass never pairs them; containment reads
-    * 1.0 regardless of the parent's extra length (Broder's containment,
-    * the measure superset-dedup passes run on). Same inverted-index
+  /** Exact n-gram CONTAINMENT pairs ≥ threshold. Same inverted-index
     * shape, df-cap, and O(candidate-pairs) cost as [[jaccardPairs]] —
     * and the same EXACT-TIER status: Σ C(df,2) pair expansion is
     * quadratic in duplication density (BASELINE.md round-7 sf1 spot
     * check: ~23 s warm on the adversarial ScaleUp corpus, right beside
     * the exact jaccard entry). So it runs behind a gate on that cost
-    * (ScaleQueries.containmentLsh); at volume run it on post-LSH / delta
-    * candidate sets, not the raw corpus. Jaccard rides along for the
-    * contrast report.
+    * (ScaleQueries.containmentLsh); at volume run [[overlapsOf]] on
+    * candidate sets, not the raw corpus.
     */
   def containmentPairs(docs: DataFrame, textCol: String, keyCol: String,
       n: Int, threshold: Double, maxDf: Int = MaxGroup): DataFrame =
-    overlapCounts(docs, textCol, keyCol, n, maxDf)
-      .select(col("d1"), col("d2"),
-        (col("c").cast("double") / least(col("n1"), col("n2"))).as("containment"),
-        (col("c").cast("double") / (col("n1") + col("n2") - col("c"))).as("jaccard"))
-      .filter(col("containment") >= threshold)
+    containmentAbove(overlapCounts(postings(docs, textCol, keyCol, n), maxDf), threshold)
 
   // 128 perms as 32 bands × 4 rows, s* = (1/32)^(1/4) ≈ 0.42. Raised
   // from 64/16×4 in r9: the first sf1 oracle sweep measured 11 of
@@ -162,8 +192,9 @@ object Dedup {
   val LshRows = 4
 
   /** MinHash signatures computed in ONE pass per document by the fused
-    * MinHashSig expression — no explode, no 64-way aggregate, no shuffle:
-    * the only bytes leaving the scan stage are 64 longs per doc.
+    * MinHashSig expression — no explode, no per-permutation aggregate, no
+    * shuffle: the only bytes leaving the scan stage are MinHashPerms
+    * longs per doc.
     */
   def minhashSignatures(docs: DataFrame, textCol: String, keyCol: String, n: Int): DataFrame =
     docs.select(col(keyCol).as("doc_id"),
@@ -478,56 +509,26 @@ object Dedup {
     *
     * Gated on the exact tier's own cost: when the shingle index's pair
     * expansion [[pairExpansion]] is at most [[MaxGroupPairs]] (the
-    * certificate), the exact tier [[jaccardPairs]] runs instead. No
-    * shingle can then have df > MaxGroup, so the df cap drops nothing and
-    * the exact tier returns the all-pairs answer — the same d1 < d2 pairs
-    * and the same c / (n1 + n2 - c) doubles the verification computes as
-    * |∩| / |∪| — without the banding pipeline's fixed cost (eager
-    * signature checkpoint, over-cap census, band self-join), which
-    * dominates a corpus of a few hundred organic documents. A corpus of
-    * mass duplication (1 000 copies of one 99-word document: 97 ×
-    * C(1000, 2) pairs) fails the certificate at any row count and keeps
-    * the LSH tiers, which fold copies into shared buckets. Past the
+    * certificate), the exact tier runs over the same postings instead.
+    * No shingle can then have df > MaxGroup, so the df cap drops nothing
+    * and the exact tier returns the all-pairs answer — the same d1 < d2
+    * pairs and, through the one overlap relation, the same doubles the
+    * verification computes — without the banding pipeline's fixed cost
+    * (eager signature checkpoint, over-cap census, band self-join),
+    * which dominates a corpus of a few hundred organic documents. A
+    * corpus of mass duplication (1 000 copies of one 99-word document:
+    * 97 × C(1000, 2) pairs) fails the certificate at any row count and
+    * keeps the LSH tiers, which fold copies into shared buckets. Past the
     * budget, RegimeSpec pins LSH recall against the exact tier at sf0.1
     * and ScaleSpec at sf0.001 and sf0.01, with the gate forced.
     */
   def minhashDupPairs(docs: DataFrame, textCol: String, keyCol: String,
-      n: Int, threshold: Double): DataFrame =
-    Bounded(docs.sparkSession, MaxGroupPairs)(pairExpansion(docs, textCol, n))(
-      jaccardPairs(docs, textCol, keyCol, n, threshold)) {
-      val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-      val cands = lshCandidates(minhashSignatures(docs, textCol, keyCol, n))
-      // verify candidates with exact Jaccard over the shingle arrays
-      cands
-        .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
-        .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
-        .select(col("d1"), col("d2"),
-          (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-            size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    }
-
-  /** Exact containment + jaccard scored on a CANDIDATE pair set only —
-    * the scale path for superset/excerpt detection. `candidates` is any
-    * (d1, d2) relation (winnowing overlap pairs in q_containment_lsh:
-    * a shared substring of ≥ GramK+WinSize−1 words guarantees a shared
-    * fingerprint, and a high-containment pair shares long token runs by
-    * construction). Each candidate pair is verified with the exact
-    * shingle-set intersection via two array joins — the minhashDupPairs
-    * verification shape — so precision is exact by construction and
-    * total cost is Θ(candidates), not Σ C(df,2) over the corpus.
-    */
-  def containmentOnCandidates(docs: DataFrame, textCol: String, keyCol: String,
-      n: Int, threshold: Double, candidates: DataFrame): DataFrame = {
-    val sh = docs.select(col(keyCol).as("doc_id"), shingleHashes(col(textCol), n).as("sh"))
-    candidates.select(col("d1"), col("d2"))
-      .join(sh.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
-      .join(sh.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          least(size(col("sh1")), size(col("sh2")))).as("containment"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2")))).as("jaccard"))
-      .filter(col("containment") >= threshold)
+      n: Int, threshold: Double): DataFrame = {
+    val post = postings(docs, textCol, keyCol, n)
+    val overlaps = Bounded(docs.sparkSession, MaxGroupPairs)(pairExpansion(post))(
+      overlapCounts(post, MaxGroup))(
+      overlapsOf(docs, textCol, keyCol, n,
+        lshCandidates(minhashSignatures(docs, textCol, keyCol, n))))
+    jaccardAbove(overlaps, threshold)
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * These expressions do one pass over the text with zero intermediate
   * string materialization: token boundaries are scanned once, each
   * shingle is hashed incrementally (FNV-1a over the joined tokens), and
-  * MinHashSig additionally folds the 64 permuted minima in the same
-  * loop — so a MinHash signature never shuffles anything but the final
-  * 64 longs per document.
+  * MinHashSig additionally folds the permuted minima (Dedup.MinHashPerms
+  * = 128 splitmix64 remixes of each shingle's hash) in the same loop — so
+  * a MinHash signature never shuffles anything but the final 128 longs
+  * per document.
   *
   * Hash identity does not matter for correctness anywhere these are
   * used: Jaccard joins only rely on hash equality (collision odds 2⁻⁶⁴),

@@ -36,6 +36,19 @@ object Winnow {
   private def gramHash(g: Column): Column =
     conv(substring(md5(g), 1, 13), 16, 10).cast("long")
 
+  /** Word k-grams of the word array `w`, each the k words joined by one
+    * space; empty when `w` has fewer than k words. `w` must be an
+    * already-projected attribute, never the split expression itself: the
+    * grams are a zip_with over k shifted slices, whose arguments evaluate
+    * once per row, while an expression referenced inside a HOF lambda is
+    * re-evaluated per element (CollapseProject inlines it — O(n²)).
+    */
+  def wordGrams(w: Column, k: Int): Column =
+    when(size(w) >= k,
+      (1 to k).map(j => slice(w, lit(j), size(w) - (k - 1)))
+        .reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y))))
+      .otherwise(array().cast("array<string>"))
+
   /** Per-document distinct winnowed fingerprints as (doc_id, fp) rows.
     * Docs shorter than `k` words emit nothing; docs with fewer than
     * `win` grams keep all their gram hashes (the degenerate single
@@ -46,16 +59,6 @@ object Winnow {
     */
   def fingerprints(docs: DataFrame, textCol: String, keyCol: String,
       k: Int = GramK, win: Int = WinSize): DataFrame = {
-    val w = col("w")
-    // k-gram strings via zip_with over slices: arguments evaluate once
-    // per row (CLAUDE.md: indexing a same-query array inside a HOF
-    // lambda re-evaluates its builder per element)
-    val grams = {
-      val parts = (1 to k).map(j => slice(w, lit(j), size(w) - (k - 1)))
-      when(size(w) >= k,
-        parts.reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y))))
-        .otherwise(array().cast("array<string>"))
-    }
     val gh = col("gh")
     // sliding window-min over the gram-hash array, again as a zip_with
     // reduction over `win` shifted slices
@@ -67,7 +70,7 @@ object Winnow {
     }
     docs
       .select(col(keyCol).as("doc_id"), split(trim(col(textCol)), "\\s+").as("w"))
-      .select(col("doc_id"), transform(grams, g => gramHash(g)).as("gh"))
+      .select(col("doc_id"), transform(wordGrams(col("w"), k), g => gramHash(g)).as("gh"))
       .select(col("doc_id"), explode(array_distinct(mins)).as("fp"))
   }
 
@@ -80,14 +83,11 @@ object Winnow {
   def overlapPairs(docs: DataFrame, textCol: String, keyCol: String,
       minShared: Int, maxDf: Int = Dedup.MaxGroup,
       k: Int = GramK, win: Int = WinSize): DataFrame = {
-    val pairs = fingerprints(docs, textCol, keyCol, k, win)
+    fingerprints(docs, textCol, keyCol, k, win)
       .groupBy(col("fp"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
-      .select(explode(flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))),
-          y => struct(x.as("d1"), y.as("d2")))))).as("p"))
-    pairs
+      .select(explode(Dedup.pairsOf(col("ds"))).as("p"))
       .groupBy(col("p.d1").as("d1"), col("p.d2").as("d2"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

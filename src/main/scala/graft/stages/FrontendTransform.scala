@@ -3,6 +3,7 @@ package graft.stages
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{DeviceInfo, Normalize, Scoring, UrlInfo}
+import Validation.optCol
 
 /** Frontend interaction transform stage (SURVEY.md §3 Trace 2;
   * etl/transform/frontend_transformer.py:23-72).
@@ -11,15 +12,6 @@ import graft.functions.{DeviceInfo, Normalize, Scoring, UrlInfo}
   */
 object FrontendTransform {
   val RequiredFields = Seq("event_type", "timestamp")
-
-  def isValid(df: DataFrame): Column =
-    RequiredFields.map(f => col(f).isNotNull).reduce(_ && _)
-
-  /** Optional input column: resolve if present, else typed null — event
-    * payloads are sparse and heterogeneous (F20).
-    */
-  private def optCol(df: DataFrame, name: String): Column =
-    if (df.columns.contains(name)) col(name) else lit(null).cast("string")
 
   /** F20 extract_event_specific_data — event-type-dependent payload kept
     * as a JSON string column (heterogeneous shapes; SURVEY §7 risk
@@ -41,7 +33,7 @@ object FrontendTransform {
   def enrich(raw: DataFrame, asOfMs: Long): DataFrame = {
     val u = col("page_url")
     val hasUrl = u.isNotNull && u =!= ""
-    raw.filter(isValid(raw)).select(
+    raw.filter(Validation.hasRequired(RequiredFields)).select(
       Normalize.normString(col("session_id")).as("session_id"),
       Normalize.normString(col("user_id")).as("user_id"),
       Normalize.normalizeEventType(col("event_type")).as("event_type"),

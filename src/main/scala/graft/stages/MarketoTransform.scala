@@ -1,6 +1,6 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Normalize, Scoring}
 
@@ -14,14 +14,6 @@ import graft.functions.{Normalize, Scoring}
   */
 object MarketoTransform {
   val RequiredFields = Seq("id", "email")
-
-  /** P1 validation predicate (base_transformer.py:34-41). */
-  def isValid(df: DataFrame): Column =
-    RequiredFields.map(f => col(f).isNotNull).reduce(_ && _)
-
-  /** Optional input column — sparse lead payloads may omit fields. */
-  private def optCol(df: DataFrame, name: String): Column =
-    if (df.columns.contains(name)) col(name) else lit(null).cast("string")
 
   /** Enrich raw leads; `asOfMs` pins SC1 recency and F1 parse fallback
     * (reference uses wall-clock now()).
@@ -43,10 +35,10 @@ object MarketoTransform {
     */
   def enrich(raw: DataFrame, asOfMs: Long): DataFrame = {
     val asOf = lit(asOfMs)
-    def oc(n: String) = optCol(raw, n)
+    def oc(n: String) = Validation.optCol(raw, n)
     // stage 1: string/timestamp normalization (the regex-heavy half) +
     // cheap raw pass-throughs the scoring stage consumes
-    val normalized = raw.filter(isValid(raw)).select(
+    val normalized = raw.filter(Validation.hasRequired(RequiredFields)).select(
       col("id").cast("long").as("lead_id"),
       Normalize.normalizeEmail(col("email")).as("email"),
       Normalize.normString(col("firstName")).as("first_name"),

@@ -9,6 +9,18 @@ import org.apache.spark.sql.functions._
   */
 object Validation {
 
+  /** P1 validation predicate (base_transformer.py:34-41): every
+    * required field is non-null.
+    */
+  def hasRequired(required: Seq[String]): Column =
+    required.map(f => col(f).isNotNull).reduce(_ && _)
+
+  /** Optional input column: resolve if present, else a typed null —
+    * sparse, heterogeneous payloads may omit fields (F20).
+    */
+  def optCol(df: DataFrame, name: String): Column =
+    if (df.columns.contains(name)) col(name) else lit(null).cast("string")
+
   /** P1: split into (valid, deadLetter) on required-field nullness
     * (base_transformer.py:34-41; consumer dead-letter accounting
     * enhanced_kpi_consumer.py:256-301). Both branches share one scan —
@@ -16,7 +28,7 @@ object Validation {
     * outputs from a single pass (persist if both are consumed).
     */
   def split(df: DataFrame, required: Seq[String]): (DataFrame, DataFrame) = {
-    val ok = required.map(f => col(f).isNotNull).reduce(_ && _)
+    val ok = hasRequired(required)
     (df.filter(ok), df.filter(!ok))
   }
 

@@ -20,9 +20,6 @@ import graft.functions.{CostModel, ModelInfo, Normalize, Scoring, TextAnalysis}
 object TextAgentTransform {
   val RequiredFields = Seq("session_id", "turn_id", "model", "tokens_in", "tokens_out")
 
-  def isValid(df: DataFrame): Column =
-    RequiredFields.map(f => col(f).isNotNull).reduce(_ && _)
-
   def enrich(raw: DataFrame, asOfMs: Long): DataFrame = {
     val m = col("model")
     val text = coalesce(col("response_text"), lit(""))
@@ -32,7 +29,7 @@ object TextAgentTransform {
     val cost = CostModel.estimateCost(tin, tout, m)
     val convInd = TextAnalysis.conversionIndicators(text)
 
-    raw.filter(isValid(raw)).select(
+    raw.filter(Validation.hasRequired(RequiredFields)).select(
       Normalize.normString(col("session_id")).as("session_id"),
       Normalize.normString(col("turn_id")).as("turn_id"),
       Normalize.normString(col("user_id")).as("user_id"),

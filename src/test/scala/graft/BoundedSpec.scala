@@ -20,6 +20,25 @@ object Gates {
     try body finally spark.conf.unset(Bounded.FallbackConf)
   }
 
+  /** `body`'s result and the lower-cased executed plan of every query it
+    * ran, eager checkpoints and cache builds included.
+    */
+  def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString.toLowerCase)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext, 30_000L)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext, 30_000L)
+      (out, plans.toArray.map(_.toString).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Copy the first `n` rows (in full-row order) of each of `dir`'s
     * `tables` under a fresh temp dir, in the testdata layout.
     */
@@ -100,24 +119,7 @@ class BoundedSpec extends AnyFunSuite {
       }
     }
 
-  /** `body`'s result and the lower-cased executed plan of every query it
-    * ran, eager checkpoints and cache builds included.
-    */
-  private def executedPlans[T](body: => T): (T, Seq[String]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString.toLowerCase)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerBusDrain(spark.sparkContext, 30_000L)
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      ListenerBusDrain(spark.sparkContext, 30_000L)
-      (out, plans.toArray.map(_.toString).toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
+  private def executedPlans[T](body: => T): (T, Seq[String]) = Gates.executedPlans(spark)(body)
 
   /** The LSH near-dup gates (budget Dedup.MaxGroupPairs of shingle pair
     * expansion) with the exact-tier query each must equal: the fast path
@@ -157,10 +159,22 @@ class BoundedSpec extends AnyFunSuite {
     // the rest once; doc 1's repeated "a b c" counts once
     val docs = Seq((1L, "a b c a b c d"), (2L, "a b c d"), (3L, "a b c e"))
       .toDF("doc_id", "text")
-    assert(Dedup.pairExpansion(docs, "text", 3) == 3 + 1)
-    assert(Dedup.pairExpansion(docs.limit(0), "text", 3) == 0)
+    def expansion(d: DataFrame) = Dedup.pairExpansion(Dedup.postings(d, "text", "doc_id", 3))
+    assert(expansion(docs) == 3 + 1)
+    assert(expansion(docs.limit(0)) == 0)
     assert(Dedup.MaxGroupPairs == 499500L)
-    assert(Dedup.pairExpansion(Tables.documents(spark, copies), "text", 3) > Dedup.MaxGroupPairs)
+    assert(expansion(Tables.documents(spark, copies)) > Dedup.MaxGroupPairs)
+  }
+
+  test("pairExpansion counts the pair rows the exact index expands") {
+    for ((input, dir) <- Seq("sf0.001" -> sf, "copies" -> copies)) {
+      val post = Dedup.postings(Tables.documents(spark, dir), "text", "doc_id", 3)
+      // every exploded pair row adds one to its pair's c, so Σ c over the
+      // uncapped index is the explode's row count
+      val exploded = Dedup.overlapCounts(post, Int.MaxValue).agg(sum(col("c"))).head().getLong(0)
+      assert(Dedup.pairExpansion(post) == exploded, input)
+      assert(exploded > 0, input)
+    }
   }
 
   test("the gate takes the fast path only when 0 < budget and n <= budget") {

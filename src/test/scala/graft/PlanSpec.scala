@@ -135,6 +135,17 @@ class PlanSpec extends AnyFunSuite {
     assert(nodeCount(p, "Exchange") <= 3, s"jaccard grew extra shuffles:\n$p")
   }
 
+  test("LSH near-dup tiers verify candidates by one intersection, no array union") {
+    // the candidate verifier computes c = |A∩B| once; |A∪B| is n1 + n2 − c
+    for (name <- Seq("q_minhash_pairs", "q_containment_lsh")) {
+      val (_, plans) = Gates.withFallback(spark)(
+        Gates.executedPlans(spark)(SparkEntry.queries(name)(spark, sf).collect()))
+      assert(plans.exists(_.contains("array_intersect")), s"$name: verifier not run")
+      assert(!plans.exists(_.contains("array_union")),
+        s"$name computes an array union:\n${plans.filter(_.contains("array_union")).mkString("\n")}")
+    }
+  }
+
   test("winnow fingerprint overlap is a pure aggregate chain (no joins)") {
     val p = plan(analytics.ScaleQueries.winnowPairs(spark, sf))
     assert(!p.contains("Join"), s"winnow pairs should not join:\n$p")

@@ -241,7 +241,8 @@ class ScaleSpec extends AnyFunSuite {
     // unforced run is the exact tier by construction; the LSH side is
     // forced past the gate.
     for (dir <- gateScales) {
-      val expansion = graft.scale.Dedup.pairExpansion(Tables.documents(spark, dir), "text", 3)
+      val expansion = graft.scale.Dedup.pairExpansion(
+        graft.scale.Dedup.postings(Tables.documents(spark, dir), "text", "doc_id", 3))
       assert(expansion <= graft.scale.Dedup.MaxGroupPairs, s"$dir: $expansion pairs")
       val exactClusters = ScaleQueries.dupClustersLsh(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
