@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -22,6 +23,27 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the executed plan of each such checkpoint follows the query's plan.
   */
 object Plans {
+
+  /** `body`'s result, with `onPlan(funcName, qe)` called for every query
+    * execution that succeeds while it runs. The listener bus is drained
+    * before the listener registers (no earlier query's event reaches it)
+    * and after `body` (every event of `body` has arrived).
+    */
+  def captured[T](spark: SparkSession)(onPlan: (String, QueryExecution) => Unit)(
+      body: => T): T = {
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = onPlan(f, qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext, 30_000L)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext, 30_000L)
+      out
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
@@ -33,18 +55,12 @@ object Plans {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
-    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f == "localCheckpoint") checkpoints.add(qe.explainString(FormattedMode))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
     selected.foreach { case (name, fn) =>
       try {
-        ListenerBusDrain(spark.sparkContext, 30_000L)
-        checkpoints.clear()
-        val df = fn(spark, dir)
-        ListenerBusDrain(spark.sparkContext, 30_000L)
+        val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val df = captured(spark) { (f, qe) =>
+          if (f == "localCheckpoint") checkpoints.add(qe.explainString(FormattedMode))
+        }(fn(spark, dir))
         val txt = (df.queryExecution.explainString(FormattedMode) +:
           checkpoints.asScala.toSeq.map("== Eager localCheckpoint (executed) ==\n" + _))
           .mkString("\n")

@@ -19,9 +19,13 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventTs(load(spark, dir, "events"))
+
   /** `events.ts` has shipped in three parquet encodings across testdata
     * generations; normalize all of them to a microsecond TimestampType
-    * column so every downstream query sees the same type:
+    * column so every downstream query, batch or streaming, sees the
+    * same type:
     *
     *  - TIMESTAMP(NANOS): Spark reads it as a long when
     *    spark.sql.legacy.parquet.nanosAsLong=true (set by Verify/Bench/
@@ -33,16 +37,15 @@ object Tables {
     *    the cast is instant-preserving.
     *  - timestamp[us] isAdjustedToUTC=true → TimestampType: passthrough.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = load(spark, dir, "events")
+  def eventTs(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    raw.schema("ts").dataType match {
+    events.schema("ts").dataType match {
       case LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
+        events.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => events
     }
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")

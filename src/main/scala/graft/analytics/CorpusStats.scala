@@ -210,18 +210,11 @@ object CorpusStats {
       .agg(max(col("cs")).as("max_eval_sim"))
       .withColumn("contaminated", col("max_eval_sim") >= SemDecontThreshold)
 
-  private val dblEmbSql = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-  private def cosSql(a: String, b: String) =
-    s"""CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0
-       | THEN list_dot_product($a,$b) /
-       |      (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))
-       | ELSE 0.0 END""".stripMargin.replace("\n", " ")
-
   val semanticDecontaminateSql: String =
-    s"""WITH e AS (SELECT vec_id, $dblEmbSql AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, ${ScaleQueries.dblEmb} AS v FROM embeddings),
        |ev AS (SELECT vec_id AS e_id, v AS evv FROM e WHERE vec_id % 25 = 0),
        |s AS (
-       |  SELECT e.vec_id, max(${Num.rSql(cosSql("e.v", "evv"), 6)}) AS max_eval_sim
+       |  SELECT e.vec_id, max(${Num.rSql(ScaleQueries.cosSql("e.v", "evv"), 6)}) AS max_eval_sim
        |  FROM e CROSS JOIN ev WHERE e.vec_id % 25 <> 0
        |  GROUP BY 1)
        |SELECT vec_id, max_eval_sim,
@@ -276,7 +269,7 @@ object CorpusStats {
     * PCA power-iteration oracle below.
     */
   private val covCtesSql: String =
-    s"""e AS (SELECT vec_id, $dblEmbSql AS v FROM embeddings),
+    s"""e AS (SELECT vec_id, ${ScaleQueries.dblEmb} AS v FROM embeddings),
        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |idx AS (
        |  SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j
@@ -513,7 +506,7 @@ object CorpusStats {
   }
 
   val embedOutliersSql: String =
-    s"""WITH e AS (SELECT vec_id, $dblEmbSql AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, ${ScaleQueries.dblEmb} AS v FROM embeddings),
        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |dim AS (SELECT CAST(i AS INT) AS i FROM range(1, ${Dim + 1}) t(i)),
        |st AS (
@@ -708,7 +701,7 @@ object CorpusStats {
   val embedDriftSql: String = {
     def dotSql(a: String, b: String): String =
       s"list_sum(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]))"
-    s"""WITH e AS (SELECT vec_id, $dblEmbSql AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, ${ScaleQueries.dblEmb} AS v FROM embeddings),
        |mx AS (SELECT max(vec_id) // 2 AS half FROM e),
        |eb AS (SELECT CASE WHEN vec_id <= half THEN 1 ELSE 2 END AS b, v
        |       FROM e CROSS JOIN mx),

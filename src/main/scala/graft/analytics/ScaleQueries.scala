@@ -640,8 +640,10 @@ object ScaleQueries {
   def cosineTopK(spark: SparkSession, dir: String): DataFrame =
     Similarity.bruteForceTopK(Tables.embeddings(spark, dir), 0L, 10)
 
-  private val dblEmb = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-  private def cosSql(a: String, b: String) =
+  /** DuckDB: the f32 embedding list as DOUBLEs, and the cosine of two
+    * such lists (0.0 when either norm is 0). */
+  private[analytics] final val dblEmb = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+  private[analytics] def cosSql(a: String, b: String) =
     s"""CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0
        | THEN list_dot_product($a,$b) /
        |      (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))
@@ -1558,6 +1560,34 @@ object ScaleQueries {
     s"""WITH $ivfPqCtesSql
        |${ivfPqSearchSql(1, 10)}""".stripMargin
 
+  /** The nprobe tiers both index-evaluation operators report. */
+  val AnnRecallProbes = Seq(1, 2, 4)
+
+  /** The two small relations both index-evaluation operators read, for
+    * PqQueryId: the EXACT L2 top-10 id set (rounded-before-rank with id
+    * tiebreak, so the SET is engine-stable) and the IVF-PQ candidates
+    * of the max-nprobe cells with their ADC distances. ONE scan of those
+    * cells scores every candidate once; each probe tier is then a
+    * pr-filter + rank over the tiny scored relation (three
+    * IvfPq.search arms would rescan the corpus 3x). Both are
+    * materialized with an eager localCheckpoint, so no cache entry
+    * outlives the query.
+    */
+  private def pqEval(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, dir)
+    val q = emb.filter(col("vec_id") === PqQueryId).select("embedding").collect()(0)
+      .getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue)
+    val qq = q.foldLeft(0.0)((a, x) => a + x * x)
+    val d2 = graft.scale.VectorOps.dot(col("embedding"), col("embedding")) -
+      lit(2.0) * graft.scale.VectorOps.dot(col("embedding"), typedLit(q)) + lit(qq)
+    val exact = emb.filter(col("vec_id") =!= PqQueryId)
+      .select(col("vec_id"), Num.r(d2, 6).as("d2"))
+      .orderBy(col("d2").asc, col("vec_id").asc).limit(10).select("vec_id")
+    val scored = graft.scale.IvfPq.scoredSearch(
+      emb, graft.scale.IvfPq.fit(emb), PqQueryId, AnnRecallProbes.max)
+    (exact.localCheckpoint(), scored.localCheckpoint())
+  }
+
   /** ANN quality harness as an operator: recall@10 of the IVF-PQ probe
     * against the EXACT L2 top-10 for the same query — the standard
     * vector-index evaluation, runnable as a query because both sides
@@ -1565,32 +1595,8 @@ object ScaleQueries {
     * vec_id tiebreak (CLAUDE.md fp-rank rule) so the top-10 SET is
     * engine-stable.
     */
-  val AnnRecallProbes = Seq(1, 2, 4)
-
-  /** The exact L2 top-10 id set for PqQueryId (rounded-before-rank with
-    * id tiebreak, so the SET is engine-stable) — the ground truth both
-    * index-evaluation operators compare against.
-    */
-  private def pqExactSet(emb: DataFrame): DataFrame = {
-    val q = emb.filter(col("vec_id") === PqQueryId).select("embedding").collect()(0)
-      .getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue)
-    val qq = q.foldLeft(0.0)((a, x) => a + x * x)
-    val d2 = graft.scale.VectorOps.dot(col("embedding"), col("embedding")) -
-      lit(2.0) * graft.scale.VectorOps.dot(col("embedding"), typedLit(q)) + lit(qq)
-    emb.filter(col("vec_id") =!= PqQueryId)
-      .select(col("vec_id"), Num.r(d2, 6).as("d2"))
-      .orderBy(col("d2").asc, col("vec_id").asc).limit(10).select("vec_id")
-  }
-
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val model = graft.scale.IvfPq.fit(emb)
-    val exact = pqExactSet(emb).cache()
-    // ONE scan of the max-nprobe cells scores every candidate once;
-    // each tier is then a pr-filter + top-10 over the tiny cached
-    // relation (three IvfPq.search arms would rescan the corpus 3x).
-    val scored = graft.scale.IvfPq
-      .scoredSearch(emb, model, PqQueryId, AnnRecallProbes.max).cache()
+    val (exact, scored) = pqEval(spark, dir)
     AnnRecallProbes.map { np =>
       scored.filter(col("pr") <= np)
         .orderBy(col("adc_dist2").asc, col("vec_id").asc).limit(10)
@@ -1641,18 +1647,13 @@ object ScaleQueries {
     * per probe tier — the evaluation table a vector-index deployment
     * publishes next to its latency numbers (recall says how much truth
     * the probe finds, MRR/nDCG say how well it ORDERS what it finds).
-    * Same one-scan shape as q_ann_recall: the max-nprobe scored relation
-    * is computed once and each tier is a filter + rank over the tiny
-    * cached candidate set (bounded by the index's probe budget, never
-    * the corpus). Ranks assign over rounded distances with an id
+    * Same one-scan shape as q_ann_recall ([[pqEval]]): each tier is a
+    * filter + rank over the tiny checkpointed candidate set (bounded by
+    * the index's probe budget, never the corpus). Ranks assign over rounded distances with an id
     * tiebreak; DCG weights are shared literals (see DcgWeights).
     */
   def retrievalMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val model = graft.scale.IvfPq.fit(emb)
-    val exact = pqExactSet(emb).cache()
-    val scored = graft.scale.IvfPq
-      .scoredSearch(emb, model, PqQueryId, AnnRecallProbes.max).cache()
+    val (exact, scored) = pqEval(spark, dir)
     val wA = org.apache.spark.sql.expressions.Window
       .orderBy(col("adc_dist2").asc, col("vec_id").asc)
     AnnRecallProbes.map { np =>

@@ -1,114 +1,161 @@
 package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Trailing-window aggregation at scale ("overlapping panes").
+/** Per-key sequential analytics at scale: the pane decomposition
+  * (Li et al., "No Pane, No Gain", SIGMOD Record 2005).
   *
-  * A plain `RANGE BETWEEN w PRECEDING` window partitioned by key sorts
-  * each key's FULL history in one task — with a low-cardinality key that
-  * is the whole corpus through a handful of tasks. Bucketing time into
-  * `window`-wide panes and replicating every row once as read-only
-  * context into the NEXT pane makes each (key, pane) self-contained for
-  * any trailing frame of length <= pane width: a row's frame reaches at
-  * most one pane back, and those rows are present as its pane's context
-  * copies. Max task = two panes of one key; total row fan-out exactly 2×.
+  * A window partitioned by key alone sorts each key's FULL history in
+  * one task — with a low-cardinality key that is the whole corpus
+  * through a handful of tasks. Every operator here instead buckets time
+  * into panes of `paneMicros` and works in two levels:
   *
-  * Context rows contribute to other rows' frames but are dropped from
-  * the output (their own frames would be truncated).
+  *  - a window local to each (key, pane), over the rows [[panes]] adds
+  *    the µs time `__us`, the caller's extra columns and the pane id
+  *    `__b` to, ordered by (`__us`, tiebreak `__t` when given);
+  *  - a tiny relation with one row per (key, pane), windowed across the
+  *    key's panes in pane order. [[Panes.carryJoin]] carries a value
+  *    across panes and joins it back onto every row of its pane
+  *    (prevValue, nextTime, runningSum, sessionIds); [[gapSummary]]
+  *    adds the boundary gap to each pane's in-pane gaps (gapStats,
+  *    sessionCounts). Empty panes never appear: the across-pane window
+  *    over present panes bridges them.
+  *
+  * No task sorts more than one (key, pane) of rows, and every result
+  * equals the naive per-key window formulation (SlidingAggSpec). Each
+  * operator returns its input columns plus its declared outputs; the
+  * `__`-prefixed temporaries are dropped.
   */
 object SlidingAgg {
 
-  /** Trailing count + sum per row, DuckDB-comparable row set. */
+  /** `rows` with `__us`, the extra columns and `__b` added, and the two
+    * windows of the decomposition over them.
+    */
+  private final class Panes(val rows: DataFrame, keys: Seq[String],
+      inputCols: Set[String]) {
+    val paneCols: Seq[Column] = (keys :+ "__b").map(col)
+    /** Window local to each (key, pane), in (time, tiebreak) order. */
+    val inPane: WindowSpec = Window.partitionBy(paneCols: _*).orderBy(
+      (if (rows.columns.contains("__t")) Seq(col("__us"), col("__t")) else Seq(col("__us"))): _*)
+    /** Window over one row per (key, pane), in pane order. */
+    val across: WindowSpec = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
+
+    /** The carry step: `local`'s per-(key, pane) summary `aggs`,
+      * carried across panes by `carry` (which adds `__c` over
+      * [[across]]) and joined back onto every row of its pane. `local`
+      * is the checkpointed single window pass, so the aggregate adds no
+      * exchange and the join back no sort on the big side.
+      */
+    def carryJoin(local: DataFrame, aggs: Column*)(
+        carry: DataFrame => DataFrame): DataFrame = {
+      val perPane = carry(local.groupBy(paneCols: _*).agg(aggs.head, aggs.tail: _*))
+        .select(paneCols :+ col("__c"): _*)
+      local.join(perPane, keys :+ "__b")
+    }
+
+    /** `d` without the temporaries: input columns plus declared outputs. */
+    def result(d: DataFrame): DataFrame =
+      d.drop(d.columns.filter(c => c.startsWith("__") && !inputCols(c)): _*)
+  }
+
+  /** The pane prologue: `__us` = `time` in µs, then `extra` in order (a
+    * column named `__t` is the in-pane tiebreak), then the pane id
+    * `__b` = floor(`__us` / `paneMicros`).
+    */
+  private def panes(df: DataFrame, keys: Seq[String], time: Column,
+      paneMicros: Long, extra: (String, Column)*): Panes = {
+    val withExtra = extra.foldLeft(df.withColumn("__us", unix_micros(time))) {
+      case (d, (name, c)) => d.withColumn(name, c)
+    }
+    new Panes(
+      withExtra.withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long")),
+      keys, df.columns.toSet)
+  }
+
+  /** Trailing count + sum per row, DuckDB-comparable row set. Panes are
+    * `windowMicros` wide, and every row is replicated once as read-only
+    * context into the NEXT pane, so each (key, pane) is self-contained
+    * for any trailing frame of length <= pane width: a row's frame
+    * reaches at most one pane back, and those rows are present as its
+    * pane's context copies. Max task = two panes of one key; total row
+    * fan-out exactly 2×. Context rows contribute to other rows' frames
+    * but are dropped from the output (their own frames would be
+    * truncated).
+    */
   def trailingCountSum(df: DataFrame, keys: Seq[String], time: Column,
       value: Column, windowMicros: Long,
       outCount: String, outSum: String): DataFrame = {
     require(windowMicros > 0, "windowMicros must be positive")
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__v", value)
-      .withColumn("__b", floor(col("__us") / lit(windowMicros.toDouble)).cast("long"))
-    val ctx = base.withColumn("__b", col("__b") + 1).withColumn("__ctx", lit(1))
-    val all = base.withColumn("__ctx", lit(0)).unionByName(ctx)
-    val w = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us")).rangeBetween(-windowMicros, 0)
-    all
+    val p = panes(df, keys, time, windowMicros, "__v" -> value)
+    val ctx = p.rows.withColumn("__b", col("__b") + 1).withColumn("__ctx", lit(1))
+    val all = p.rows.withColumn("__ctx", lit(0)).unionByName(ctx)
+    val w = p.inPane.rangeBetween(-windowMicros, 0)
+    p.result(all
       .withColumn(outCount, count(lit(1)).over(w))
       .withColumn(outSum, sum(col("__v")).over(w))
-      .filter(col("__ctx") === 0)
-      .drop("__us", "__v", "__b", "__ctx")
+      .filter(col("__ctx") === 0))
   }
 
-  /** Inter-event gap statistics per key, decomposed so no task sorts one
-    * key's full history: gaps WITHIN a (key, pane) come from a pane-local
-    * lag window; gaps ACROSS panes are the next pane's first timestamp
-    * minus this pane's last, computed on the tiny one-row-per-(key, pane)
-    * relation (empty panes simply never appear — the lag over present
-    * panes bridges them). Everything stays integer µs until the caller
-    * divides, so there is no fp drift to snap.
-    *
-    * Returns per key: n_gaps, sum_gap_us, max_gap_us (gaps between
-    * consecutive events in time order; keys with one event drop out).
+  /** The gap summary: one row per (key, pane) with `aggs` over the
+    * in-pane gaps `__g` (null on a pane's first row), the pane's first
+    * and last time `lo`/`hi`, and the boundary gap `__bg` = `lo` − the
+    * previous present pane's `hi` (null on a key's first pane).
+    * Everything stays integer µs, so there is no fp drift to snap.
+    */
+  private def gapSummary(df: DataFrame, keys: Seq[String], time: Column,
+      paneMicros: Long)(aggs: Column*): DataFrame = {
+    val p = panes(df, keys, time, paneMicros)
+    p.rows
+      .withColumn("__g", col("__us") - lag(col("__us"), 1).over(p.inPane))
+      .groupBy(p.paneCols: _*)
+      .agg(aggs.head, (aggs.tail :+ min(col("__us")).as("lo") :+
+        max(col("__us")).as("hi")): _*)
+      .withColumn("__bg", col("lo") - lag(col("hi"), 1).over(p.across))
+  }
+
+  /** Inter-event gap statistics per key from the [[gapSummary]]: the
+    * in-pane gaps plus the boundary gaps. Returns per key: n_gaps,
+    * sum_gap_us, max_gap_us (gaps between consecutive events in time
+    * order; keys with one event drop out).
     */
   def gapStats(df: DataFrame, keys: Seq[String], time: Column,
-      paneMicros: Long): DataFrame = {
-    val keyCols = keys.map(col)
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*).orderBy(col("__us"))
-    val intra = base
-      .withColumn("__g", col("__us") - lag(col("__us"), 1).over(w1))
-      .groupBy((keys :+ "__b").map(col): _*)
-      .agg(count(col("__g")).as("n_intra"),
-        coalesce(sum(col("__g")), lit(0L)).as("s_intra"),
-        max(col("__g")).as("m_intra"),
-        min(col("__us")).as("lo"), max(col("__us")).as("hi"))
-    val w2 = Window.partitionBy(keyCols: _*).orderBy(col("__b"))
-    intra
-      .withColumn("__bg", col("lo") - lag(col("hi"), 1).over(w2))
-      .groupBy(keyCols: _*)
+      paneMicros: Long): DataFrame =
+    gapSummary(df, keys, time, paneMicros)(
+      count(col("__g")).as("n_intra"),
+      coalesce(sum(col("__g")), lit(0L)).as("s_intra"),
+      max(col("__g")).as("m_intra"))
+      .groupBy(keys.map(col): _*)
       .agg((sum(col("n_intra")) + count(col("__bg"))).as("n_gaps"),
         (sum(col("s_intra")) + coalesce(sum(col("__bg")), lit(0L))).as("sum_gap_us"),
         greatest(max(col("m_intra")), max(col("__bg"))).as("max_gap_us"))
       .filter(col("n_gaps") > 0)
-  }
 
-  /** Consecutive-pair (transition) extraction per key with the same
-    * two-level decomposition: pairs WITHIN a (key, pane) come from a
-    * pane-local lag window; the pair ACROSS a pane boundary is (last
-    * label of the previous present pane, first label of this pane),
-    * computed on the tiny one-row-per-(key, pane) relation — so no task
-    * ever sorts one key's full history. Ordering is (time µs, tiebreak)
-    * end to end, making the chain — and therefore the pair multiset —
-    * identical to the naive per-key lag formulation.
+  /** Consecutive-pair (transition) extraction per key: pairs WITHIN a
+    * (key, pane) come from a pane-local lag window; the pair ACROSS a
+    * pane boundary is (last label of the previous present pane, first
+    * label of this pane), computed on the one-row-per-(key, pane)
+    * relation. Ordering is (time µs, tiebreak) end to end, making the
+    * chain — and therefore the pair multiset — identical to the naive
+    * per-key lag formulation.
     *
     * Returns (prev, next, n): the global transition-pair counts summed
     * over keys.
     */
   def transitionCounts(df: DataFrame, keys: Seq[String], time: Column,
       label: Column, tiebreak: Column, paneMicros: Long): DataFrame = {
-    val keyCols = keys.map(col)
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__e", label)
-      .withColumn("__t", tiebreak)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
-    val lagged = base.withColumn("__p", lag(col("__e"), 1).over(w1))
+    val p = panes(df, keys, time, paneMicros, "__e" -> label, "__t" -> tiebreak)
+    val lagged = p.rows.withColumn("__p", lag(col("__e"), 1).over(p.inPane))
     val intra = lagged.filter(col("__p").isNotNull)
       .groupBy(col("__p").as("prev"), col("__e").as("next"))
       .agg(count(lit(1)).as("n"))
     // one row per (key, pane): first/last label in (time, tiebreak) order
-    val panes = base
-      .groupBy((keys :+ "__b").map(col): _*)
+    val boundary = p.rows
+      .groupBy(p.paneCols: _*)
       .agg(min(struct(col("__us"), col("__t"), col("__e"))).as("fst"),
         max(struct(col("__us"), col("__t"), col("__e"))).as("lst"))
-    val w2 = Window.partitionBy(keyCols: _*).orderBy(col("__b"))
-    val boundary = panes
-      .withColumn("__pl", lag(col("lst.__e"), 1).over(w2))
+      .withColumn("__pl", lag(col("lst.__e"), 1).over(p.across))
       .filter(col("__pl").isNotNull)
       .groupBy(col("__pl").as("prev"), col("fst.__e").as("next"))
       .agg(count(lit(1)).as("n"))
@@ -116,33 +163,20 @@ object SlidingAgg {
       .groupBy(col("prev"), col("next")).agg(sum(col("n")).as("n"))
   }
 
-  /** Gap-threshold sessionization counts per key with the same two-level
-    * decomposition: session breaks within a pane come from pane-local
-    * lags, breaks at pane boundaries from the per-(key, pane) relation;
-    * +1 for the key's first event. Equals the naive lag() formulation
-    * exactly (integer µs comparisons throughout).
+  /** Gap-threshold sessionization counts per key from the
+    * [[gapSummary]]: a break wherever an in-pane or boundary gap exceeds
+    * `gapMicros`, +1 for the key's first event. Equals the naive lag()
+    * formulation exactly (integer µs comparisons throughout).
     */
   def sessionCounts(df: DataFrame, keys: Seq[String], time: Column,
-      gapMicros: Long, paneMicros: Long): DataFrame = {
-    val keyCols = keys.map(col)
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*).orderBy(col("__us"))
-    val intra = base
-      .withColumn("__g", col("__us") - lag(col("__us"), 1).over(w1))
-      .groupBy((keys :+ "__b").map(col): _*)
-      .agg(sum(when(col("__g") > gapMicros, 1L).otherwise(0L)).as("n_breaks"),
-        count(lit(1)).as("n_ev"),
-        min(col("__us")).as("lo"), max(col("__us")).as("hi"))
-    val w2 = Window.partitionBy(keyCols: _*).orderBy(col("__b"))
-    intra
-      .withColumn("__bg", col("lo") - lag(col("hi"), 1).over(w2))
-      .groupBy(keyCols: _*)
+      gapMicros: Long, paneMicros: Long): DataFrame =
+    gapSummary(df, keys, time, paneMicros)(
+      sum(when(col("__g") > gapMicros, 1L).otherwise(0L)).as("n_breaks"),
+      count(lit(1)).as("n_ev"))
+      .groupBy(keys.map(col): _*)
       .agg((lit(1L) + sum(col("n_breaks")) +
         sum(when(col("__bg") > gapMicros, 1L).otherwise(0L))).as("n_sessions"),
         sum(col("n_ev")).as("n_events"))
-  }
 
   /** Consecutive-TRIPLE (trigram / Markov-2 path) extraction per key with
     * the pane decomposition generalized one order up. Triples fully
@@ -165,26 +199,18 @@ object SlidingAgg {
     */
   def trigramCounts(df: DataFrame, keys: Seq[String], time: Column,
       label: Column, tiebreak: Column, paneMicros: Long): DataFrame = {
-    val keyCols = keys.map(col)
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__e", label)
-      .withColumn("__t", tiebreak)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val wp = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
-    val intra = base
-      .withColumn("__p1", lag(col("__e"), 1).over(wp))
-      .withColumn("__p2", lag(col("__e"), 2).over(wp))
+    val p = panes(df, keys, time, paneMicros, "__e" -> label, "__t" -> tiebreak)
+    val intra = p.rows
+      .withColumn("__p1", lag(col("__e"), 1).over(p.inPane))
+      .withColumn("__p2", lag(col("__e"), 2).over(p.inPane))
       .filter(col("__p2").isNotNull)
       .groupBy(col("__p2").as("e1"), col("__p1").as("e2"), col("__e").as("e3"))
       .agg(count(lit(1)).as("n"))
-    val ranked = base
-      .withColumn("__r", row_number().over(wp).cast("long"))
-      .withColumn("__c", count(lit(1)).over(
-        Window.partitionBy((keys :+ "__b").map(col): _*)))
+    val ranked = p.rows
+      .withColumn("__r", row_number().over(p.inPane).cast("long"))
+      .withColumn("__c", count(lit(1)).over(Window.partitionBy(p.paneCols: _*)))
     val edges = ranked.filter(col("__r") <= 2 || col("__r") > col("__c") - 2)
-    val we = Window.partitionBy(keyCols: _*).orderBy(col("__us"), col("__t"))
+    val we = Window.partitionBy(keys.map(col): _*).orderBy(col("__us"), col("__t"))
     def adj(x: Column, y: Column): Column =
       (x("__b") === y("__b") && y("__r") === x("__r") + 1) ||
         (x("__b") =!= y("__b") && x("__r") === x("__c") && y("__r") === 1)
@@ -202,102 +228,50 @@ object SlidingAgg {
       .groupBy(col("e1"), col("e2"), col("e3")).agg(sum(col("n")).as("n"))
   }
 
-  /** Per-row PREVIOUS event time (µs) within a key, pane-decomposed:
-    * intra-pane rows get a pane-local lag; each pane's FIRST row gets
-    * the latest time of the key's previous non-empty pane, carried over
-    * the tiny per-(key, pane) relation. Null for the key's first event —
-    * exactly the naive per-key lag. The building block for gap flags /
-    * session-id assignment without sorting a key's full history.
-    */
-  def prevTime(df: DataFrame, keys: Seq[String], time: Column, tiebreak: Column,
-      paneMicros: Long, out: String): DataFrame = {
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__t", tiebreak)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
-    val intra = base.withColumn(out, lag(col("__us"), 1).over(w1))
-    val w2 = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-    val carry = base.groupBy((keys :+ "__b").map(col): _*)
-      .agg(max(col("__us")).as("__hi"))
-      .withColumn("__c", lag(col("__hi"), 1).over(w2))
-      .select((keys :+ "__b").map(col) :+ col("__c"): _*)
-    intra.join(carry, keys :+ "__b")
-      .withColumn(out, coalesce(col(out), col("__c")))
-      .drop("__t", "__b", "__c")
-  }
+  // The four carry operators below checkpoint their single windowed pass
+  // and feed both the carry aggregate and the join from it: deriving the
+  // two from the un-checkpointed rows re-ran the whole upstream subtree
+  // per branch (for q_scd2_priority, the orders scan + the (key, date)
+  // argmax collapse TWICE). Partitioning/ordering survive the checkpoint.
 
-  /** Per-row PREVIOUS VALUE of an arbitrary column within a key —
-    * [[prevTime]] generalized from the time column to any (non-null)
-    * attribute: intra-pane rows get a pane-local lag; each pane's FIRST
-    * row gets the value of the latest row of the key's previous
-    * non-empty pane, carried as a (time, tiebreak, value) argmax over
-    * the tiny per-(key, pane) relation. Null for the key's first row —
-    * exactly the naive per-key lag, with no task sorting one key's full
-    * history. The change-detection building block (SCD2 interval
-    * collapse, dup-run detection).
+  /** Per-row PREVIOUS VALUE of a (non-null) column within a key:
+    * intra-pane rows get a pane-local lag; each pane's FIRST row gets
+    * the value of the latest row of the key's previous non-empty pane,
+    * carried as a (time, tiebreak, value) argmax. Null for the key's
+    * first row — exactly the naive per-key lag. The change-detection
+    * building block (SCD2 interval collapse, dup-run detection).
     */
   def prevValue(df: DataFrame, keys: Seq[String], time: Column, tiebreak: Column,
       value: Column, paneMicros: Long, out: String): DataFrame = {
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__t", tiebreak)
-      .withColumn("__v", value)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
-    // Checkpoint the single windowed pass and derive the carry FROM it
-    // (r10, the sessionIds fusion): deriving intra and carry from `base`
-    // re-ran the whole upstream subtree per branch — for q_scd2_priority
-    // that was the orders scan + the (key, date) argmax collapse TWICE.
-    // Partitioning/ordering survive the checkpoint, so the carry groupBy
-    // adds no exchange and the join back adds no sort on the big side.
-    val intra = base.withColumn(out, lag(col("__v"), 1).over(w1))
+    val p = panes(df, keys, time, paneMicros, "__t" -> tiebreak, "__v" -> value)
+    val local = p.rows.withColumn(out, lag(col("__v"), 1).over(p.inPane))
       .localCheckpoint()
-    val w2 = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-    val carry = intra.groupBy((keys :+ "__b").map(col): _*)
-      .agg(max(struct(col("__us"), col("__t"), col("__v"))).as("__lst"))
-      .withColumn("__c", lag(col("__lst").getField("__v"), 1).over(w2))
-      .select((keys :+ "__b").map(col) :+ col("__c"): _*)
-    intra.join(carry, keys :+ "__b")
-      .withColumn(out, coalesce(col(out), col("__c")))
-      .drop("__t", "__b", "__c", "__v")
+    p.result(p.carryJoin(local,
+        max(struct(col("__us"), col("__t"), col("__v"))).as("__lst"))(
+        _.withColumn("__c", lag(col("__lst").getField("__v"), 1).over(p.across)))
+      .withColumn(out, coalesce(col(out), col("__c"))))
   }
 
   /** Per-row NEXT event time (µs) within a key — the lead-side mirror of
-    * [[prevTime]]: intra-pane rows get a pane-local lead; each pane's
+    * [[prevValue]]: intra-pane rows get a pane-local lead; each pane's
     * LAST row gets the earliest time of the key's next non-empty pane.
     * Null for the key's last event. The validity-interval close
     * (valid_to) building block.
     */
   def nextTime(df: DataFrame, keys: Seq[String], time: Column, tiebreak: Column,
       paneMicros: Long, out: String): DataFrame = {
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__t", tiebreak)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
-    // same checkpoint fusion as prevValue: one windowed pass feeds both
-    // the carry aggregate and the join, instead of re-running the
-    // upstream subtree per branch
-    val intra = base.withColumn(out, lead(col("__us"), 1).over(w1))
+    val p = panes(df, keys, time, paneMicros, "__t" -> tiebreak)
+    val local = p.rows.withColumn(out, lead(col("__us"), 1).over(p.inPane))
       .localCheckpoint()
-    val w2 = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-    val carry = intra.groupBy((keys :+ "__b").map(col): _*)
-      .agg(min(col("__us")).as("__lo"))
-      .withColumn("__c", lead(col("__lo"), 1).over(w2))
-      .select((keys :+ "__b").map(col) :+ col("__c"): _*)
-    intra.join(carry, keys :+ "__b")
-      .withColumn(out, coalesce(col(out), col("__c")))
-      .drop("__t", "__b", "__c")
+    p.result(p.carryJoin(local, min(col("__us")).as("__lo"))(
+        _.withColumn("__c", lead(col("__lo"), 1).over(p.across)))
+      .withColumn(out, coalesce(col(out), col("__c"))))
   }
 
   /** Gap-threshold SESSION-ID assignment per key (1-based, in
     * (time, tiebreak) order) — [[sessionCounts]] upgraded from counts to
     * ids so downstream analytics can aggregate per session, fused into
-    * ONE pane-local window pass. The [[prevTime]]∘[[runningSum]]
+    * ONE pane-local window pass. The previous-time∘[[runningSum]]
     * composition this replaces paid the big relation FOUR times (two
     * window sorts + two carry aggregates, each branch re-deriving the
     * events subtree — Catalyst does not CSE logical branches) and
@@ -307,87 +281,58 @@ object SlidingAgg {
     * (key, pane)(time, tiebreak) window — the framed sum consumes the
     * lag's output so they stay two WindowExecs, but the second reuses
     * the first's exchange AND sort order, so the big relation is
-    * shuffled and sorted once. A localCheckpoint then feeds both the
-    * tiny per-(key, pane) carry relation and the final join (explicit
-    * persist per the branch-reuse rule; partitioning/ordering survive
-    * the checkpoint, so the join back adds no exchange and no sort on
-    * the big side). A row's id = carried base of its pane + its
-    * pane-local prefix: the carry window only ever holds one row per
-    * (key, pane), so no task sorts a key's full history. Integer µs and
-    * 0/1 longs end to end — exact in any accumulation order, identical
-    * to the naive per-key lag+prefix formulation (SlidingAggSpec pins
-    * equality at three pane widths).
+    * shuffled and sorted once. A row's id = carried base of its pane +
+    * its pane-local prefix. Integer µs and 0/1 longs end to end — exact
+    * in any accumulation order, identical to the naive per-key
+    * lag+prefix formulation (SlidingAggSpec pins equality at three pane
+    * widths).
     */
   def sessionIds(df: DataFrame, keys: Seq[String], time: Column, tiebreak: Column,
       gapMicros: Long, paneMicros: Long): DataFrame = {
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__t", tiebreak)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val w1 = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__t"))
+    val p = panes(df, keys, time, paneMicros, "__t" -> tiebreak)
     // intra-pane break flag: 1 iff the gap from the pane-local
     // predecessor exceeds the threshold; a pane's FIRST row flags 0 here
     // (null lag → otherwise-branch) — its break is decided in the carry.
-    val local = base
+    val local = p.rows
       .withColumn("__ibrk",
-        when(col("__us") - lag(col("__us"), 1).over(w1) > gapMicros, 1L)
+        when(col("__us") - lag(col("__us"), 1).over(p.inPane) > gapMicros, 1L)
           .otherwise(0L))
       .withColumn("__loc", sum(col("__ibrk")).over(
-        w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        p.inPane.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .localCheckpoint()
-    // one row per (key, pane): first/last time + intra-break total. The
-    // pane's first-row break compares against the previous NON-EMPTY
+    // The pane's first-row break compares against the previous NON-EMPTY
     // pane's last time (ts-ordered ⇒ last = max); the pane base is the
     // cumulative break count of all earlier panes plus its own first-row
     // break.
-    val w2 = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-    val carry = local.groupBy((keys :+ "__b").map(col): _*)
-      .agg(min(col("__us")).as("__lo"), max(col("__us")).as("__hi"),
-        sum(col("__ibrk")).as("__nbrk"))
-      .withColumn("__pl", lag(col("__hi"), 1).over(w2))
-      .withColumn("__fb",
-        when(col("__pl").isNull || col("__lo") - col("__pl") > gapMicros, 1L)
-          .otherwise(0L))
-      .withColumn("__pbase",
-        coalesce(sum(col("__nbrk") + col("__fb")).over(
-          w2.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) + col("__fb"))
-      .select((keys :+ "__b").map(col) :+ col("__pbase"): _*)
-    local.join(carry, keys :+ "__b")
-      .withColumn("session_id", col("__pbase") + col("__loc"))
-      .drop("__us", "__t", "__b", "__ibrk", "__loc", "__pbase")
+    p.result(p.carryJoin(local, min(col("__us")).as("__lo"),
+        max(col("__us")).as("__hi"), sum(col("__ibrk")).as("__nbrk")) {
+        _.withColumn("__pl", lag(col("__hi"), 1).over(p.across))
+          .withColumn("__fb",
+            when(col("__pl").isNull || col("__lo") - col("__pl") > gapMicros, 1L)
+              .otherwise(0L))
+          .withColumn("__c",
+            coalesce(sum(col("__nbrk") + col("__fb")).over(
+              p.across.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) + col("__fb"))
+      }
+      .withColumn("session_id", col("__c") + col("__loc")))
   }
 
-  /** Running (prefix) sum per key without sorting a key's full history
-    * in one task: pane-local prefix sums plus a carry of all earlier
-    * panes' totals (cumulated over the tiny per-(key, pane) relation).
-    * Summation ORDER differs from the strictly sequential window, so
-    * downstream consumers must grid-snap before comparing engines —
-    * with grid-resident inputs the ulp-level drift cannot flip the snap
-    * (a 0.01-grid value sits 0.5 away from the floor boundary).
+  /** Running (prefix) sum per key: pane-local prefix sums plus a carry
+    * of all earlier panes' totals. Summation ORDER differs from the
+    * strictly sequential window, so downstream consumers must grid-snap
+    * before comparing engines — with grid-resident inputs the ulp-level
+    * drift cannot flip the snap (a 0.01-grid value sits 0.5 away from
+    * the floor boundary).
     */
   def runningSum(df: DataFrame, keys: Seq[String], time: Column, tiebreak: Column,
       value: Column, paneMicros: Long, out: String): DataFrame = {
-    val base = df
-      .withColumn("__us", unix_micros(time))
-      .withColumn("__tb", tiebreak)
-      .withColumn("__v", value)
-      .withColumn("__b", floor(col("__us") / lit(paneMicros.toDouble)).cast("long"))
-    val wLoc = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__us"), col("__tb"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same checkpoint fusion as prevValue/nextTime: the single windowed
-    // pass feeds both the per-pane totals and the join
-    val local = base.withColumn("__loc", sum(col("__v")).over(wLoc))
+    val p = panes(df, keys, time, paneMicros, "__t" -> tiebreak, "__v" -> value)
+    val local = p.rows.withColumn("__loc", sum(col("__v")).over(
+        p.inPane.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .localCheckpoint()
-    val wCarry = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = local.groupBy((keys :+ "__b").map(col): _*)
-      .agg(sum(col("__v")).as("__tot"))
-      .withColumn("__prev", sum(col("__tot")).over(wCarry))
-      .select((keys :+ "__b").map(col) :+ col("__prev"): _*)
-    local.join(carry, keys :+ "__b")
-      .withColumn(out, coalesce(col("__prev"), lit(0.0)) + col("__loc"))
-      .drop("__us", "__tb", "__v", "__b", "__loc", "__prev")
+    p.result(p.carryJoin(local, sum(col("__v")).as("__tot"))(
+        _.withColumn("__c", sum(col("__tot")).over(
+          p.across.rowsBetween(Window.unboundedPreceding, -1))))
+      .withColumn(out, coalesce(col("__c"), lit(0.0)) + col("__loc")))
   }
 }

@@ -19,19 +19,6 @@ import org.apache.spark.sql.types._
   */
 object Streams {
 
-  /** Raw file schema with the legacy ts encoding (parquet
-    * TIMESTAMP(NANOS), readable only as a long — see Tables.events).
-    * Kept for callers that stage legacy files explicitly; `eventStream`
-    * infers the actual encoding from the directory.
-    */
-  val EventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** ST1: micro-batched file source with the events schema.
     *
     * File streams need an explicit schema, and `events.ts` has shipped in
@@ -39,19 +26,11 @@ object Streams {
     * and timestamp[us] are physically INT64, so a hardcoded LongType
     * schema silently reads µs values and a `div 1000` then compresses
     * time 1000×. Infer the footer schema with one batch read and
-    * normalize to TimestampType exactly like the batch loader.
+    * normalize with the batch loader's `Tables.eventTs`.
     */
-  def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val s = spark.readStream.schema(schema).parquet(dir)
-    schema("ts").dataType match {
-      case LongType =>
-        s.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType =>
-        s.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => s
-    }
-  }
+  def eventStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.eventTs(
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir))
 
   /** `events` watermarked on `ts`, keeping an upstream operator's
     * watermark (Spark refuses to redefine one inside a chain).

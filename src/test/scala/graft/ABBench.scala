@@ -398,44 +398,6 @@ object ABBench {
       .distinct()
   }
 
-  /** The pre-r10 sessionIds composition, verbatim: prevTime for break
-    * flags, runningSum for the prefix — each pane-decomposed but each
-    * branching the big relation into its own window + carry subtrees
-    * (4 passes total). Baseline for the sessentry_* arms.
-    */
-  private def sessionIdsLegacy(df: DataFrame, keys: Seq[String],
-      time0: org.apache.spark.sql.Column, tiebreak: org.apache.spark.sql.Column,
-      gapMicros: Long, paneMicros: Long): DataFrame = {
-    val flagged = graft.scale.SlidingAgg.prevTime(
-      df, keys, time0, tiebreak, paneMicros, "__pv")
-      .withColumn("__brk",
-        when(col("__pv").isNull || col("__us") - col("__pv") > gapMicros, 1.0)
-          .otherwise(0.0))
-      .drop("__us")
-    graft.scale.SlidingAgg.runningSum(
-      flagged, keys, time0, tiebreak, col("__brk"), paneMicros, "__sid")
-      .withColumn("session_id", col("__sid").cast("long"))
-      .drop("__pv", "__brk", "__sid")
-  }
-
-  private def sessionEntryLegacy(spark: SparkSession, dir: String): DataFrame = {
-    val sess = sessionIdsLegacy(
-      Tables.events(spark, dir).select("user_id", "ts", "event_id", "event_type"),
-      Seq("user_id"), col("ts"), col("event_id"),
-      gapMicros = 1800L * 1000000L, paneMicros = 86400L * 1000000L)
-    val perSession = sess.groupBy(col("user_id"), col("session_id"))
-      .agg(
-        min(struct(col("ts"), col("event_id"), col("event_type")))
-          .getField("event_type").as("entry_type"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("converted"),
-        count(lit(1)).as("n_events"))
-    perSession.groupBy(col("entry_type"))
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(col("converted")).as("n_converted"),
-        Num.r(sum(col("n_events")).cast("double") / count(lit(1)), 4).as("avg_events"),
-        Num.r(sum(col("converted")).cast("double") / count(lit(1)), 6).as("conversion_rate"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val reps = if (args.length > 1) args(1).toInt else 2
@@ -652,11 +614,6 @@ object ABBench {
         analytics.ScaleQueries.graphCoherenceOn(Tables.embeddings(spark, sfDir),
           spark.read.parquet("/tmp/knn_edges_ab")
             .select(col("vec_id"), col("nbr_id"))).count() }
-      // r10 fused session ids: the prevTime∘runningSum composition paid
-      // the events relation four times (two window sorts, two carry
-      // aggregates, two joins); the fused form shuffles+sorts it once
-      // behind a checkpoint. Same output by SlidingAggSpec equality.
-      time(s"sessentry_legacy_$i") { sessionEntryLegacy(spark, sfDir).count() }
       time(s"sessentry_fused_$i") {
         analytics.Events.sessionEntryConversion(spark, sfDir).count() }
       // r11 DBSCAN labels artifact (VERDICT r10 #2): build the per-point

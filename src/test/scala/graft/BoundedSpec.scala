@@ -2,11 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.{Preference, ScaleQueries}
 import graft.scale.{Bounded, Dedup, Similarity}
@@ -25,18 +22,9 @@ object Gates {
     */
   def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString.toLowerCase)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerBusDrain(spark.sparkContext, 30_000L)
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      ListenerBusDrain(spark.sparkContext, 30_000L)
-      (out, plans.toArray.map(_.toString).toSeq)
-    } finally spark.listenerManager.unregister(listener)
+    val out = Plans.captured(spark)((_, qe) =>
+      plans.add(qe.executedPlan.toString.toLowerCase))(body)
+    (out, plans.asScala.toSeq)
   }
 
   /** Copy the first `n` rows (in full-row order) of each of `dir`'s

@@ -142,18 +142,29 @@ class RegistrySweepSpec extends AnyFunSuite {
         "production run would fuse the scan-stage constituents)"))
   }
 
-  // One execution pass feeds both asserts.
-  private lazy val sweep: Seq[(String, Int, Map[String, Int])] = {
+  // One execution pass feeds every assert: per query, the widest
+  // generated method, the physical scans per table, and whether the
+  // query left an entry in the session's CacheManager (the cache is
+  // cleared before each query, so an entry can only be its own).
+  private lazy val sweep: Seq[(String, Int, Map[String, Int], Boolean)] = {
     import org.apache.spark.sql.execution.debug._
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      spark.catalog.clearCache()
       val df = fn(spark, sf)
       df.collect() // materialize AQE stages so the final plan + codegen exist
       val stats = codegenStringSeq(df.queryExecution.executedPlan)
       val worst = if (stats.isEmpty) 0 else stats.map(_._3.maxMethodCodeSize).max
       val perTable = scans(df.queryExecution.executedPlan)
         .groupBy(identity).map { case (t, os) => t -> os.size }
-      (name, worst, perTable)
+      (name, worst, perTable, !spark.sharedState.cacheManager.isEmpty)
     }
+  }
+
+  test("no registered query leaves a cached relation behind") {
+    val leaks = sweep.collect { case (n, _, _, true) => n }
+    assert(leaks.isEmpty, leaks.mkString(
+      "queries whose cached relations outlive them (release them, or " +
+        "materialize with an eager localCheckpoint):\n", "\n", ""))
   }
 
   test("every registered query's generated methods stay JIT-compilable") {
@@ -166,14 +177,14 @@ class RegistrySweepSpec extends AnyFunSuite {
     // distinct-signature redesign left q_simhash_pairs' widest method
     // at ~550 — every query now clears the default buffer with margin.
     val offenders = sweep.collect {
-      case (n, w, _) if w >= 7000 => s"$n: $w bytecodes"
+      case (n, w, _, _) if w >= 7000 => s"$n: $w bytecodes"
     }
     assert(offenders.isEmpty,
       offenders.mkString("queries at/over the JIT cliff buffer:\n", "\n", ""))
   }
 
   test("no registered query physically reads a table ≥ 3 times") {
-    val over = sweep.flatMap { case (name, _, perTable) =>
+    val over = sweep.flatMap { case (name, _, perTable, _) =>
       perTable.collect { case (t, c)
         if c > allowedScans.get((name, t)).map(_._1).getOrElse(2) =>
         s"$name reads $t $c times"
@@ -184,7 +195,7 @@ class RegistrySweepSpec extends AnyFunSuite {
     // allowlist hygiene: entries must still describe the real plan.
     // Lower bound is soft (cap - 2): AQE reuse decisions can shave a
     // scan run-to-run; an entry two under its pin is genuinely stale.
-    val index = sweep.flatMap { case (n, _, pt) => pt.map { case (t, c) => (n, t) -> c } }.toMap
+    val index = sweep.flatMap { case (n, _, pt, _) => pt.map { case (t, c) => (n, t) -> c } }.toMap
     allowedScans.foreach { case ((n, t), (cap, _)) =>
       val actual = index.getOrElse((n, t), 0)
       assert(actual > cap - 2 && actual <= cap,

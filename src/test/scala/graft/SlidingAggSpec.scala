@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,6 +14,11 @@ class SlidingAggSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
   val WeekMicros = 7L * 86400 * 1000000
 
+  /** An operator's output columns are its input's plus `outputs`: no
+    * `__` temporary leaks to the caller. */
+  def assertColumns(out: DataFrame, in: DataFrame, outputs: String*): Unit =
+    assert(out.columns.sorted.toSeq == (in.columns ++ outputs).sorted.toSeq)
+
   test("paned prevValue equals the naive per-key value lag at several pane widths") {
     val ev = Tables.events(spark, sf)
       .select("user_id", "ts", "event_id", "event_type")
@@ -21,10 +27,11 @@ class SlidingAggSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[Long]("event_id") ->
         Option(r.getAs[String]("pv"))).toMap
     Seq(997L, 3600L * 1000000, 30L * 86400 * 1000000).foreach { pane =>
-      val paned = SlidingAgg.prevValue(ev, Seq("user_id"), col("ts"),
+      val out = SlidingAgg.prevValue(ev, Seq("user_id"), col("ts"),
         col("event_id"), col("event_type"), pane, "pv")
-        .collect().map(r => r.getAs[Long]("event_id") ->
-          Option(r.getAs[String]("pv"))).toMap
+      assertColumns(out, ev, "pv")
+      val paned = out.collect().map(r => r.getAs[Long]("event_id") ->
+        Option(r.getAs[String]("pv"))).toMap
       assert(paned == naive, s"pane $pane diverges")
     }
   }
@@ -38,10 +45,11 @@ class SlidingAggSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[Long]("event_id") ->
         Option(r.getAs[java.lang.Long]("nt")).map(_.longValue)).toMap
     Seq(997L, 3600L * 1000000, 30L * 86400 * 1000000).foreach { pane =>
-      val paned = SlidingAgg.nextTime(ev, Seq("user_id"), col("ts"),
+      val out = SlidingAgg.nextTime(ev, Seq("user_id"), col("ts"),
         col("event_id"), pane, "nt")
-        .collect().map(r => r.getAs[Long]("event_id") ->
-          Option(r.getAs[java.lang.Long]("nt")).map(_.longValue)).toMap
+      assertColumns(out, ev, "nt")
+      val paned = out.collect().map(r => r.getAs[Long]("event_id") ->
+        Option(r.getAs[java.lang.Long]("nt")).map(_.longValue)).toMap
       assert(paned == naive, s"pane $pane diverges")
     }
   }
@@ -176,9 +184,10 @@ class SlidingAggSpec extends AnyFunSuite {
         w.rowsBetween(Window.unboundedPreceding, 0)))
       .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(6)).toMap
     for (pane <- Seq(3600L * 1000000L, 86400L * 1000000L, WeekMicros)) {
-      val paned = SlidingAgg.sessionIds(ev, Seq("user_id"), col("ts"), col("event_id"),
+      val out = SlidingAgg.sessionIds(ev, Seq("user_id"), col("ts"), col("event_id"),
         gap, pane)
-        .select("user_id", "event_id", "session_id")
+      assertColumns(out, ev, "session_id")
+      val paned = out.select("user_id", "event_id", "session_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(paned == naive, s"session-id mismatch at pane=$pane")
     }
@@ -186,9 +195,10 @@ class SlidingAggSpec extends AnyFunSuite {
 
   test("paned running sum equals the naive prefix window within fp noise") {
     val ev = Tables.events(spark, sf).select("event_id", "user_id", "ts", "value")
-    val paned = SlidingAgg.runningSum(ev, Seq("user_id"), col("ts"), col("event_id"),
+    val out = SlidingAgg.runningSum(ev, Seq("user_id"), col("ts"), col("event_id"),
       col("value"), paneMicros = 86400L * 1000000L, out = "rv")
-      .select("event_id", "rv")
+    assertColumns(out, ev, "rv")
+    val paned = out.select("event_id", "rv")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
